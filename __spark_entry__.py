@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 All implementations live in ``columnar_estimator_sample_spark``; this
 module is the registry façade (the reference's dispatch-by-name layer,

@@ -2152,6 +2152,6 @@ def q_sequence_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         # REVERTED here — the result frame is a |types|^k-bounded
         # aggregate, so the sampler twin it suppressed was tiny, and
         # the added exchange measured net-negative (driver r14: 0.74x;
-        # re-A/B'd this round, see OPTIMIZATION_r15.md).
+        # confirmed by an r15 re-A/B).
         .orderBy("k", F.desc("supp"), "seq")
     )

@@ -228,9 +228,8 @@ def q_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # for the materialized cluster-membership table a production pipeline
 # writes once (same discipline as _ENTITY_MEMO / _IVF_MEMO; registered
 # with reset_handles() for invalidation/release). q_dedup_apply reads it
-# today; q_dedup_clusters / q_dedup_savings adopt it when they next
-# rotate through the driver window (changing their build path re-enters
-# them, and their r9 certifications are still fresh).
+# today; q_dedup_clusters / q_dedup_savings still build their own
+# LSH + CC pass.
 _NEARDUP_REMOVED_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
 
 

@@ -18,9 +18,12 @@ by modality:
     codecs genuinely absent here (color JPEG, video frames).
 
 Scale notes:
-  * binary payloads ride Arrow record batches — tune
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` down for megabyte
-    blobs so a batch stays within executor memory.
+  * binary payloads ride Arrow record batches, and Spark already caps
+    UDF input batches by size
+    (``spark.sql.execution.arrow.maxBytesPerBatch``, 64 MB by default):
+    one partition of 2000 rows of 100 KB blobs reaches ``mapInPandas``
+    as batches of 656, 656, 656 and 32 rows, so megabyte blobs need no
+    row cap and no session conf is changed here.
   * feature extraction is embarrassingly parallel (mapInPandas, no
     shuffle); downstream joins happen on the compact metadata/features,
     never on the blobs.
@@ -241,13 +244,10 @@ def decode_header(payload: bytes, media_type: str) -> dict:
             "duration_ms": dur}
 
 
-def extract_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads. The UDF
     consumes per-partition batch iterators (mapInPandas, SURVEY §2.6 D5:
     batching is the runtime's concern, surfaced only as batch shape)."""
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -359,7 +359,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: blobs never shuffle — they are consumed inside the scan-side
     mapInPandas task and only integer metadata reaches the aggregate;
-    batch size is capped so megabyte blobs can't blow an Arrow batch.
+    Arrow batches are size-capped by Spark (module scale notes).
     Deliberately NOT content-addressed (r9, measured): the header parse
     reads a few dozen bytes per blob — cheaper than the md5 + digest
     exchange map_distinct_blobs would spend to dedup it (sf10 probe:
@@ -367,7 +367,6 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline pays for FULL-decode kernels (q_media_pixel_stats,
     q_media_jpeg_roundtrip, the near-dup hashes), not for header
     sniffing."""
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
     media = documents_as_media_containers(
         table(spark, sf_dir, "documents"))
 
@@ -1812,9 +1811,7 @@ def _hamming_rep_pairs(grp: DataFrame) -> DataFrame:
     """(gid_a, gid_b) representative pairs within Hamming 1..{DHASH_HAM_T}
     over a (hi, lo, gid) distinct-hash frame — the banded candidate
     machinery of :func:`hamming_neardup_census` restated as a pair
-    emitter (the census adopts this helper when its queries next rotate
-    through the driver window; until then its internal twin stays
-    byte-identical to its certified code)."""
+    emitter (the census keeps its own internal twin of this banding)."""
     band_slices = [("lo", 0), ("lo", 16), ("hi", 0), ("hi", 16)]
     bands = F.array(*[
         F.struct(F.lit(b).alias("b"),

@@ -3,7 +3,7 @@
 The reference hand-tunes its pipeline with thread counts, prefetch and
 sloppiness knobs (/root/reference/trainer.py:189-246); on Spark all of that
 is runtime-level and comes from a handful of session configs. This module
-centralizes them so tests, bench and the driver entry all run the same way.
+centralizes them so tests, perfbench and the driver entry all run the same way.
 
 Scale notes (100 TB / 1000-executor design intent):
   * AQE on -> runtime coalescing, skew-join splitting, dynamic broadcast.
@@ -24,13 +24,23 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+# AQE's coalescer floors post-shuffle partitions at 1 MB by default; on
+# CPU-dense small-byte exchanges (candidate-pair verification: winnow /
+# prefix-filter / cosine set-join) that floor serializes multi-second
+# stages onto 1-4 cores. 64k keeps those spread across the executor (r14
+# interleaved A/B: -0.9 to -1.4 s each at sf0.1, neutral elsewhere).
+# Scale-safe: the floor only binds when partitions are sub-MB — at
+# production sizes coalescing targets advisoryPartitionSizeInBytes
+# regardless. ``registry`` re-asserts it before every un-pinned build.
+MIN_PARTITION_SIZE = "64k"
+
 # Per-process managed-table warehouse. ``spark.sql.warehouse.dir`` is a
 # static conf read once at JVM creation; defaulting it to the cwd's
 # ./spark-warehouse means an orphaned directory from a killed run makes
 # the next run's ``saveAsTable`` fail with LOCATION_ALREADY_EXISTS (the
 # fresh in-memory catalog has no table entry, so DROP TABLE IF EXISTS is
 # a no-op and cannot clear the stale location). A tmpdir per process
-# keeps every pytest/bench/driver run hermetic; override with
+# keeps every pytest/perfbench/driver run hermetic; override with
 # SPARK_GRAFT_WAREHOUSE for a durable warehouse.
 _WAREHOUSE_DIR: str | None = None
 
@@ -70,16 +80,8 @@ def get_spark(app_name: str = "columnar_estimator_sample_spark",
         .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE's coalescer floors post-shuffle partitions at 1 MB by
-        # default; on CPU-dense small-byte exchanges (candidate-pair
-        # verification: winnow / prefix-filter / cosine set-join) that
-        # floor serializes multi-second stages onto 1-4 cores. 64k keeps
-        # those spread across the executor (r14 interleaved A/B: -0.9 to
-        # -1.4 s each at sf0.1, neutral elsewhere). Scale-safe: the floor
-        # only binds when partitions are sub-MB — at production sizes
-        # coalescing targets advisoryPartitionSizeInBytes regardless.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+                MIN_PARTITION_SIZE)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.cbo.joinReorder.enabled", "true")

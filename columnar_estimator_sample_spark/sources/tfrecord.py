@@ -357,6 +357,17 @@ def _to_proto_scalar(v: object, dt: T.DataType) -> object:
     raise TypeError(f"unsupported tfrecord type {dt}")
 
 
+def _offset_files(offset: dict) -> set:
+    """Committed file set of a stream offset. The only offset form is
+    ``{"files": [...]}``; an offset read back from a checkpoint in any
+    other form is refused, never guessed at."""
+    if not isinstance(offset, dict) or "files" not in offset:
+        raise ValueError(
+            f"tfrecord stream offset must have the form "
+            f'{{"files": [<path>, ...]}}, got {offset!r}')
+    return set(offset["files"])
+
+
 class TFRecordStreamReader(SimpleDataSourceStreamReader):
     """Streaming twin of :class:`TFRecordReader`: replays a directory of
     tfrecord shards as micro-batches in sorted-filename order — the
@@ -395,14 +406,6 @@ class TFRecordStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"files": []}
 
-    def _seen(self, offset: dict) -> set:
-        """Committed file set from an offset; tolerates the legacy
-        ``{"files_seen": n}`` count form (pre-round-8 checkpoints) by
-        mapping it onto the current sorted listing's prefix."""
-        if "files" in offset:
-            return set(offset["files"])
-        return set(self._files()[:int(offset.get("files_seen", 0))])
-
     def _rows(self, files: list) -> list:
         # a LIST, not a generator: the simple-reader protocol pickles the
         # read result to cache it for executor replay
@@ -413,26 +416,14 @@ class TFRecordStreamReader(SimpleDataSourceStreamReader):
                 for ex in map(decode_example, read_tfrecords(path))]
 
     def read(self, start: dict):
-        seen = self._seen(start)
+        seen = _offset_files(start)
         new = sorted(p for p in self._files() if p not in seen)
         return self._rows(new), {"files": sorted(seen | set(new))}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        # For explicit-list offsets this is a pure function of the two
-        # offsets — no directory re-listing, so shards landing during
-        # replay cannot shift the batch contents. END may still be a
-        # legacy {"files_seen": n} count offset (a pre-round-8 checkpoint
-        # whose last committed batch predates the explicit-list format):
-        # resolve it through _seen the same way START is, instead of
-        # silently replaying zero files. That legacy path inherently
-        # re-lists (the count only means anything as a sorted-listing
-        # prefix), so its replay purity holds only while no new shard
-        # sorts before the recorded prefix — acceptable for a one-time
-        # checkpoint-format migration, and the first committed batch
-        # after it rewrites the offset in explicit-list form.
-        seen = self._seen(start)
-        return self._rows(sorted(p for p in self._seen(end)
-                                 if p not in seen))
+        # a pure function of the two offsets — no directory re-listing,
+        # so shards landing during replay cannot shift the batch contents
+        return self._rows(sorted(_offset_files(end) - _offset_files(start)))
 
 
 class TFRecordPartitionedStreamReader(DataSourceStreamReader):
@@ -466,17 +457,8 @@ class TFRecordPartitionedStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         return {"files": self._files()}
 
-    def _seen(self, offset: dict) -> set:
-        """Committed file set; tolerates legacy count-form offsets."""
-        if "files" in offset:
-            return set(offset["files"])
-        return set(self._files()[:int(offset.get("files_seen", 0))])
-
     def partitions(self, start: dict, end: dict):
-        seen = self._seen(start)
-        end_files = (end["files"] if "files" in end
-                     else self._files()[:int(end.get("files_seen", 0))])
-        new = sorted(p for p in end_files if p not in seen)
+        new = sorted(_offset_files(end) - _offset_files(start))
         # an empty batch still needs >=1 partition in the v2 protocol
         return [_FilePartition(p) for p in new] or [_FilePartition("")]
 

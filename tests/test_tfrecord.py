@@ -136,15 +136,12 @@ class TestDataSource:
 class TestTFRecordStreamSource:
     import pytest as _pytest
 
-    @_pytest.mark.parametrize("cls_name", ["TFRecordStreamReader",
-                                           "TFRecordPartitionedStreamReader"])
-    def test_legacy_count_offsets_replay(self, tmp_path, cls_name):
-        """A committed range whose offsets are BOTH in the pre-round-8
-        {"files_seen": n} count form must replay the same shards after a
-        restart — both stream readers resolve legacy START and END
-        offsets against the sorted listing prefix (round-9 advice fix:
-        the simple reader's readBetweenOffsets returned zero rows for a
-        legacy END, silent data loss on old checkpoints)."""
+    @_pytest.mark.parametrize("reader", ["partitioned", "simple"])
+    def test_count_offsets_rejected(self, tmp_path, reader):
+        """Offsets are explicit seen-file lists, {"files": [...]}. An
+        offset in the old {"files_seen": n} count form can only come from
+        a checkpoint on disk; both readers refuse it with a ValueError
+        that names the expected form instead of replaying a guess."""
         import os
 
         from pyspark.sql.types import LongType, StructField, StructType
@@ -153,19 +150,23 @@ class TestTFRecordStreamSource:
 
         d = str(tmp_path / "shards")
         os.makedirs(d)
-        for i in range(3):
-            write_tfrecords(os.path.join(d, f"part-{i:05d}.tfrecord"),
-                            iter([encode_example({"a": i})]), None)
+        write_tfrecords(os.path.join(d, "part-00000.tfrecord"),
+                        iter([encode_example({"a": 0})]), None)
         schema = StructType([StructField("a", LongType())])
-        reader = getattr(tfr, cls_name)(schema, {"path": d})
-        start, end = {"files_seen": 1}, {"files_seen": 3}
-        if cls_name == "TFRecordStreamReader":
-            rows = reader.readBetweenOffsets(start, end)
-            assert sorted(r[0] for r in rows) == [1, 2]
+        listed = {"files": [os.path.join(d, "part-00000.tfrecord")]}
+        count = {"files_seen": 1}
+        if reader == "simple":
+            r = tfr.TFRecordStreamReader(schema, {"path": d})
+            calls = [lambda: r.read(count),
+                     lambda: r.readBetweenOffsets(count, listed),
+                     lambda: r.readBetweenOffsets({"files": []}, count)]
         else:
-            parts = reader.partitions(start, end)
-            vals = sorted(r[0] for p in parts for r in reader.read(p))
-            assert vals == [1, 2]
+            r = tfr.TFRecordPartitionedStreamReader(schema, {"path": d})
+            calls = [lambda: r.partitions(count, listed),
+                     lambda: r.partitions({"files": []}, count)]
+        for call in calls:
+            with pytest.raises(ValueError, match='"files"'):
+                call()
 
     @_pytest.mark.parametrize("reader", ["partitioned", "simple"])
     def test_incremental_shards_across_restart(self, spark, sf_dir,

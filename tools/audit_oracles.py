@@ -21,8 +21,8 @@ negatives across all 157 driver-checked queries (the old regex I1 both
 missed 3 of the 5 actual reds — window-SUMs flowing through CTEs — and
 false-positived on driver-green queries whose sums were cast upstream).
 
-Empirical equivalence (probed against the union of driver-green rows in
-CORRECTNESS_r01..r04): the driver tolerates integer-width skew (DuckDB
+Empirical equivalence (probed against the union of driver-green rows of
+rounds 1-4): the driver tolerates integer-width skew (DuckDB
 BIGINT vs Spark int is green 18 times) but not int128. So the allowlist
 is family-level: {TINYINT..BIGINT, DOUBLE/FLOAT, VARCHAR, DATE,
 TIMESTAMP*, BOOLEAN, INTERVAL-free}; HUGEINT/UHUGEINT/DECIMAL/BLOB/

@@ -59,7 +59,7 @@ def run_duckdb(sql: str, sf_dir: str) -> tuple[pd.DataFrame, dict[str, str]]:
 
 
 # Type families the driver's typed hash treats as equal (probed against
-# the union of driver-green rows in CORRECTNESS_r01..r04: BIGINT<->int is
+# the union of driver-green rows of rounds 1-4: BIGINT<->int is
 # green 18 times, so integer WIDTH doesn't matter — but HUGEINT is
 # hash-red every time, so family membership does).
 _DUCK_FAMILY = {
