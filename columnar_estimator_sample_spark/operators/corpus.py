@@ -32,7 +32,7 @@ from columnar_estimator_sample_spark.operators.textstats import (
     _DOC_LM_SQL,
 )
 from columnar_estimator_sample_spark.sources.tables import (
-    register_memo, table,
+    memo, table,
 )
 
 # Context-window size (tokens) for sequence packing.
@@ -2006,10 +2006,6 @@ def _dsir_bigram_feats(docs: DataFrame) -> DataFrame:
                     (h64(F.col("w")) % DSIR_B).alias("b")))
 
 
-# (applicationId, sf_dir) -> landed DSIR-mix table name (write-once per
-# session — the q_corpus_export discipline for the SELECTED mix).
-_DSIR_EXPORT_MEMO: dict = register_memo({})
-
 DSIR_EXPORT_BUCKETS = 16
 
 
@@ -2022,28 +2018,23 @@ def dsir_export_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (pack assignments, labels) joins exchange-free. At 100 TB the
     selection is TakeOrderedAndProject (per-partition partial top-k of
     a corpus-sized scored frame — K rows ever cross the final exchange)
-    and the landing write is K-row, not corpus-sized."""
-    import hashlib
+    and the landing write is K-row, not corpus-sized. The landed table
+    name is memoized per (session, sf_dir) — the q_corpus_export
+    write-once discipline for the SELECTED mix."""
     import os
-    import re
     import tempfile
 
     from columnar_estimator_sample_spark.operators.partitioning import (
         bucketed_ctas,
     )
     from columnar_estimator_sample_spark.sources.tables import (
-        register_tempdir,
+        register_tempdir, table_tag,
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    name = _DSIR_EXPORT_MEMO.get(key)
-    if name is None:
+
+    def build() -> str:
         docs = table(spark, sf_dir, "documents")
         sel = _dsir_selected(spark, sf_dir, _dsir_bigram_feats(docs))
-        tag = re.sub(r"[^0-9A-Za-z]+", "_",
-                     os.path.basename(sf_dir.rstrip("/")) + "_"
-                     + hashlib.md5(sf_dir.encode()).hexdigest()[:8] + "_"
-                     + spark.sparkContext.applicationId)
-        name = f"dsir_export_{tag}"
+        name = f"dsir_export_{table_tag(spark, sf_dir)}"
         base = register_tempdir(
             tempfile.mkdtemp(prefix="spark-graft-dsir-"))
         bucketed_ctas(
@@ -2052,8 +2043,8 @@ def dsir_export_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lang", "score_ppm", "n_chars"),
             "doc_id", n_buckets=DSIR_EXPORT_BUCKETS,
             path=os.path.join(base, "mix"), partition_by="lang")
-        _DSIR_EXPORT_MEMO[key] = name
-    return spark.table(name)
+        return name
+    return spark.table(memo(spark, ("dsir_export", sf_dir), build))
 
 
 def _dsir_export_oracle() -> str:

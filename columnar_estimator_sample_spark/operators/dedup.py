@@ -24,7 +24,7 @@ from columnar_estimator_sample_spark.functions.hashing import (
     MERSENNE_P, h64, minhash_params, sql_h64,
 )
 from columnar_estimator_sample_spark.registry import register
-from columnar_estimator_sample_spark.sources.tables import register_memo, table
+from columnar_estimator_sample_spark.sources.tables import memo, table
 
 SHINGLE_K = 8          # character shingle width
 MINHASH_K = 32         # signature length
@@ -33,31 +33,21 @@ LSH_ROWS = MINHASH_K // LSH_BANDS
 JACCARD_T = 0.12       # near-dup verification threshold
 
 
-# (applicationId, sf_dir) -> (n_docs, n_distinct_texts). The 2-scalar
-# digest census probe (one map-side-combinable aggregate over md5(text);
-# never shuffles text) gates the exact-dup contraction in
-# q_dedup_minhash_lsh and scales the winnow boilerplate cap — memoized
-# so a session pays the probe once per corpus.
-_DIGEST_CENSUS_MEMO: dict[tuple[str, str], tuple[int, int]] = \
-    register_memo({})
-
-
 def digest_census(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     """(n_docs, n_distinct_texts) for ``sf_dir``'s documents table —
     the corpus duplication census. One aggregate over 16-byte digests
-    returning two scalars (COLLECT_ALLOWED / BUILD_RUNS_JOBS class);
-    memoized per (session, corpus)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _DIGEST_CENSUS_MEMO.get(key)
-    if memo is None:
+    returning two scalars (COLLECT_ALLOWED / BUILD_RUNS_JOBS class;
+    never shuffles text). It gates the exact-dup contraction in
+    q_dedup_minhash_lsh and scales the winnow boilerplate cap —
+    memoized so a session pays the probe once per corpus."""
+    def build() -> tuple[int, int]:
         row = (table(spark, sf_dir, "documents")
                .select(F.md5("text").alias("fp"))
                .agg(F.count(F.lit(1)).alias("n"),
                     F.count_distinct("fp").alias("d"))
                .first())
-        memo = (row.n, row.d)
-        _DIGEST_CENSUS_MEMO[key] = memo
-    return memo
+        return (row.n, row.d)
+    return memo(spark, ("digest_census", sf_dir), build)
 
 
 def duplication_estimate(spark: SparkSession, sf_dir: str) -> int:
@@ -1241,20 +1231,8 @@ def _verified_pairs(docs: DataFrame, t_millis: int,
         verify_f(F.col("inter_size"), F.col("na"), F.col("nb")))
 
 
-# (applicationId, sf_dir) -> (members, rep tokens checkpoint, rep
-# sizes) shared by the jaccard and cosine set-join queries: the
-# contraction window + explode/md5 token pass is identical for both
-# measures, so the second tier to run in a session reuses the
-# materialized frames (same per-session memo pattern as
-# similarity._IVF_MEMO / entity._ENTITY_MEMO). Keyed only when the
-# registered queries pass their (appId, sf_dir) key — helper calls on
-# constructed frames (property tests) never touch it.
-_SETJOIN_MEMO: dict[tuple[str, str], tuple] = register_memo({})
-
-
 def _contracted_setjoin(docs: DataFrame, t_millis: int,
-                        measure: str,
-                        memo_key: tuple[str, str] | None = None
+                        measure: str, sf_dir: str | None = None
                         ) -> DataFrame:
     """(doc_a, doc_b, na, nb, inter_size) for all measure>=t pairs.
 
@@ -1273,9 +1251,15 @@ def _contracted_setjoin(docs: DataFrame, t_millis: int,
     (:func:`contract_exact_dups` / :func:`expand_member_pairs`):
     within-group pairs are emitted as representative SELF-pairs carrying
     na = nb = inter = |rep tokens| and expanded to C(|g|, 2) member
-    pairs exactly like cross pairs."""
-    memo = _SETJOIN_MEMO.get(memo_key) if memo_key else None
-    if memo is None:
+    pairs exactly like cross pairs.
+
+    The registered queries pass their ``sf_dir``: the contraction frames
+    are then memoized per (session, sf_dir) and shared by the jaccard
+    and cosine tiers — the contraction window + explode/md5 token pass
+    is identical for both measures, so the second tier to run in a
+    session reuses the materialized frames. Helper calls on constructed
+    frames (property tests) never touch the store."""
+    def build() -> tuple:
         members, reps = contract_exact_dups(docs, "doc_id", "text")
         # (no fanout here: reps exits the contraction WINDOW already at
         # shuffle-partition width, unlike minhash's uncontracted branch)
@@ -1288,10 +1272,10 @@ def _contracted_setjoin(docs: DataFrame, t_millis: int,
         rep_toks = _ssjoin_tokens(reps).localCheckpoint(eager=False)
         rep_sizes = rep_toks.groupBy("doc_id").agg(
             F.count("*").alias("n"))
-        if memo_key:
-            _SETJOIN_MEMO[memo_key] = (members, reps, rep_toks, rep_sizes)
-    else:
-        members, reps, rep_toks, rep_sizes = memo
+        return (members, reps, rep_toks, rep_sizes)
+    members, reps, rep_toks, rep_sizes = (
+        memo(docs.sparkSession, ("setjoin", sf_dir), build)
+        if sf_dir else build())
 
     rep_pairs = _verified_pairs(reps, t_millis, measure, toks=rep_toks)
     self_pairs = (members.filter((F.col("doc_id") == F.col("gid"))
@@ -1308,13 +1292,13 @@ def _contracted_setjoin(docs: DataFrame, t_millis: int,
 
 def prefix_filter_pairs(docs: DataFrame,
                         t_millis: int = SSJOIN_T_MILLIS,
-                        memo_key: tuple[str, str] | None = None
+                        sf_dir: str | None = None
                         ) -> DataFrame:
     """All pairs of ``docs(doc_id, text)`` with word-3-gram Jaccard >= t
     (contraction + filters + verification: :func:`_contracted_setjoin`)."""
     u = F.col("na") + F.col("nb") - F.col("inter_size")
     return _contracted_setjoin(docs, t_millis, "jaccard",
-                               memo_key=memo_key).select(
+                               sf_dir=sf_dir).select(
         "doc_a", "doc_b",
         F.col("inter_size").cast("long").alias("inter_size"),
         u.cast("long").alias("union_size"),
@@ -1324,14 +1308,14 @@ def prefix_filter_pairs(docs: DataFrame,
 
 def cosine_setjoin_pairs(docs: DataFrame,
                          t_millis: int = SSJOIN_COS_T_MILLIS,
-                         memo_key: tuple[str, str] | None = None
+                         sf_dir: str | None = None
                          ) -> DataFrame:
     """All pairs of ``docs(doc_id, text)`` with word-3-gram binary-cosine
     i/√(na·nb) >= t. Reported as exact integer cos²·1e6 (ppm) — the
     same fixed-point convention as q_item_cf — so no engine ever takes a
     square root."""
     return _contracted_setjoin(docs, t_millis, "cosine",
-                               memo_key=memo_key).select(
+                               sf_dir=sf_dir).select(
         "doc_a", "doc_b",
         F.col("inter_size").cast("long").alias("inter_size"),
         F.expr("(1000000 * inter_size * inter_size) DIV (na * nb)")
@@ -1385,9 +1369,8 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle does the exhaustive join, so the driver's hash match certifies
     the pruning is complete, not just fast."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    key = (spark.sparkContext.applicationId, sf_dir)
     # r14: pre-sort hash exchange — see q_dedup_minhash_lsh's tail note
-    return (prefix_filter_pairs(docs, memo_key=key)
+    return (prefix_filter_pairs(docs, sf_dir=sf_dir)
             .repartition(F.col("doc_a"), F.col("doc_b"))
             .orderBy("doc_a", "doc_b"))
 
@@ -1440,9 +1423,8 @@ def q_dedup_cosine_setjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     score reported as exact integer cos²·1e6, float-free in both
     engines."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    key = (spark.sparkContext.applicationId, sf_dir)
     # r14: pre-sort hash exchange — see q_dedup_minhash_lsh's tail note
-    return (cosine_setjoin_pairs(docs, memo_key=key)
+    return (cosine_setjoin_pairs(docs, sf_dir=sf_dir)
             .repartition(F.col("doc_a"), F.col("doc_b"))
             .orderBy("doc_a", "doc_b"))
 
@@ -1677,30 +1659,20 @@ def q_dedup_exactsubstr(spark: SparkSession, sf_dir: str) -> DataFrame:
         None, anchors=exactsubstr_anchors_table(spark, sf_dir))
 
 
-# (applicationId, sf_dir) -> localCheckpointed anchor frame over the
-# documents table. The anchor build (window explode + h64 + spread
-# filter) is the shared linear term of the four ExactSubstr queries
-# (pair census, savings, apply, keepfirst); one session pays it once —
-# the stand-in for the written anchor-index table (same discipline as
-# the other per-session memos; registered with reset_handles()).
-_EXACTSUBSTR_ANCHORS_MEMO: dict[tuple[str, str], DataFrame] = \
-    register_memo({})
-
-
 def exactsubstr_anchors_table(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Spread-surviving anchor windows (doc_id, p, h) over the
     ``documents`` table, checkpointed and memoized per (session,
-    sf_dir) — see ``_EXACTSUBSTR_ANCHORS_MEMO``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    anchors = _EXACTSUBSTR_ANCHORS_MEMO.get(key)
-    if anchors is None:
+    sf_dir): the anchor build (window explode + h64 + spread filter) is
+    the shared linear term of the four ExactSubstr queries (pair census,
+    savings, apply, keepfirst); one session pays it once — the stand-in
+    for the written anchor-index table."""
+    def build() -> DataFrame:
         from columnar_estimator_sample_spark.sources.tables import fanout
         docs = fanout(table(spark, sf_dir, "documents")
                       .select("doc_id", "text"))
-        anchors = _exactsubstr_anchors(docs).localCheckpoint(eager=False)
-        _EXACTSUBSTR_ANCHORS_MEMO[key] = anchors
-    return anchors
+        return _exactsubstr_anchors(docs).localCheckpoint(eager=False)
+    return memo(spark, ("exactsubstr_anchors", sf_dir), build)
 
 
 def _exactsubstr_anchors(docs: DataFrame) -> DataFrame:

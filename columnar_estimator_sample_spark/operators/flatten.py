@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnar_estimator_sample_spark.registry import register
-from columnar_estimator_sample_spark.sources.tables import table
+from columnar_estimator_sample_spark.sources.tables import memo, table
 
 # Checked-in NDJSON fixture shaped exactly like the reference's Chrome-trace
 # documents (README.md:70-103): {"traceEvents": [{ph,cat,name,pid,tid,ts,
@@ -35,25 +35,17 @@ TRACE_FIXTURE = os.path.join(os.path.dirname(os.path.dirname(
     "trace_events.ndjson")
 
 
-# (applicationId, path) -> raw trace handle: JSON schema inference runs
-# a driver job per read; the fixture is immutable, so share the handle
-# (same discipline as sources.tables._HANDLES).
-_TRACE_HANDLES: dict[tuple[str, str], DataFrame] = {}
-
-
 def flatten_trace(spark: SparkSession,
                   path: str = TRACE_FIXTURE) -> DataFrame:
     """NDJSON trace docs -> one row per trace event, with ordinal.
 
     Mirrors notebook cell 7 / README.md:179-193: lateral flatten with
     offset + nested projection/rename. Schema is inferred
-    (autodetect=True analogue, README.md:151-153) — once per session.
+    (autodetect=True analogue, README.md:151-153) — once per session:
+    schema inference runs a driver job per read and the trace file is
+    immutable (the table-handle contract), so the raw handle is shared.
     """
-    key = (spark.sparkContext.applicationId, path)
-    raw = _TRACE_HANDLES.get(key)
-    if raw is None:
-        raw = spark.read.json(path)
-        _TRACE_HANDLES[key] = raw
+    raw = memo(spark, ("trace", path), lambda: spark.read.json(path))
     ev = raw.select(F.posexplode("traceEvents").alias("index", "e"))
     return ev.select(
         "index",

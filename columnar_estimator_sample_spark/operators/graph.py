@@ -35,7 +35,7 @@ from columnar_estimator_sample_spark.operators.dedup import (
 )
 from columnar_estimator_sample_spark.registry import register
 from columnar_estimator_sample_spark.sources.tables import (
-    register_memo,
+    memo,
     table,
 )
 
@@ -221,31 +221,22 @@ def q_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> localCheckpointed (doc_id) frame of near-dup
-# cluster NON-survivors (CC over the verified MinHash-LSH pairs, label =
-# min doc_id). The LSH + iterative-CC build is the expensive shared term
-# of the cluster-consuming queries; the memo is the per-session stand-in
-# for the materialized cluster-membership table a production pipeline
-# writes once (same discipline as _ENTITY_MEMO / _IVF_MEMO; registered
-# with reset_handles() for invalidation/release). q_dedup_apply reads it
-# today; q_dedup_clusters / q_dedup_savings still build their own
-# LSH + CC pass.
-_NEARDUP_REMOVED_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def neardup_removed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id) frame of near-dup cluster non-survivors, checkpointed
-    and memoized per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    removed = _NEARDUP_REMOVED_MEMO.get(key)
-    if removed is None:
+    """(doc_id) frame of near-dup cluster non-survivors (CC over the
+    verified MinHash-LSH pairs, label = min doc_id), checkpointed and
+    memoized per (session, sf_dir). The LSH + iterative-CC build is the
+    expensive shared term of the cluster-consuming queries; the memo is
+    the per-session stand-in for the materialized cluster-membership
+    table a production pipeline writes once. q_dedup_apply reads it
+    today; q_dedup_clusters / q_dedup_savings still build their own
+    LSH + CC pass."""
+    def build() -> DataFrame:
         pairs = q_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-        removed = (connected_components(pairs)
-                   .filter(F.col("doc_id") != F.col("cluster_id"))
-                   .select("doc_id")
-                   .localCheckpoint(eager=False))
-        _NEARDUP_REMOVED_MEMO[key] = removed
-    return removed
+        return (connected_components(pairs)
+                .filter(F.col("doc_id") != F.col("cluster_id"))
+                .select("doc_id")
+                .localCheckpoint(eager=False))
+    return memo(spark, ("neardup_removed", sf_dir), build)
 
 
 def _dedup_apply_oracle() -> str:

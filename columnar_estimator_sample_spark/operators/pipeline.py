@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 from columnar_estimator_sample_spark.operators.textstats import STOPWORDS
 from columnar_estimator_sample_spark.registry import register
 from columnar_estimator_sample_spark.sources.tables import (
-    register_memo,
+    memo,
     table,
 )
 
@@ -166,14 +166,6 @@ def q_corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Corpus export: the dedup pipeline's MATERIALIZATION step
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) -> landed TABLE NAME. The export writes ONCE
-# per session (the corpus is deterministic), the census query reads the
-# LANDED table — write-once / read-many, the same contract as the other
-# per-session memos (registered with reset_handles()). Landed as a
-# bucketed CTAS (lang-partitioned, doc_id-bucketed) so downstream joins
-# against the cleaned corpus are exchange-free — see q_corpus_export.
-_EXPORT_MEMO: dict[tuple[str, str], str] = register_memo({})
-
 # doc_id bucket count of the landed corpus. 16 suffices at test SFs; at
 # 100 TB size it so a bucket's files land near the target file size
 # (buckets ~ corpus_bytes / 1 GB), same sizing rule as any bucketed fact
@@ -188,9 +180,11 @@ def corpus_export_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream join against any equally-bucketed side (labels, scores,
     pack assignments) plans with NO exchange (plan-asserted in
     tests/test_insights.py). This is the bucket/sort spec the export
-    sink promises for 100 TB downstream co-location."""
-    import hashlib
-    import re
+    sink promises for 100 TB downstream co-location.
+
+    The landed table name is memoized per (session, sf_dir): the export
+    writes ONCE per session (the corpus is deterministic) and the census
+    query reads the LANDED table — write-once / read-many."""
     import tempfile
 
     from columnar_estimator_sample_spark.operators.dedup import (
@@ -203,23 +197,17 @@ def corpus_export_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_ctas,
     )
     from columnar_estimator_sample_spark.sources.tables import (
-        fanout, register_tempdir,
+        fanout, register_tempdir, table_tag,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    name = _EXPORT_MEMO.get(key)
-    if name is None:
+    def build() -> str:
         docs = table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "text")
         kept = fanout(docs.join(neardup_removed(spark, sf_dir),
                                 "doc_id", "left_anti"))
         cleaned = exactsubstr_apply(
             kept, spans=exactsubstr_keepfirst_spans(kept))
-        tag = re.sub(r"[^0-9A-Za-z]+", "_",
-                     os.path.basename(sf_dir.rstrip("/")) + "_"
-                     + hashlib.md5(sf_dir.encode()).hexdigest()[:8] + "_"
-                     + spark.sparkContext.applicationId)
-        name = f"corpus_export_{tag}"
+        name = f"corpus_export_{table_tag(spark, sf_dir)}"
         base = register_tempdir(
             tempfile.mkdtemp(prefix="spark-graft-export-"))
         bucketed_ctas(
@@ -228,8 +216,8 @@ def corpus_export_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lang", "clean_text"),
             "doc_id", n_buckets=EXPORT_BUCKETS,
             path=os.path.join(base, "corpus"), partition_by="lang")
-        _EXPORT_MEMO[key] = name
-    return spark.table(name)
+        return name
+    return spark.table(memo(spark, ("corpus_export", sf_dir), build))
 
 
 def _corpus_export_oracle() -> str:

@@ -19,7 +19,7 @@ from columnar_estimator_sample_spark.functions.exact import davg, sql_davg
 from columnar_estimator_sample_spark.functions.hashing import sql_h64
 from columnar_estimator_sample_spark.registry import register
 from columnar_estimator_sample_spark.sources.tables import (
-    register_memo,
+    memo,
     table,
 )
 
@@ -801,23 +801,6 @@ def q_doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(LM_SCORE_BOTTOM))
 
 
-# (applicationId, sf_dir) -> localCheckpointed doc_lm_scores frame. The
-# per-doc bigram census + corpus-LM join is the shared linear term of
-# q_doc_lm_score, q_ccnet_tiers and q_token_budget_pack; one session
-# builds it once — the stand-in for the written quality-scores table a
-# CCNet-style pipeline materializes before any selection runs (same
-# discipline as _IVF_MEMO / _ENTITY_MEMO; registered with
-# reset_handles() for invalidation/release).
-_LM_SCORES_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-
-# (applicationId, sf_dir) -> checkpointed corpus bigram LM (w1, w2,
-# p_permille) — the MODEL half of doc_lm_scores, exposed separately so
-# the streaming quality cascade can score arriving documents against
-# the same (static, broadcastable, vocab^2-bounded) model the batch
-# cascade scores against.
-_LM_MODEL_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
 def doc_bigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, w1, w2, k): each document's bigram census — the
     shared first stage of LM training and LM scoring. Works on a batch
@@ -843,22 +826,21 @@ def bigram_lm_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, p_permille): the corpus-trained bigram transition model
     — vocab^2-bounded, checkpointed and memoized per (session, sf_dir).
     The written-model stand-in: at 100 TB this is trained offline and
-    broadcast into every scoring join (batch or streaming)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _LM_MODEL_MEMO.get(key)
-    if memo is not None:
-        return memo
-    from pyspark.sql import Window as W
-    corpus = (doc_bigrams(table(spark, sf_dir, "documents"))
-              .groupBy("w1", "w2")
-              .agg(F.sum("k").cast("long").alias("c12")))
-    p = (corpus
-         .withColumn("c1", F.sum("c12").over(W.partitionBy("w1")))
-         .select("w1", "w2",
-                 F.expr("(1000 * c12) DIV c1").alias("p_permille"))
-         .localCheckpoint(eager=False))
-    _LM_MODEL_MEMO[key] = p
-    return p
+    broadcast into every scoring join (batch or streaming). Exposed
+    apart from :func:`doc_lm_scores` so the streaming quality cascade
+    scores arriving documents against the same (static, broadcastable,
+    vocab^2-bounded) model the batch cascade scores against."""
+    def build() -> DataFrame:
+        from pyspark.sql import Window as W
+        corpus = (doc_bigrams(table(spark, sf_dir, "documents"))
+                  .groupBy("w1", "w2")
+                  .agg(F.sum("k").cast("long").alias("c12")))
+        return (corpus
+                .withColumn("c1", F.sum("c12").over(W.partitionBy("w1")))
+                .select("w1", "w2",
+                        F.expr("(1000 * c12) DIV c1").alias("p_permille"))
+                .localCheckpoint(eager=False))
+    return memo(spark, ("lm_model", sf_dir), build)
 
 
 def lm_score_frame(docs: DataFrame, model: DataFrame) -> DataFrame:
@@ -881,18 +863,17 @@ def doc_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     permille — the scoring frame behind q_doc_lm_score (bottom-k
     report), q_ccnet_tiers (per-language tier census) and
     q_token_budget_pack (budget selection); checkpointed and memoized
-    per (session, sf_dir), see ``_LM_SCORES_MEMO``. Composition of
-    :func:`bigram_lm_model` (train) and :func:`lm_score_frame` (score)
-    — result-identical to the pre-split inline form."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _LM_SCORES_MEMO.get(key)
-    if memo is not None:
-        return memo
-    scores = (lm_score_frame(table(spark, sf_dir, "documents"),
-                             bigram_lm_model(spark, sf_dir))
-              .localCheckpoint(eager=False))
-    _LM_SCORES_MEMO[key] = scores
-    return scores
+    per (session, sf_dir): the per-doc bigram census + corpus-LM join
+    is the shared linear term of those three queries, so one session
+    builds it once — the stand-in for the written quality-scores table
+    a CCNet-style pipeline materializes before any selection runs.
+    Composition of :func:`bigram_lm_model` (train) and
+    :func:`lm_score_frame` (score) — result-identical to the pre-split
+    inline form."""
+    return memo(spark, ("lm_scores", sf_dir), lambda: (
+        lm_score_frame(table(spark, sf_dir, "documents"),
+                       bigram_lm_model(spark, sf_dir))
+        .localCheckpoint(eager=False)))
 
 
 def ntile3_by_score(pool: DataFrame, n_parts: int = 32) -> DataFrame:

@@ -45,7 +45,7 @@ from columnar_estimator_sample_spark.operators.similarity import (
     _exploded)
 from columnar_estimator_sample_spark.registry import register
 from columnar_estimator_sample_spark.sources.tables import (
-    register_memo, table,
+    memo, table,
 )
 
 K = 8  # coarse cells, matching similarity.IVF_NLIST's scale
@@ -870,17 +870,6 @@ _vq_registry._ORACLES["q_semdedup_apply"] = _semdedup_apply_oracle()
 # ---------------------------------------------------------------------------
 
 
-# (applicationId, sf_dir) -> checkpointed recall-truth frame; and
-# (applicationId, sf_dir, kind) -> checkpointed PQ code table. Both are
-# per-session INDEX/AUDIT artifacts (at 100 TB: the stored code lists
-# and the written ground-truth table) — before r12 every PQ census pass
-# recomputed the corpus-wide code-assignment window and the
-# O(N · dim · |Q|) exact lane, which dominated the family's 100x
-# numbers after the probe itself went list-local.
-_EXACT_HITS_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-_PQ_CODES_MEMO: dict[tuple[str, str, str], DataFrame] = register_memo({})
-
-
 def _exact_topk_hits(spark: SparkSession, sf_dir: str,
                      ex: DataFrame, norms: DataFrame) -> DataFrame:
     """Brute-force exact-cosine top-{TOP_K} per query vector, as a
@@ -889,38 +878,41 @@ def _exact_topk_hits(spark: SparkSession, sf_dir: str,
     against the corpus: O(N · dim · |Q|) map-side rows, no shuffled
     self-join; a fixed audit cost that certifies ADC quality in the same
     driver-hashed row as the ranking itself. Checkpointed + memoized
-    per (session, sf_dir) — the truth table is written once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _EXACT_HITS_MEMO.get(key)
-    if memo is not None:
-        return memo
-    qv = (ex.filter(F.col("vec_id") < N_QUERIES)
-          .select(F.col("vec_id").alias("query_id"), "i",
-                  F.col("vi").alias("qv")))
-    edots = (ex.select(F.col("vec_id").alias("neighbor_id"), "i",
-                       F.col("vi").alias("dv"))
-             .join(F.broadcast(qv), "i")
-             .filter(F.col("neighbor_id") != F.col("query_id"))
-             .groupBy("query_id", "neighbor_id")
-             .agg(F.sum(F.col("qv") * F.col("dv")).alias("dot_s")))
-    nq = norms.select(F.col("vec_id").alias("query_id"),
-                      F.col("n_s").alias("nq_s"))
-    nd = norms.select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("n_s").alias("nd_s"))
-    w_e = Window.partitionBy("query_id").orderBy(
-        (F.col("dot_s").cast("double")
-         / (F.sqrt(F.col("nq_s").cast("double"))
-            * F.sqrt(F.col("nd_s").cast("double")))).desc(),
-        F.asc("neighbor_id"))
-    hits = (edots.join(F.broadcast(nq), "query_id")
-            .join(F.broadcast(nd), "neighbor_id")
-            .withColumn("erank", F.row_number().over(w_e))
-            .filter(F.col("erank") <= TOP_K)
-            .select("query_id", "neighbor_id",
-                    F.lit(1).cast("long").alias("hit"))
-            .localCheckpoint(eager=False))
-    _EXACT_HITS_MEMO[key] = hits
-    return hits
+    per (session, sf_dir) — the truth table is written once.
+
+    The recall-truth frame and the PQ code tables are per-session
+    INDEX/AUDIT artifacts (at 100 TB: the written ground-truth table and
+    the stored code lists) — before r12 every PQ census pass recomputed
+    the corpus-wide code-assignment window and the O(N · dim · |Q|)
+    exact lane, which dominated the family's 100x numbers after the
+    probe itself went list-local."""
+    def build() -> DataFrame:
+        qv = (ex.filter(F.col("vec_id") < N_QUERIES)
+              .select(F.col("vec_id").alias("query_id"), "i",
+                      F.col("vi").alias("qv")))
+        edots = (ex.select(F.col("vec_id").alias("neighbor_id"), "i",
+                           F.col("vi").alias("dv"))
+                 .join(F.broadcast(qv), "i")
+                 .filter(F.col("neighbor_id") != F.col("query_id"))
+                 .groupBy("query_id", "neighbor_id")
+                 .agg(F.sum(F.col("qv") * F.col("dv")).alias("dot_s")))
+        nq = norms.select(F.col("vec_id").alias("query_id"),
+                          F.col("n_s").alias("nq_s"))
+        nd = norms.select(F.col("vec_id").alias("neighbor_id"),
+                          F.col("n_s").alias("nd_s"))
+        w_e = Window.partitionBy("query_id").orderBy(
+            (F.col("dot_s").cast("double")
+             / (F.sqrt(F.col("nq_s").cast("double"))
+                * F.sqrt(F.col("nd_s").cast("double")))).desc(),
+            F.asc("neighbor_id"))
+        return (edots.join(F.broadcast(nq), "query_id")
+                .join(F.broadcast(nd), "neighbor_id")
+                .withColumn("erank", F.row_number().over(w_e))
+                .filter(F.col("erank") <= TOP_K)
+                .select("query_id", "neighbor_id",
+                        F.lit(1).cast("long").alias("hit"))
+                .localCheckpoint(eager=False))
+    return memo(spark, ("exact_hits", sf_dir), build)
 
 
 @register(
@@ -1066,9 +1058,7 @@ def q_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col("vi").alias("cj")))
     d2 = F.sum((F.col("vi") - F.col("cj"))
                * (F.col("vi") - F.col("cj"))).cast("long").alias("d2")
-    codes_key = (spark.sparkContext.applicationId, sf_dir, "raw")
-    codes = _PQ_CODES_MEMO.get(codes_key)
-    if codes is None:
+    def build_codes() -> DataFrame:
         # the stored code list — argmin per (vector, subspace) via a
         # map-side-combinable min_by (no N*M*K window sort), written
         # once per session like the inverted file it belongs to.
@@ -1078,13 +1068,13 @@ def q_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # needed for window-parity here
         d = (sub.join(F.broadcast(cb), ["s", "j"])
              .groupBy("vec_id", "s", "code").agg(d2))
-        codes = (d.groupBy("vec_id", "s")
-                 .agg(F.min_by("code", F.struct("d2", "code"))
-                      .alias("code"))
-                 .select(F.col("vec_id").alias("neighbor_id"), "s",
-                         "code")
-                 .localCheckpoint(eager=False))
-        _PQ_CODES_MEMO[codes_key] = codes
+        return (d.groupBy("vec_id", "s")
+                .agg(F.min_by("code", F.struct("d2", "code"))
+                     .alias("code"))
+                .select(F.col("vec_id").alias("neighbor_id"), "s",
+                        "code")
+                .localCheckpoint(eager=False))
+    codes = memo(spark, ("pq_codes", sf_dir, "raw"), build_codes)
     dtab = (sub.filter(F.col("vec_id") < N_QUERIES)
             .join(F.broadcast(cb), ["s", "j"])
             .groupBy(F.col("vec_id").alias("query_id"), "s", "code")
@@ -1253,7 +1243,7 @@ def q_ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     # centroid component filter must track the DERIVED cell count
     # (== IVF_NLIST at gate SFs, sqrt-N beyond) or residuals would read
     # components for cells the coarse ranking never assigned
-    cexp = (ex.filter(F.col("vec_id") < ivf_nlist_for(sf_dir))
+    cexp = (ex.filter(F.col("vec_id") < ivf_nlist_for(spark, sf_dir))
             .select(F.col("vec_id").alias("centroid_id"), "i",
                     F.col("vi").alias("ci")))
     res = (ex.join(assign, "vec_id")
@@ -1267,21 +1257,19 @@ def q_ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("ri").alias("cw")))
     rd2 = F.sum((F.col("ri") - F.col("cw"))
                 * (F.col("ri") - F.col("cw"))).cast("long").alias("d2")
-    codes_key = (spark.sparkContext.applicationId, sf_dir, "residual")
-    codes = _PQ_CODES_MEMO.get(codes_key)
-    if codes is None:
+    def build_codes() -> DataFrame:
         # stored residual-code list, written once per session (min_by
         # argmin — no N*M*K window sort; same memo discipline as the
         # raw-code table)
         d = (res.join(F.broadcast(rcb), ["s", "j"])
              .groupBy("vec_id", "s", "code").agg(rd2))
-        codes = (d.groupBy("vec_id", "s")
-                 .agg(F.min_by("code", F.struct("d2", "code"))
-                      .alias("code"))
-                 .select(F.col("vec_id").alias("neighbor_id"), "s",
-                         "code")
-                 .localCheckpoint(eager=False))
-        _PQ_CODES_MEMO[codes_key] = codes
+        return (d.groupBy("vec_id", "s")
+                .agg(F.min_by("code", F.struct("d2", "code"))
+                     .alias("code"))
+                .select(F.col("vec_id").alias("neighbor_id"), "s",
+                        "code")
+                .localCheckpoint(eager=False))
+    codes = memo(spark, ("pq_codes", sf_dir, "residual"), build_codes)
     qres = (probes
             .join(ex.filter(F.col("vec_id") < N_QUERIES)
                   .select(F.col("vec_id").alias("query_id"), "i",
@@ -1455,72 +1443,60 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
               " eigval double, share_pm long")
 
 
-# (applicationId, sf_dir) -> (gram dict, vq eigenvector ints, n2). The
-# Gram aggregate is the diagnostic's only corpus-sized job; the whiten
-# apply reuses the identical trajectory, so one collect serves both.
-_PCA_MEMO: dict[tuple[str, str], tuple] = register_memo({})
-
-# (applicationId, sf_dir) -> the whiten census's checkpointed
-# (raw, whitened) RECALL_N-bounded audit lanes
-_WHITEN_LANES_MEMO: dict[tuple[str, str], tuple] = register_memo({})
-
-
 def _pca_eigvec(spark: SparkSession, sf_dir: str):
     """(gram, vq, n2): the exact integer power-iteration trajectory of
     q_embed_pca — Gram matrix as a dict, the PCA_ITERS-step eigenvector
     estimate in PCA_Q nano-units, and its squared norm (a Python int;
-    it can exceed int64). Memoized per (session, sf_dir)."""
+    it can exceed int64). Memoized per (session, sf_dir): the Gram
+    aggregate is the diagnostic's only corpus-sized job, and the whiten
+    apply reuses the identical trajectory, so one collect serves both."""
     import math
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _PCA_MEMO.get(key)
-    if memo is not None:
-        return memo
-    # mil-lane array per vector (same per-element chain as _PCA_MIL over
-    # similarity._exploded's int lane)
-    mil = F.expr(
-        "transform(embedding, vf -> CAST(floor("
-        "CAST(CAST(CAST(vf AS DOUBLE) AS DECIMAL(18,6)) * 1000000"
-        " AS BIGINT) / 1000.0) AS BIGINT))")
-    # the ONLY corpus-sized stage stays distributed — and join-free: a
-    # double posexplode fans each vector into its 4096 outer-product
-    # terms inside one whole-stage-codegen pass with map-side combine
-    # (the self-join form measured ~7 s at sf0.1; this form ~1 s). The
-    # result is dim^2-BOUNDED (4096 int64 cells, corpus-independent), so
-    # the 8-round iteration runs driver-side in exact Python integers —
-    # the same bounded-collect class as q_bpe_learn's per-round argmax
-    # (a distributed 64-row round-trip per step measured 8-17 s of pure
-    # stage scheduling for ~microseconds of arithmetic)
-    e1 = (table(spark, sf_dir, "embeddings")
-          .select(mil.alias("ma"))
-          .select(F.posexplode("ma").alias("gi", "va"), F.col("ma")))
-    cells = (e1.select("gi", "va",
-                       F.posexplode("ma").alias("gj", "vb"))
-             .groupBy("gi", "gj")
-             .agg(F.expr("CAST(SUM(va * vb) AS BIGINT)").alias("m"))
-             .collect())
-    dim = PCA_DIM
-    g = {(r["gi"], r["gj"]): r["m"] for r in cells}
-    vq = [PCA_Q] * dim
-    for _ in range(PCA_ITERS):
-        w = [sum(g.get((i, j), 0) * vq[j] for j in range(dim))
-             for i in range(dim)]
-        mw = max(abs(x) for x in w)
-        if mw == 0:
-            # Degenerate corpus (all-zero embeddings -> zero Gram):
-            # every iterate is zero, so the defined result is the
-            # uniform start with share 0 rather than a driver
-            # ZeroDivisionError. The oracle's unrolled SQL assumes a
-            # nonzero corpus (the diagnostic's real precondition); both
-            # gate-SF corpora satisfy it, and TestEmbedPca pins this
-            # branch directly.
-            break
-        vq = [int(math.floor(float(x) / float(mw) * PCA_Q + 0.5))
-              for x in w]
-    n2 = sum(q * q for q in vq)
-    memo = (g, vq, n2)
-    _PCA_MEMO[key] = memo
-    return memo
+    def build() -> tuple:
+        # mil-lane array per vector (same per-element chain as _PCA_MIL over
+        # similarity._exploded's int lane)
+        mil = F.expr(
+            "transform(embedding, vf -> CAST(floor("
+            "CAST(CAST(CAST(vf AS DOUBLE) AS DECIMAL(18,6)) * 1000000"
+            " AS BIGINT) / 1000.0) AS BIGINT))")
+        # the ONLY corpus-sized stage stays distributed — and join-free: a
+        # double posexplode fans each vector into its 4096 outer-product
+        # terms inside one whole-stage-codegen pass with map-side combine
+        # (the self-join form measured ~7 s at sf0.1; this form ~1 s). The
+        # result is dim^2-BOUNDED (4096 int64 cells, corpus-independent), so
+        # the 8-round iteration runs driver-side in exact Python integers —
+        # the same bounded-collect class as q_bpe_learn's per-round argmax
+        # (a distributed 64-row round-trip per step measured 8-17 s of pure
+        # stage scheduling for ~microseconds of arithmetic)
+        e1 = (table(spark, sf_dir, "embeddings")
+              .select(mil.alias("ma"))
+              .select(F.posexplode("ma").alias("gi", "va"), F.col("ma")))
+        cells = (e1.select("gi", "va",
+                           F.posexplode("ma").alias("gj", "vb"))
+                 .groupBy("gi", "gj")
+                 .agg(F.expr("CAST(SUM(va * vb) AS BIGINT)").alias("m"))
+                 .collect())
+        dim = PCA_DIM
+        g = {(r["gi"], r["gj"]): r["m"] for r in cells}
+        vq = [PCA_Q] * dim
+        for _ in range(PCA_ITERS):
+            w = [sum(g.get((i, j), 0) * vq[j] for j in range(dim))
+                 for i in range(dim)]
+            mw = max(abs(x) for x in w)
+            if mw == 0:
+                # Degenerate corpus (all-zero embeddings -> zero Gram):
+                # every iterate is zero, so the defined result is the
+                # uniform start with share 0 rather than a driver
+                # ZeroDivisionError. The oracle's unrolled SQL assumes a
+                # nonzero corpus (the diagnostic's real precondition); both
+                # gate-SF corpora satisfy it, and TestEmbedPca pins this
+                # branch directly.
+                break
+            vq = [int(math.floor(float(x) / float(mw) * PCA_Q + 0.5))
+                  for x in w]
+        n2 = sum(q * q for q in vq)
+        return (g, vq, n2)
+    return memo(spark, ("pca", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------
@@ -1849,9 +1825,7 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per invocation or per plan reference. Whitening commutes with the
     # slice filter: pn is per-vector and the eigenvector comes from the
     # full-corpus Gram memo either way.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _WHITEN_LANES_MEMO.get(key)
-    if memo is None:
+    def build() -> tuple[DataFrame, DataFrame]:
         # r15: the lanes are PACKED (vec_id, v: array<long>) for the
         # census's Arrow kernels. The mil array is the identical
         # per-element chain as _PCA_MIL over _exploded (transform
@@ -1887,9 +1861,9 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
                          f"zip_with(mv, {vq_lit}, (x, q) -> x - {rm})")
                          .alias("v"))
                      .localCheckpoint(eager=False))
-        memo = (raw, white)
-        _WHITEN_LANES_MEMO[key] = memo
-    return (_recall_census_two_lane(spark, *memo)
+        return (raw, white)
+    lanes = memo(spark, ("whiten_lanes", sf_dir), build)
+    return (_recall_census_two_lane(spark, *lanes)
             .orderBy("variant"))
 
 

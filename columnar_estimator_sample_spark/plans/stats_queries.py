@@ -89,11 +89,11 @@ def q_ndv_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     refreshes the catalog (one count per candidate dimension) and
     publishes its broadcast verdict to ``spark.graft.ndv.broadcastTables``
     — the conf the Catalyst-injected NdvCatalogExtension rule reads
-    (plans/jvm/, loaded via ``get_spark(ndv_extension=True)`` /
-    ``SPARK_GRAFT_NDV_EXT=1``). Under an extension-loaded session the
-    physical plan broadcasts nation and region even with
-    autoBroadcastJoinThreshold=-1 (plan-asserted in the fresh-JVM test);
-    results are identical either way, which is what the oracle certifies.
+    (plans/jvm/, loaded via ``get_spark(ndv_extension=True)``). Under an
+    extension-loaded session the physical plan broadcasts nation and
+    region even with autoBroadcastJoinThreshold=-1 (plan-asserted in the
+    fresh-JVM test); results are identical either way, which is what the
+    oracle certifies.
 
     Scale: the catalog refresh is count-only metadata work (parquet
     row-group footers); at 100 TB the verdict comes from the persisted

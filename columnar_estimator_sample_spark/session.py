@@ -60,20 +60,18 @@ def default_parallelism() -> int:
 def get_spark(app_name: str = "columnar_estimator_sample_spark",
               parallelism: int | None = None,
               extra_conf: dict[str, str] | None = None,
-              ndv_extension: bool | None = None) -> SparkSession:
+              ndv_extension: bool = False) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``ndv_extension=True`` (or env ``SPARK_GRAFT_NDV_EXT=1``) loads the
-    Catalyst-injected NDV estimator plugin (plans/jvm/) so the maintained
-    cardinality catalog drives join build-side selection inside the
-    optimizer itself. Opt-in because ``spark.sql.extensions`` is a static
-    conf: it only takes effect when this call CREATES the JVM — on an
-    already-running shared session it is ignored (Spark logs a warning),
-    which is why the plan-flip proof lives in a fresh-JVM subprocess test
+    ``ndv_extension=True`` loads the Catalyst-injected NDV estimator
+    plugin (plans/jvm/) so the maintained cardinality catalog drives
+    join build-side selection inside the optimizer itself. Opt-in
+    because ``spark.sql.extensions`` is a static conf: it only takes
+    effect when this call CREATES the JVM — on an already-running shared
+    session it is ignored (Spark logs a warning), which is why the
+    plan-flip proof lives in a fresh-JVM subprocess test
     (tests/test_jvm_extension.py)."""
     cores = parallelism or default_parallelism()
-    if ndv_extension is None:
-        ndv_extension = os.environ.get("SPARK_GRAFT_NDV_EXT", "") == "1"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cores}]"))

@@ -14,6 +14,8 @@ materializes or collects.
 from __future__ import annotations
 
 import atexit
+import threading
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,38 +25,48 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
+T = TypeVar("T")
 
-# (applicationId, sf_dir, name) -> loaded handle. spark.read.parquet
-# runs a small schema-inference job on the DRIVER at every call; with
-# ~250 registered queries each touching 1-3 tables that is hundreds of
-# pointless jobs at plan-build time. The handle is an immutable lazy
-# plan, so one per (session, sf_dir, table) is always safe to share.
+
+# THE PER-SESSION ARTIFACT STORE: (applicationId, *key) -> value, filled
+# by :func:`memo`. It holds the table handles below and every derived
+# artifact built from them (IVF coarse assignments and inverted files,
+# ER pair/entity frames, set-join contractions, LM scores, landed export
+# tables, ...). Each key starts with a name for its artifact, e.g.
+# ("table", sf_dir, name); the applicationId prefix means a new session
+# never sees another JVM's checkpoint or table.
 #
-# IMMUTABILITY CONTRACT: the handle pins the parquet file listing
+# IMMUTABILITY CONTRACT: a table handle pins the parquet file listing
 # captured at first read — an in-session overwrite/append to
 # {sf_dir}/{name}.parquet is invisible for the rest of the application.
 # The driver's testdata dirs are immutable per session, so this is the
-# intended semantics; a test that rewrites a table in place must call
-# :func:`reset_handles` after writing. The same contract covers the
-# operator-level derived caches (IVF coarse assignments, ER pair/entity
-# frames, set-join contractions, ...): they memoize locally-checkpointed
-# frames built FROM these handles, so they go stale — and pin executor
-# blocks — exactly when the handles do. They register themselves below
-# via :func:`register_memo` and are cleared by the same call.
-_HANDLES: dict[tuple[str, str, str], DataFrame] = {}
-
-# Operator-level memo dicts keyed by (applicationId, sf_dir[, ...]).
-# Each operator module owning a per-session memo registers it here at
-# import time so reset_handles() is the ONE cache-invalidation point.
-_MEMOS: list[dict] = []
+# intended semantics. The derived artifacts are locally-checkpointed
+# frames or landed tables built FROM these handles, so they go stale —
+# and pin executor blocks — exactly when the handles do.
+#
+# INVALIDATION: :func:`reset_handles` is the ONE invalidation point. It
+# drops every entry at once; a test that rewrites a table in place calls
+# it after writing.
+#
+# CONCURRENCY: a hit is one dict read and takes no lock. A miss takes
+# that key's build lock, so concurrent first calls for one key run the
+# build once and all get the same object, while builds for other keys —
+# including the nested ones a builder makes — run unblocked. Builders
+# nest in one direction only (an IVF inverted file needs the coarse
+# assignment, which needs the table handle), so per-key locks cannot
+# deadlock. A build that raises stores nothing; the next call retries.
+# A build running across a reset_handles() lands in the dropped store.
+_STORE: dict[tuple, object] = {}
+_BUILD_LOCKS: dict[tuple, threading.Lock] = {}
+_LOCK = threading.Lock()  # guards swapping _STORE / _BUILD_LOCKS
 
 # Scratch directories created by materializing operators (the IVF
 # inverted file, the corpus export landing). Each is one mkdtemp per
 # (session, sf_dir); without tracking, a long-lived session iterating
 # sf_dirs — exactly the use case reset_handles() serves — would leak a
 # full parquet copy per iteration. reset_handles() removes them with
-# the memos that point at them; an atexit hook sweeps whatever is left
-# when the interpreter exits.
+# the store entries that point at them; an atexit hook sweeps whatever
+# is left when the interpreter exits.
 _TEMPDIRS: list[str] = []
 
 
@@ -74,29 +86,56 @@ def _sweep_tempdirs() -> None:
 atexit.register(_sweep_tempdirs)
 
 
-def register_memo(memo: dict) -> dict:
-    """Register an operator-level memo dict for clearing alongside the
-    table handles (see the immutability contract on ``_HANDLES``).
-    Returns the dict for one-line ``_X_MEMO = register_memo({})`` use."""
-    _MEMOS.append(memo)
-    return memo
+def memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """The value stored under ``(applicationId, *key)``, running
+    ``build()`` on the first call only (see the store's rules above)."""
+    k = (spark.sparkContext.applicationId, *key)
+    try:
+        return _STORE[k]
+    except KeyError:
+        pass
+    with _LOCK:
+        store = _STORE
+        lock = _BUILD_LOCKS.setdefault(k, threading.Lock())
+    with lock:
+        if k not in store:
+            store[k] = build()
+        return store[k]
 
 
 def reset_handles() -> None:
-    """Drop every cached table handle AND every registered operator memo
-    (see the immutability contract on ``_HANDLES``): the next
-    :func:`table` call re-reads the parquet listing, and derived caches
-    (IVF/ER/set-join/...) rebuild from the fresh handles. For tests that
-    rewrite a testdata table in place, and as the release hook for
-    long-lived sessions iterating several sf_dirs (each memo otherwise
-    pins its locally-checkpointed blocks for the application lifetime).
-    Scratch dirs the memos point at (IVF bucketed tables, the corpus
-    export landing) are removed too — the memo was the only live
-    reference to those files."""
-    _HANDLES.clear()
-    for m in _MEMOS:
-        m.clear()
+    """Drop every cached table handle AND every derived artifact in the
+    store (see the rules on ``_STORE``): the next :func:`table` call
+    re-reads the parquet listing, and derived artifacts rebuild from the
+    fresh handles. For tests that rewrite a testdata table in place, and
+    as the release hook for long-lived sessions iterating several
+    sf_dirs (each artifact otherwise pins its locally-checkpointed
+    blocks for the application lifetime). Scratch dirs the artifacts
+    point at (IVF bucketed tables, the corpus export landing) are
+    removed too — the store was the only live reference to those
+    files."""
+    global _STORE, _BUILD_LOCKS
+    with _LOCK:
+        _STORE, _BUILD_LOCKS = {}, {}
     _sweep_tempdirs()
+
+
+def table_tag(spark: SparkSession, sf_dir: str) -> str:
+    """Identifier-safe name suffix for a table landed from ``sf_dir`` in
+    this session. It carries a hash of the FULL sf_dir path, not just
+    its leaf: two sf_dirs sharing a basename (regenerated 'sf0.001'
+    copies under different parents) in one session must never collide
+    on a table name — an overwrite would silently re-point the first
+    artifact's lazy spark.table() reference at the other dataset. The
+    applicationId keeps concurrent/successive sessions sharing a
+    warehouse directory off each other's locations."""
+    import hashlib
+    import os
+    import re
+    return re.sub(r"[^0-9A-Za-z]+", "_",
+                  os.path.basename(sf_dir.rstrip("/")) + "_"
+                  + hashlib.md5(sf_dir.encode()).hexdigest()[:8] + "_"
+                  + spark.sparkContext.applicationId)
 
 
 def parquet_num_rows(path: str) -> int:
@@ -144,16 +183,18 @@ def parquet_col_max(path: str, col: str) -> int:
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame (lazy; no action after
-    the first schema read per session/table)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _HANDLES.get(key)
-    if df is None:
+    the first schema read per session/table).
+
+    Memoized: spark.read.parquet runs a small schema-inference job on
+    the DRIVER at every call; with ~300 registered queries each touching
+    1-3 tables that is hundreds of pointless jobs at plan-build time.
+    The handle is an immutable lazy plan, so one per (session, sf_dir,
+    table) is always safe to share."""
+    def build() -> DataFrame:
         if name == "events":
-            df = events_table(spark, sf_dir)
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _HANDLES[key] = df
-    return df
+            return events_table(spark, sf_dir)
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return memo(spark, ("table", sf_dir, name), build)
 
 
 def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,18 +238,6 @@ def register_views(spark: SparkSession, sf_dir: str,
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# (applicationId, analyzed-plan semanticHash) -> probed split count.
-# fanout()'s `df.rdd.getNumPartitions()` probe is not free: under AQE it
-# materializes the plan driver-side, and when the input subtree contains
-# a shuffle it EXECUTES those upstream stages at DataFrame-BUILD time
-# (r14 measured this on the reverted media-feed placements). Every bench
-# pass and oracle re-check rebuilds the same frames, so memoizing on the
-# analyzed plan's semantic hash makes all but the first probe per
-# (session, plan) free. Registered so reset_handles() clears it with the
-# table handles it derives from.
-_FANOUT_SPLITS: dict[tuple[str, int], int] = register_memo({})
-
-
 def fanout(df: DataFrame) -> DataFrame:
     """Fan a frame out to the session's core count when its scan yields
     fewer splits — one small parquet file locally, a few huge files on a
@@ -223,17 +252,16 @@ def fanout(df: DataFrame) -> DataFrame:
     which under AQE materializes the physical plan and — whenever the
     input subtree contains an exchange — runs those upstream stages at
     BUILD time. Prefer placing fanout directly on scan-rooted frames;
-    the per-(session, plan) memo below caps the cost at one probe for
-    repeated builds either way.
+    the per-(session, plan) memo caps the cost at one probe for
+    repeated builds either way: every bench pass and oracle re-check
+    rebuilds the same frames, so memoizing on the analyzed plan's
+    semantic hash makes all but the first probe free.
     """
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    key = (sc.applicationId,
-           df._jdf.queryExecution().analyzed().semanticHash())
-    n = _FANOUT_SPLITS.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _FANOUT_SPLITS[key] = n
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    n = memo(spark, ("fanout_splits",
+                     df._jdf.queryExecution().analyzed().semanticHash()),
+             lambda: df.rdd.getNumPartitions())
     if n < par:
         return df.repartition(par)
     return df

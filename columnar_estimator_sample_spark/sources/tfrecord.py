@@ -44,7 +44,6 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     DataSourceWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql import types as T
@@ -280,6 +279,16 @@ def _convert(values: list[object], dt: T.DataType) -> object:
     return v
 
 
+def _decode_rows(path: str, schema: T.StructType) -> Iterator[tuple]:
+    """One shard's tf.Examples as row tuples in ``schema`` field order —
+    the decode loop shared by the batch and the stream reader."""
+    fields = schema.fields
+    for payload in read_tfrecords(path):
+        ex = decode_example(payload)
+        yield tuple(_convert(ex.get(f.name, []), f.dataType)
+                    for f in fields)
+
+
 class _FilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
@@ -303,11 +312,7 @@ class TFRecordReader(DataSourceReader):
         return [_FilePartition(p) for p in paths]
 
     def read(self, partition: _FilePartition):
-        fields = self.schema.fields
-        for payload in read_tfrecords(partition.path):
-            ex = decode_example(payload)
-            yield tuple(_convert(ex.get(f.name, []), f.dataType)
-                        for f in fields)
+        return _decode_rows(partition.path, self.schema)
 
 
 class TFRecordWriter(DataSourceWriter):
@@ -368,77 +373,23 @@ def _offset_files(offset: dict) -> set:
     return set(offset["files"])
 
 
-class TFRecordStreamReader(SimpleDataSourceStreamReader):
-    """Streaming twin of :class:`TFRecordReader`: replays a directory of
-    tfrecord shards as micro-batches in sorted-filename order — the
-    "stream training examples from TFRecord shards" shape (the
-    reference's input format, served incrementally). Offsets carry the
-    EXPLICIT seen-file list, ``{"files": [...]}``, the same design as
-    Spark's FileStreamSource seen-files log: ``read`` picks up every
-    listed file not in the committed set (so a shard landing with a
-    name that sorts before already-committed files is still read), and
-    ``readBetweenOffsets`` replays the set difference of the two
-    offsets WITHOUT re-listing the directory — a batch is a pure
-    function of its offsets, so replay is exact even while new shards
-    land (file contents are immutable). The source composes
-    exactly-once with the checkpointed sinks (memory for tests,
-    foreach_batch_parquet_sink in production). Production note: a
-    long-lived queue would compact the seen list the way
-    FileStreamSource's metadata log does; for the bounded shard queues
-    this reader targets the explicit list is the honest size.
-
-    Scale: the simple-reader API executes reads driver-side and is the
-    right tool for a BOUNDED shard queue (landing buckets, training
-    shards); unbounded high-volume streams belong on the partitioned
-    DataSourceStreamReader variant with per-executor splits."""
-
-    def __init__(self, schema: T.StructType, options: dict):
-        self._schema = schema
-        self._dir = options.get("path")
-        if not self._dir:
-            raise ValueError("tfrecord stream source requires a path")
-
-    def _files(self) -> list:
-        pat = (os.path.join(self._dir, "*")
-               if os.path.isdir(self._dir) else self._dir)
-        return sorted(p for p in _glob.glob(pat) if os.path.isfile(p))
-
-    def initialOffset(self) -> dict:
-        return {"files": []}
-
-    def _rows(self, files: list) -> list:
-        # a LIST, not a generator: the simple-reader protocol pickles the
-        # read result to cache it for executor replay
-        fields = self._schema.fields
-        return [tuple(_convert(ex.get(f.name, []), f.dataType)
-                      for f in fields)
-                for path in files
-                for ex in map(decode_example, read_tfrecords(path))]
-
-    def read(self, start: dict):
-        seen = _offset_files(start)
-        new = sorted(p for p in self._files() if p not in seen)
-        return self._rows(new), {"files": sorted(seen | set(new))}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # a pure function of the two offsets — no directory re-listing,
-        # so shards landing during replay cannot shift the batch contents
-        return self._rows(sorted(_offset_files(end) - _offset_files(start)))
-
-
 class TFRecordPartitionedStreamReader(DataSourceStreamReader):
-    """The SCALE face of the TFRecord stream: offsets carry the same
-    explicit ``{"files": [...]}`` seen list as the simple reader, and
-    each micro-batch plans ONE :class:`InputPartition` PER NEW SHARD
-    and decodes on the EXECUTORS — the driver only lists filenames
-    (``latestOffset``), so shard payloads never visit it and a batch of
-    K new shards reads K-wide. ``partitions(start, end)`` is computed
-    from the offsets alone (set difference), never from a fresh
-    listing, so a batch replays the exact file set its offsets record. This is the default stream reader;
-    ``option("reader", "simple")`` selects the driver-side
-    :class:`TFRecordStreamReader` (fine for small bounded queues, and
-    the replay-cache semantics differ slightly — simple readers prefetch
-    driver-side)."""
+    """Streaming twin of :class:`TFRecordReader`: replays a directory of
+    tfrecord shards as micro-batches — the "stream training examples
+    from TFRecord shards" shape (the reference's input format, served
+    incrementally). Offsets carry the EXPLICIT seen-file list,
+    ``{"files": [...]}``, the same design as Spark's FileStreamSource
+    seen-files log: a batch picks up every listed file not in the
+    committed set, so a shard landing with a name that sorts before
+    already-committed files is still read. Each micro-batch plans ONE
+    :class:`InputPartition` PER NEW SHARD and decodes on the EXECUTORS
+    — the driver only lists filenames (``latestOffset``), so shard
+    payloads never visit it and a batch of K new shards reads K-wide.
+    ``partitions(start, end)`` is computed from the offsets alone (set
+    difference), never from a fresh listing, so a batch replays the
+    exact file set its offsets record (file contents are immutable).
+    Production note: a long-lived queue would compact the seen list
+    the way FileStreamSource's metadata log does."""
 
     def __init__(self, schema: T.StructType, options: dict):
         self._schema = schema
@@ -464,12 +415,8 @@ class TFRecordPartitionedStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _FilePartition):
         if not partition.path:
-            return
-        fields = self._schema.fields
-        for payload in read_tfrecords(partition.path):
-            ex = decode_example(payload)
-            yield tuple(_convert(ex.get(f.name, []), f.dataType)
-                        for f in fields)
+            return iter(())
+        return _decode_rows(partition.path, self._schema)
 
     def commit(self, end: dict) -> None:
         pass
@@ -498,19 +445,7 @@ class TFRecordDataSource(DataSource):
 
     def streamReader(self, schema: T.StructType)\
             -> TFRecordPartitionedStreamReader:
-        if self.options.get("reader") == "simple":
-            # the exact exception pyspark's _streamReader catches to fall
-            # back to simpleStreamReader (builtin NotImplementedError is
-            # NOT caught there)
-            from pyspark.errors import PySparkNotImplementedError
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"})
         return TFRecordPartitionedStreamReader(schema, self.options)
-
-    def simpleStreamReader(self, schema: T.StructType)\
-            -> TFRecordStreamReader:
-        return TFRecordStreamReader(schema, self.options)
 
 
 def register_tfrecord(spark) -> None:
@@ -623,22 +558,21 @@ def q_tfrecord_stream_census(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """S2 meets §2.8: export a documents slice as gzipped TFRecord
     shards, then read them back THROUGH THE STREAMING SOURCE
-    (:class:`TFRecordPartitionedStreamReader` — the default,
-    executor-side shard decode; drained availableNow through a
-    checkpoint) and census per language. The batch oracle over the
-    parquet source certifies the whole incremental path: offset
-    bookkeeping, shard replay, varint/CRC framing, proto decode. The
-    driver-side ``simpleStreamReader`` twin is exercised by the
-    parametrized unit test (``option("reader", "simple")``).
+    (:class:`TFRecordPartitionedStreamReader` — executor-side shard
+    decode; drained availableNow through a checkpoint) and census per
+    language. The batch oracle over the parquet source certifies the
+    whole incremental path: offset bookkeeping, shard replay,
+    varint/CRC framing, proto decode.
 
     Scale: the shard queue is the training-data landing pattern — new
     shards picked up via the seen-file-list offsets, replayable between
-    offsets; see TFRecordStreamReader for the bounded-queue caveat."""
+    offsets; see TFRecordPartitionedStreamReader for the seen-list
+    caveat."""
     import shutil
     import tempfile
 
     from columnar_estimator_sample_spark.streaming.windows import (
-        run_to_completion,
+        _sink_name, run_to_completion,
     )
 
     register_tfrecord(spark)
@@ -657,7 +591,8 @@ def q_tfrecord_stream_census(spark: SparkSession,
                   .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
                        F.sum("n_chars").cast("long").alias("total_chars"),
                        F.min("doc_id").alias("first_doc")))
-        res = run_to_completion(census, ckpt, "tfrec_stream_census",
+        res = run_to_completion(census, ckpt,
+                                _sink_name("tfrec_stream_census"),
                                 mode="complete")
         rows = [(r.lang, r.n_docs, r.total_chars, r.first_doc)
                 for r in res.orderBy("lang").collect()]

@@ -22,9 +22,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from columnar_estimator_sample_spark.operators.corpus import (
+    _CASCADE_VERDICT,
+)
+from columnar_estimator_sample_spark.operators.dedup import (
+    _minhash_band_ctes,
+)
 from columnar_estimator_sample_spark.operators.pipeline import (
     MIN_STOP_DEN, MIN_STOP_NUM, MIN_TOKENS, STOPWORDS,
 )
+from columnar_estimator_sample_spark.operators.similarity import (
+    IVF_INC_ORACLE,
+)
+from columnar_estimator_sample_spark.operators.textstats import _DOC_LM_SQL
+from columnar_estimator_sample_spark.registry import register
 
 
 # Default micro-batch granularity for the REGISTERED drains: the
@@ -215,41 +226,32 @@ def quality_cascade_stream(spark: SparkSession, sf_dir: str,
         out, "lang string, verdict string, n_docs long, n_tokens long")
 
 
-def _register_stream_cascade() -> None:
-    from columnar_estimator_sample_spark.operators.corpus import (
-        _CASCADE_VERDICT,
+@register(
+    "q_stream_quality_cascade",
+    oracle=f"""
+    WITH {_DOC_LM_SQL},
+    sig AS (
+        SELECT d.doc_id, d.lang,
+               len(string_split(d.text, ' ')) AS n_toks,
+               (1000 * len(list_distinct(string_split(d.text, ' '))))
+                   // len(string_split(d.text, ' ')) AS ttr_pm,
+               coalesce(s.lm_score_permille, -1) AS lm_pm
+        FROM documents d
+        LEFT JOIN scores s ON s.doc_id = d.doc_id
     )
-    from columnar_estimator_sample_spark.operators.textstats import (
-        _DOC_LM_SQL,
-    )
-    from columnar_estimator_sample_spark.registry import register
-
-    register(
-        "q_stream_quality_cascade",
-        oracle=f"""
-        WITH {_DOC_LM_SQL},
-        sig AS (
-            SELECT d.doc_id, d.lang,
-                   len(string_split(d.text, ' ')) AS n_toks,
-                   (1000 * len(list_distinct(string_split(d.text, ' '))))
-                       // len(string_split(d.text, ' ')) AS ttr_pm,
-                   coalesce(s.lm_score_permille, -1) AS lm_pm
-            FROM documents d
-            LEFT JOIN scores s ON s.doc_id = d.doc_id
-        )
-        SELECT lang, {_CASCADE_VERDICT} AS verdict,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(n_toks) AS BIGINT) AS n_tokens
-        FROM sig
-        GROUP BY lang, verdict
-        ORDER BY lang, verdict
-        """,
-    )(lambda spark, sf_dir:
-      quality_cascade_stream(spark, sf_dir)
-      .orderBy("lang", "verdict"))
-
-
-_register_stream_cascade()
+    SELECT lang, {_CASCADE_VERDICT} AS verdict,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_toks) AS BIGINT) AS n_tokens
+    FROM sig
+    GROUP BY lang, verdict
+    ORDER BY lang, verdict
+    """,
+)
+def q_stream_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The streamed admission ledger of :func:`quality_cascade_stream`,
+    certified against the batch cascade's oracle."""
+    return (quality_cascade_stream(spark, sf_dir)
+            .orderBy("lang", "verdict"))
 
 
 # ---------------------------------------------------------------------------
@@ -278,12 +280,6 @@ def embeddings_stream(spark: SparkSession, sf_dir: str,
             .option("maxFilesPerTrigger", files_per_trigger)
             .option("pathGlobFilter", "embeddings.parquet")
             .parquet(sf_dir))
-
-
-# (applicationId, sf_dir) -> drained maintained-table handle (stream
-# face). Memoized post-drain so a re-invocation reads the table
-# instead of re-appending arrivals.
-_ANN_INGEST_TABLES: dict = None  # set below via register_memo
 
 
 def ann_ingest_stream(spark: SparkSession, sf_dir: str,
@@ -316,10 +312,10 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
     the failed attempt. Without that, recovery was reachable only for
     in-run batch retries (the round-12 advisory). Bucketing by
     centroid_id within partitions keeps the census/probe plans
-    exchange-free (the corpus-export layout)."""
-    import hashlib
+    exchange-free (the corpus-export layout). The drained handle is
+    memoized per (session, sf_dir) post-drain, so a re-invocation reads
+    the table instead of re-appending arrivals."""
     import os
-    import re
     import tempfile
 
     from columnar_estimator_sample_spark.operators.partitioning import (
@@ -329,53 +325,46 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
         _exploded, _inc_coarse_assign, inc_batch_threshold, ivf_nlist_for,
     )
     from columnar_estimator_sample_spark.sources.tables import (
-        register_tempdir, table,
+        memo, register_tempdir, table, table_tag,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _ANN_INGEST_TABLES.get(key)
-    if memo is not None:
-        return memo
-    nlist = ivf_nlist_for(sf_dir)
-    thr = inc_batch_threshold(sf_dir)
-    ex = _exploded(table(spark, sf_dir, "embeddings"))
-    cex = (ex.filter(F.col("vec_id") < nlist)
-           .select(F.col("vec_id").alias("centroid_id"), "i",
-                   F.col("vi").alias("ci")))
-    cnorms = (cex.groupBy("centroid_id")
-              .agg(F.sum(F.col("ci") * F.col("ci")).alias("nc_s"))
-              .localCheckpoint(eager=False))
-    tag = re.sub(r"[^0-9A-Za-z]+", "_",
-                 os.path.basename(sf_dir.rstrip("/")) + "_"
-                 + hashlib.md5(sf_dir.encode()).hexdigest()[:8] + "_"
-                 + spark.sparkContext.applicationId)
-    name = f"ivf_ings_{tag}"
-    # skip the base build when a FAILED prior drain in this session
-    # already landed it — rebuilding with overwrite would wipe the
-    # committed epochs the resumed checkpoint will not replay
-    if not spark.catalog.tableExists(name):
-        base = register_tempdir(
-            tempfile.mkdtemp(prefix="spark-graft-ivfs-"))
-        bucketed_ctas(
-            spark, name,
-            _inc_coarse_assign(ex.filter(F.col("vec_id") < thr), cex,
-                               cnorms, "base")
-            .withColumn("epoch", F.lit(-1).cast("long")),
-            "centroid_id", n_buckets=nlist,
-            path=os.path.join(base, "idx"), partition_by="epoch")
+    def build() -> DataFrame:
+        nlist = ivf_nlist_for(spark, sf_dir)
+        thr = inc_batch_threshold(sf_dir)
+        ex = _exploded(table(spark, sf_dir, "embeddings"))
+        cex = (ex.filter(F.col("vec_id") < nlist)
+               .select(F.col("vec_id").alias("centroid_id"), "i",
+                       F.col("vi").alias("ci")))
+        cnorms = (cex.groupBy("centroid_id")
+                  .agg(F.sum(F.col("ci") * F.col("ci")).alias("nc_s"))
+                  .localCheckpoint(eager=False))
+        tag = table_tag(spark, sf_dir)
+        name = f"ivf_ings_{tag}"
+        # skip the base build when a FAILED prior drain in this session
+        # already landed it — rebuilding with overwrite would wipe the
+        # committed epochs the resumed checkpoint will not replay
+        if not spark.catalog.tableExists(name):
+            base = register_tempdir(
+                tempfile.mkdtemp(prefix="spark-graft-ivfs-"))
+            bucketed_ctas(
+                spark, name,
+                _inc_coarse_assign(ex.filter(F.col("vec_id") < thr), cex,
+                                   cnorms, "base")
+                .withColumn("epoch", F.lit(-1).cast("long")),
+                "centroid_id", n_buckets=nlist,
+                path=os.path.join(base, "idx"), partition_by="epoch")
 
-    def ingest_batch(bdf: DataFrame, epoch_id: int) -> None:
-        batch = bdf.filter(F.col("vec_id") >= thr)
-        _ingest_epoch(_inc_coarse_assign(_exploded(batch), cex, cnorms,
-                                         "batch"), name, epoch_id)
+        def ingest_batch(bdf: DataFrame, epoch_id: int) -> None:
+            batch = bdf.filter(F.col("vec_id") >= thr)
+            _ingest_epoch(_inc_coarse_assign(_exploded(batch), cex, cnorms,
+                                             "batch"), name, epoch_id)
 
-    src = (embeddings_stream(spark, sf_dir, files_per_trigger)
-           if arrivals is None else arrivals)
-    _epoch_drain(spark, src, ingest_batch, f"ckpt_ann_ingest_{tag}",
-                 name)
-    handle = spark.table(name).select("vec_id", "centroid_id", "phase")
-    _ANN_INGEST_TABLES[key] = handle
-    return handle
+        src = (embeddings_stream(spark, sf_dir, files_per_trigger)
+               if arrivals is None else arrivals)
+        _epoch_drain(spark, src, ingest_batch, f"ckpt_ann_ingest_{tag}",
+                     name)
+        return spark.table(name).select("vec_id", "centroid_id", "phase")
+    return memo(spark, ("ann_ingest", sf_dir), build)
 
 
 def _epoch_drain(spark: SparkSession, src: DataFrame, ingest_batch,
@@ -436,36 +425,18 @@ def _ingest_epoch(assign: DataFrame, name: str, epoch_id: int) -> None:
      .write.mode("overwrite").insertInto(name))
 
 
-def _register_stream_ann_ingest() -> None:
-    from columnar_estimator_sample_spark.operators.similarity import (
-        IVF_INC_ORACLE,
-    )
-    from columnar_estimator_sample_spark.registry import register
-    from columnar_estimator_sample_spark.sources.tables import (
-        register_memo,
-    )
-
-    global _ANN_INGEST_TABLES
-    _ANN_INGEST_TABLES = register_memo({})
-
-    def q_stream_ann_ingest(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-        """Census of the STREAM-maintained inverted file — same
-        columns, same oracle as q_ann_ivf_incremental: the two
-        maintenance faces must converge to the identical index."""
-        idx = ann_ingest_stream(spark, sf_dir)
-        is_batch = (F.col("phase") == "batch").cast("int")
-        return (idx.groupBy("centroid_id")
-                .agg(F.sum(1 - is_batch).cast("long").alias("n_base"),
-                     F.sum(is_batch).cast("long").alias("n_batch"),
-                     F.count(F.lit(1)).cast("long").alias("n_total"))
-                .orderBy("centroid_id"))
-
-    register("q_stream_ann_ingest", oracle=IVF_INC_ORACLE)(
-        q_stream_ann_ingest)
-
-
-_register_stream_ann_ingest()
+@register("q_stream_ann_ingest", oracle=IVF_INC_ORACLE)
+def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Census of the STREAM-maintained inverted file — same columns,
+    same oracle as q_ann_ivf_incremental: the two maintenance faces
+    must converge to the identical index."""
+    idx = ann_ingest_stream(spark, sf_dir)
+    is_batch = (F.col("phase") == "batch").cast("int")
+    return (idx.groupBy("centroid_id")
+            .agg(F.sum(1 - is_batch).cast("long").alias("n_base"),
+                 F.sum(is_batch).cast("long").alias("n_batch"),
+                 F.count(F.lit(1)).cast("long").alias("n_total"))
+            .orderBy("centroid_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -495,9 +466,6 @@ def neardup_batch_threshold(sf_dir: str) -> int:
                             "doc_id") - (NEARDUP_INC_BATCH - 1))
 
 
-_NEARDUP_INGEST_TABLES: dict = None  # set below via register_memo
-
-
 def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
                           arrivals: DataFrame | None = None,
                           files_per_trigger: int = STREAM_FILES_PER_TRIGGER
@@ -520,10 +488,9 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
     At 100 TB: the band index IS the structure a production near-dup
     service maintains — candidate generation joins new bands against
     this table on (band, band_key) with no rescan of history; bucketing
-    by band_key keeps that join and the bucket census exchange-free."""
-    import hashlib
+    by band_key keeps that join and the bucket census exchange-free.
+    The drained handle is memoized per (session, sf_dir) post-drain."""
     import os
-    import re
     import tempfile
 
     from columnar_estimator_sample_spark.operators.dedup import (
@@ -533,98 +500,75 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
         bucketed_ctas,
     )
     from columnar_estimator_sample_spark.sources.tables import (
-        register_tempdir, table,
+        memo, register_tempdir, table, table_tag,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _NEARDUP_INGEST_TABLES.get(key)
-    if memo is not None:
-        return memo
-    thr = neardup_batch_threshold(sf_dir)
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = re.sub(r"[^0-9A-Za-z]+", "_",
-                 os.path.basename(sf_dir.rstrip("/")) + "_"
-                 + hashlib.md5(sf_dir.encode()).hexdigest()[:8] + "_"
-                 + spark.sparkContext.applicationId)
-    name = f"lsh_ings_{tag}"
-    if not spark.catalog.tableExists(name):
-        base = register_tempdir(
-            tempfile.mkdtemp(prefix="spark-graft-lsh-"))
-        bucketed_ctas(
-            spark, name,
-            minhash_bands(docs.filter(F.col("doc_id") < thr))
-            .withColumn("band", F.col("band").cast("long"))
-            .withColumn("phase", F.lit("base"))
-            .withColumn("epoch", F.lit(-1).cast("long")),
-            "band_key", n_buckets=2 * LSH_BANDS,
-            path=os.path.join(base, "idx"), partition_by="epoch")
+    def build() -> DataFrame:
+        thr = neardup_batch_threshold(sf_dir)
+        docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+        tag = table_tag(spark, sf_dir)
+        name = f"lsh_ings_{tag}"
+        if not spark.catalog.tableExists(name):
+            base = register_tempdir(
+                tempfile.mkdtemp(prefix="spark-graft-lsh-"))
+            bucketed_ctas(
+                spark, name,
+                minhash_bands(docs.filter(F.col("doc_id") < thr))
+                .withColumn("band", F.col("band").cast("long"))
+                .withColumn("phase", F.lit("base"))
+                .withColumn("epoch", F.lit(-1).cast("long")),
+                "band_key", n_buckets=2 * LSH_BANDS,
+                path=os.path.join(base, "idx"), partition_by="epoch")
 
-    def ingest_batch(bdf: DataFrame, epoch_id: int) -> None:
-        batch = bdf.filter(F.col("doc_id") >= thr).select("doc_id", "text")
-        _ingest_epoch(
-            minhash_bands(batch)
-            .withColumn("band", F.col("band").cast("long"))
-            .withColumn("phase", F.lit("batch")),
-            name, epoch_id)
+        def ingest_batch(bdf: DataFrame, epoch_id: int) -> None:
+            batch = (bdf.filter(F.col("doc_id") >= thr)
+                     .select("doc_id", "text"))
+            _ingest_epoch(
+                minhash_bands(batch)
+                .withColumn("band", F.col("band").cast("long"))
+                .withColumn("phase", F.lit("batch")),
+                name, epoch_id)
 
-    src = (documents_stream(spark, sf_dir, files_per_trigger)
-           if arrivals is None else arrivals)
-    _epoch_drain(spark, src, ingest_batch, f"ckpt_neardup_ingest_{tag}",
-                 name)
-    handle = spark.table(name).select("doc_id", "band", "band_key",
-                                      "phase")
-    _NEARDUP_INGEST_TABLES[key] = handle
-    return handle
+        src = (documents_stream(spark, sf_dir, files_per_trigger)
+               if arrivals is None else arrivals)
+        _epoch_drain(spark, src, ingest_batch, f"ckpt_neardup_ingest_{tag}",
+                     name)
+        return spark.table(name).select("doc_id", "band", "band_key",
+                                        "phase")
+    return memo(spark, ("neardup_ingest", sf_dir), build)
 
 
-def _register_stream_neardup_ingest() -> None:
-    from columnar_estimator_sample_spark.operators.dedup import (
-        _minhash_band_ctes,
+@register(
+    "q_stream_neardup_ingest",
+    oracle=f"""
+    WITH {_minhash_band_ctes()},
+    bc AS (
+        SELECT band, band_key, CAST(COUNT(*) AS BIGINT) AS c
+        FROM bands GROUP BY band, band_key
     )
-    from columnar_estimator_sample_spark.registry import register
-    from columnar_estimator_sample_spark.sources.tables import (
-        register_memo,
-    )
-
-    global _NEARDUP_INGEST_TABLES
-    _NEARDUP_INGEST_TABLES = register_memo({})
-
-    def q_stream_neardup_ingest(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-        """Census of the STREAM-maintained LSH band index — per band:
-        entries, distinct band keys, and the LSH candidate-pair count
-        (Σ c·(c−1)/2 over band-key buckets, the number the batch
-        minhash join would generate). The oracle restates the banding
-        over the FULL corpus, so the green row proves the streamed
-        index equals the batch build bit-for-bit (band keys are md5 of
-        the signature slice — any divergence flips the hash)."""
-        idx = neardup_ingest_stream(spark, sf_dir)
-        bc = (idx.groupBy("band", "band_key")
-              .agg(F.count(F.lit(1)).cast("long").alias("c")))
-        return (bc.groupBy("band")
-                .agg(F.sum("c").cast("long").alias("n_entries"),
-                     F.count(F.lit(1)).cast("long").alias("n_keys"),
-                     F.sum(F.expr("c * (c - 1) DIV 2")).cast("long")
-                     .alias("n_cand_pairs"))
-                .orderBy("band"))
-
-    register(
-        "q_stream_neardup_ingest",
-        oracle=f"""
-        WITH {_minhash_band_ctes()},
-        bc AS (
-            SELECT band, band_key, CAST(COUNT(*) AS BIGINT) AS c
-            FROM bands GROUP BY band, band_key
-        )
-        SELECT band,
-               CAST(SUM(c) AS BIGINT) AS n_entries,
-               CAST(COUNT(*) AS BIGINT) AS n_keys,
-               CAST(SUM(c * (c - 1) // 2) AS BIGINT) AS n_cand_pairs
-        FROM bc
-        GROUP BY band
-        ORDER BY band
-        """,
-    )(q_stream_neardup_ingest)
-
-
-_register_stream_neardup_ingest()
+    SELECT band,
+           CAST(SUM(c) AS BIGINT) AS n_entries,
+           CAST(COUNT(*) AS BIGINT) AS n_keys,
+           CAST(SUM(c * (c - 1) // 2) AS BIGINT) AS n_cand_pairs
+    FROM bc
+    GROUP BY band
+    ORDER BY band
+    """,
+)
+def q_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Census of the STREAM-maintained LSH band index — per band:
+    entries, distinct band keys, and the LSH candidate-pair count
+    (Σ c·(c−1)/2 over band-key buckets, the number the batch minhash
+    join would generate). The oracle restates the banding over the FULL
+    corpus, so the green row proves the streamed index equals the batch
+    build bit-for-bit (band keys are md5 of the signature slice — any
+    divergence flips the hash)."""
+    idx = neardup_ingest_stream(spark, sf_dir)
+    bc = (idx.groupBy("band", "band_key")
+          .agg(F.count(F.lit(1)).cast("long").alias("c")))
+    return (bc.groupBy("band")
+            .agg(F.sum("c").cast("long").alias("n_entries"),
+                 F.count(F.lit(1)).cast("long").alias("n_keys"),
+                 F.sum(F.expr("c * (c - 1) DIV 2")).cast("long")
+                 .alias("n_cand_pairs"))
+            .orderBy("band"))

@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from columnar_estimator_sample_spark.registry import register
+
 OUT_SCHEMA = ("user_id long, n_events long, total_value double, "
               "first_us long, last_us long")
 STATE_SCHEMA = "n long, total double, first_us long, last_us long"
@@ -120,6 +122,20 @@ def running_user_totals_exact(events: DataFrame) -> DataFrame:
     )
 
 
+@register(
+    "q_stream_user_totals",
+    oracle="""
+    SELECT user_id,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM(CAST(round(value * 1000000) AS BIGINT))
+                AS BIGINT) AS total_micros,
+           MIN(epoch_us(ts)) AS first_us,
+           MAX(epoch_us(ts)) AS last_us
+    FROM events
+    GROUP BY user_id
+    ORDER BY user_id
+    """,
+)
 def q_stream_user_totals(spark, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (``applyInPandasWithState``),
     driver-gated: per-user running accumulators that survive across
@@ -139,11 +155,10 @@ def q_stream_user_totals(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from columnar_estimator_sample_spark.streaming.windows import (
-        _STREAM_RUN_SEQ, events_stream, run_to_completion,
+        _sink_name, events_stream, run_to_completion,
     )
 
-    _STREAM_RUN_SEQ[0] += 1
-    name = f"stream_user_totals_{_STREAM_RUN_SEQ[0]}"
+    name = _sink_name("stream_user_totals")
     ckpt = tempfile.mkdtemp(prefix="ckpt_stream_totals_")
     try:
         ev = events_stream(spark, sf_dir)
@@ -159,28 +174,6 @@ def q_stream_user_totals(spark, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return res
-
-
-def _register_stateful() -> None:
-    from columnar_estimator_sample_spark.registry import register
-
-    register(
-        "q_stream_user_totals",
-        oracle="""
-        SELECT user_id,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM(CAST(round(value * 1000000) AS BIGINT))
-                    AS BIGINT) AS total_micros,
-               MIN(epoch_us(ts)) AS first_us,
-               MAX(epoch_us(ts)) AS last_us
-        FROM events
-        GROUP BY user_id
-        ORDER BY user_id
-        """,
-    )(q_stream_user_totals)
-
-
-_register_stateful()
 
 
 # ---------------------------------------------------------------------------

@@ -18,12 +18,17 @@ Scale notes:
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from columnar_estimator_sample_spark.functions.exact import dsum
+from columnar_estimator_sample_spark.functions.exact import dsum, sql_dsum
+from columnar_estimator_sample_spark.registry import register
 
 US_PER_DAY = 86_400_000_000
+SESSION_GAP_US = 30 * 60 * 1_000_000  # session_window('30 minutes')
+SLIDE_US = 30 * 60 * 1_000_000  # q_stream_sliding_value's 30 min slide
 
 
 def events_stream(spark: SparkSession, sf_dir: str,
@@ -189,9 +194,28 @@ def run_to_completion(stream_df: DataFrame, checkpoint_dir: str,
 # windowed state store, availableNow drain, memory sink).
 # --------------------------------------------------------------------------
 
-_STREAM_RUN_SEQ = [0]  # unique memory-sink names within one session
+_SINK_SEQ = itertools.count(1)
 
 
+def _sink_name(prefix: str) -> str:
+    """A memory-sink query name unique within the process: concurrent
+    clients running the same streaming query must never share a sink
+    (``next`` on an ``itertools.count`` is atomic)."""
+    return f"{prefix}_{next(_SINK_SEQ)}"
+
+
+@register(
+    "q_stream_daily_counts",
+    oracle=f"""
+    SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+           event_type,
+           COUNT(*) AS n_events,
+           {sql_dsum("value", "total_value", 6)}
+    FROM events
+    GROUP BY 1, 2
+    ORDER BY day, event_type
+    """,
+)
 def q_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming daily windowed aggregation, oracle-checked
     against DuckDB directly: events as a file stream -> 1-day watermark
@@ -208,8 +232,7 @@ def q_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    _STREAM_RUN_SEQ[0] += 1
-    name = f"stream_daily_counts_{_STREAM_RUN_SEQ[0]}"
+    name = _sink_name("stream_daily_counts")
     ckpt = tempfile.mkdtemp(prefix="ckpt_stream_daily_")
     try:
         ev = events_stream(spark, sf_dir)
@@ -222,27 +245,35 @@ def q_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.orderBy("day", "event_type")
 
 
-def _register_streaming() -> None:
-    from columnar_estimator_sample_spark.functions.exact import sql_dsum
-    from columnar_estimator_sample_spark.registry import register
-
-    register(
-        "q_stream_daily_counts",
-        oracle=f"""
-        SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-               event_type,
-               COUNT(*) AS n_events,
-               {sql_dsum("value", "total_value", 6)}
-        FROM events
-        GROUP BY 1, 2
-        ORDER BY day, event_type
-        """,
-    )(q_stream_daily_counts)
-
-
-_register_streaming()
-
-
+@register(
+    "q_stream_sessions",
+    oracle=f"""
+    WITH e AS (
+        SELECT user_id, event_id, epoch_us(ts) AS us FROM events
+    ), flagged AS (
+        SELECT user_id, event_id, us,
+               CASE WHEN us - LAG(us) OVER w >= {SESSION_GAP_US}
+                      OR LAG(us) OVER w IS NULL
+                    THEN 1 ELSE 0 END AS new_s
+        FROM e
+        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
+    ), sess AS (
+        SELECT user_id, us,
+               CAST(SUM(new_s) OVER (PARTITION BY user_id
+                                     ORDER BY us, event_id
+                                     ROWS UNBOUNDED PRECEDING)
+                    AS BIGINT) AS session_id
+        FROM flagged
+    )
+    SELECT user_id,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           MIN(us) AS start_us,
+           MAX(us) - MIN(us) AS duration_us
+    FROM sess
+    GROUP BY user_id, session_id
+    ORDER BY user_id, start_us
+    """,
+)
 def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native streaming SESSION windows (the genuinely stateful operator:
     one open merge-able window per active user), oracle-checked against
@@ -259,8 +290,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    _STREAM_RUN_SEQ[0] += 1
-    name = f"stream_sessions_{_STREAM_RUN_SEQ[0]}"
+    name = _sink_name("stream_sessions")
     ckpt = tempfile.mkdtemp(prefix="ckpt_stream_sessions_")
     try:
         ev = events_stream(spark, sf_dir)
@@ -271,44 +301,116 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.orderBy("user_id", "start_us")
 
 
-def _register_streaming_sessions() -> None:
-    from columnar_estimator_sample_spark.registry import register
+@register(
+    "q_stream_sliding_value",
+    oracle=f"""
+    WITH e AS (
+        SELECT epoch_us(ts) AS us, value FROM events
+    ), w AS (
+        SELECT (us // {SLIDE_US}) * {SLIDE_US} AS ws, value FROM e
+        UNION ALL
+        SELECT (us // {SLIDE_US}) * {SLIDE_US} - {SLIDE_US} AS ws,
+               value FROM e
+    )
+    SELECT CAST(ws // 1000000 AS BIGINT) AS win_start_s,
+           COUNT(*) AS n_events,
+           {sql_dsum("value", "total_value", 6)}
+    FROM w
+    GROUP BY 1
+    ORDER BY win_start_s
+    """,
+)
+def q_stream_sliding_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked SLIDING-window aggregation (1 h window / 30 min slide
+    — each event lands in exactly window/slide = 2 overlapping windows),
+    drained availableNow and oracle-checked against DuckDB's explicit
+    two-slot replay: Spark assigns event t to epoch-aligned starts
+    {floor(t/30min)·30min, that − 30min}, which the oracle reproduces
+    with a UNION ALL of the two slot expressions. Completes the §2.8
+    window matrix (tumbling, sliding, session).
 
-    gap_us = 30 * 60 * 1_000_000  # session_window('30 minutes')
-    register(
-        "q_stream_sessions",
-        oracle=f"""
-        WITH e AS (
-            SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-        ), flagged AS (
-            SELECT user_id, event_id, us,
-                   CASE WHEN us - LAG(us) OVER w >= {gap_us}
-                          OR LAG(us) OVER w IS NULL
-                        THEN 1 ELSE 0 END AS new_s
-            FROM e
-            WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-        ), sess AS (
-            SELECT user_id, us,
-                   CAST(SUM(new_s) OVER (PARTITION BY user_id
-                                         ORDER BY us, event_id
-                                         ROWS UNBOUNDED PRECEDING)
-                        AS BIGINT) AS session_id
-            FROM flagged
-        )
-        SELECT user_id,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               MIN(us) AS start_us,
-               MAX(us) - MIN(us) AS duration_us
-        FROM sess
-        GROUP BY user_id, session_id
-        ORDER BY user_id, start_us
-        """,
-    )(q_stream_sessions)
+    Scale: state is O(in-flight windows) = 2× the tumbling count; the
+    decimal sum is the same exact-arithmetic dsum as the batch tier."""
+    import shutil
+    import tempfile
+
+    name = _sink_name("stream_sliding")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_sliding_")
+    try:
+        ev = events_stream(spark, sf_dir)
+        res = run_to_completion(sliding_value_stream(ev), ckpt, name,
+                                mode="complete")
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return res.orderBy("win_start_s")
 
 
-_register_streaming_sessions()
+@register(
+    "q_stream_attribution",
+    oracle="""
+    WITH e AS (
+        SELECT user_id, event_id, event_type, epoch_us(ts) AS us
+        FROM events
+    )
+    SELECT v.user_id AS user_id,
+           v.event_id AS view_id,
+           c.event_id AS click_id,
+           c.us - v.us AS lag_us
+    FROM e v
+    JOIN e c ON v.user_id = c.user_id
+            AND c.us >= v.us AND c.us <= v.us + 600000000
+    WHERE v.event_type = 'view' AND c.event_type = 'click'
+    ORDER BY user_id, view_id, click_id
+    """,
+)
+def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked STREAM-STREAM inner join (the fourth streaming
+    operator class after windows, sessions, and dedup state): attribute
+    each click to the same user's views within the preceding 10 minutes.
+    The joined pair SET is deterministic (every qualifying pair is
+    emitted exactly once regardless of arrival interleaving), so the
+    batch self-join oracle certifies the whole path: two file streams,
+    per-side watermarks, the time-range condition Spark derives the
+    state-eviction bound from, availableNow drain, append sink.
+
+    Scale: join state is bounded by the watermark + range horizon —
+    a buffered view is dropped once the click watermark passes
+    ``view.ts + 10 min``; the equi-key (user_id) keeps the join
+    hash-partitioned, the range predicate only gates within-partition
+    matches."""
+    import shutil
+    import tempfile
+
+    name = _sink_name("stream_attribution")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_attr_")
+    try:
+        ev = events_stream(spark, sf_dir)
+        views = ev.filter(F.col("event_type") == "view")
+        clicks = ev.filter(F.col("event_type") == "click")
+        joined = stream_stream_join(views, clicks, within="10 minutes")
+        sink = run_to_completion(joined, ckpt, name, mode="append")
+        res = (sink.select(F.col("l_user").alias("user_id"),
+                           F.col("l_id").alias("view_id"),
+                           F.col("r_id").alias("click_id"), "lag_us")
+               .orderBy("user_id", "view_id", "click_id"))
+        res = spark.createDataFrame(
+            res.collect(),
+            "user_id long, view_id long, click_id long, lag_us long")
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return res
 
 
+@register(
+    "q_stream_dedup_census",
+    oracle="""
+    SELECT event_type,
+           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+    FROM events
+    GROUP BY event_type
+    ORDER BY event_type
+    """,
+)
 def q_stream_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact deduplication (watermarked ``dropDuplicates``
     state store) drained to a distinct-key census, oracle-checked
@@ -333,8 +435,7 @@ def q_stream_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    _STREAM_RUN_SEQ[0] += 1
-    name = f"stream_dedup_census_{_STREAM_RUN_SEQ[0]}"
+    name = _sink_name("stream_dedup_census")
     ckpt = tempfile.mkdtemp(prefix="ckpt_stream_dedup_")
     try:
         ev = events_stream(spark, sf_dir)
@@ -353,144 +454,6 @@ def q_stream_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return res
-
-
-def q_stream_sliding_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked SLIDING-window aggregation (1 h window / 30 min slide
-    — each event lands in exactly window/slide = 2 overlapping windows),
-    drained availableNow and oracle-checked against DuckDB's explicit
-    two-slot replay: Spark assigns event t to epoch-aligned starts
-    {floor(t/30min)·30min, that − 30min}, which the oracle reproduces
-    with a UNION ALL of the two slot expressions. Completes the §2.8
-    window matrix (tumbling, sliding, session).
-
-    Scale: state is O(in-flight windows) = 2× the tumbling count; the
-    decimal sum is the same exact-arithmetic dsum as the batch tier."""
-    import shutil
-    import tempfile
-
-    _STREAM_RUN_SEQ[0] += 1
-    name = f"stream_sliding_{_STREAM_RUN_SEQ[0]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_sliding_")
-    try:
-        ev = events_stream(spark, sf_dir)
-        res = run_to_completion(sliding_value_stream(ev), ckpt, name,
-                                mode="complete")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return res.orderBy("win_start_s")
-
-
-def _register_streaming_sliding() -> None:
-    from columnar_estimator_sample_spark.functions.exact import sql_dsum
-    from columnar_estimator_sample_spark.registry import register
-
-    slide_us = 30 * 60 * 1_000_000
-    register(
-        "q_stream_sliding_value",
-        oracle=f"""
-        WITH e AS (
-            SELECT epoch_us(ts) AS us, value FROM events
-        ), w AS (
-            SELECT (us // {slide_us}) * {slide_us} AS ws, value FROM e
-            UNION ALL
-            SELECT (us // {slide_us}) * {slide_us} - {slide_us} AS ws,
-                   value FROM e
-        )
-        SELECT CAST(ws // 1000000 AS BIGINT) AS win_start_s,
-               COUNT(*) AS n_events,
-               {sql_dsum("value", "total_value", 6)}
-        FROM w
-        GROUP BY 1
-        ORDER BY win_start_s
-        """,
-    )(q_stream_sliding_value)
-
-
-_register_streaming_sliding()
-
-
-def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked STREAM-STREAM inner join (the fourth streaming
-    operator class after windows, sessions, and dedup state): attribute
-    each click to the same user's views within the preceding 10 minutes.
-    The joined pair SET is deterministic (every qualifying pair is
-    emitted exactly once regardless of arrival interleaving), so the
-    batch self-join oracle certifies the whole path: two file streams,
-    per-side watermarks, the time-range condition Spark derives the
-    state-eviction bound from, availableNow drain, append sink.
-
-    Scale: join state is bounded by the watermark + range horizon —
-    a buffered view is dropped once the click watermark passes
-    ``view.ts + 10 min``; the equi-key (user_id) keeps the join
-    hash-partitioned, the range predicate only gates within-partition
-    matches."""
-    import shutil
-    import tempfile
-
-    _STREAM_RUN_SEQ[0] += 1
-    name = f"stream_attribution_{_STREAM_RUN_SEQ[0]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_attr_")
-    try:
-        ev = events_stream(spark, sf_dir)
-        views = ev.filter(F.col("event_type") == "view")
-        clicks = ev.filter(F.col("event_type") == "click")
-        joined = stream_stream_join(views, clicks, within="10 minutes")
-        sink = run_to_completion(joined, ckpt, name, mode="append")
-        res = (sink.select(F.col("l_user").alias("user_id"),
-                           F.col("l_id").alias("view_id"),
-                           F.col("r_id").alias("click_id"), "lag_us")
-               .orderBy("user_id", "view_id", "click_id"))
-        res = spark.createDataFrame(
-            res.collect(),
-            "user_id long, view_id long, click_id long, lag_us long")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return res
-
-
-def _register_streaming_attribution() -> None:
-    from columnar_estimator_sample_spark.registry import register
-
-    register(
-        "q_stream_attribution",
-        oracle="""
-        WITH e AS (
-            SELECT user_id, event_id, event_type, epoch_us(ts) AS us
-            FROM events
-        )
-        SELECT v.user_id AS user_id,
-               v.event_id AS view_id,
-               c.event_id AS click_id,
-               c.us - v.us AS lag_us
-        FROM e v
-        JOIN e c ON v.user_id = c.user_id
-                AND c.us >= v.us AND c.us <= v.us + 600000000
-        WHERE v.event_type = 'view' AND c.event_type = 'click'
-        ORDER BY user_id, view_id, click_id
-        """,
-    )(q_stream_attribution)
-
-
-_register_streaming_attribution()
-
-
-def _register_streaming_dedup() -> None:
-    from columnar_estimator_sample_spark.registry import register
-
-    register(
-        "q_stream_dedup_census",
-        oracle="""
-        SELECT event_type,
-               CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        FROM events
-        GROUP BY event_type
-        ORDER BY event_type
-        """,
-    )(q_stream_dedup_census)
-
-
-_register_streaming_dedup()
 
 
 # ---------------------------------------------------------------------------
@@ -544,6 +507,18 @@ def foreach_batch_parquet_sink(stream_df: DataFrame, out_dir: str,
     q.awaitTermination()
 
 
+@register(
+    "q_stream_landing_census",
+    oracle=f"""
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct_ids,
+           {sql_dsum("value", "total_value", 6)}
+    FROM events
+    GROUP BY event_type
+    ORDER BY event_type
+    """,
+)
 def q_stream_landing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end drive of the production landing path: the events
     stream drains through :func:`foreach_batch_parquet_sink` (epoch-
@@ -584,22 +559,3 @@ def q_stream_landing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def _register_streaming_landing() -> None:
-    from columnar_estimator_sample_spark.functions.exact import sql_dsum
-    from columnar_estimator_sample_spark.registry import register
-
-    register(
-        "q_stream_landing_census",
-        oracle=f"""
-        SELECT event_type,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct_ids,
-               {sql_dsum("value", "total_value", 6)}
-        FROM events
-        GROUP BY event_type
-        ORDER BY event_type
-        """,
-    )(q_stream_landing_census)
-
-
-_register_streaming_landing()

@@ -437,11 +437,11 @@ class TestDsirExport:
                          .collect())
             assert got == want
             assert len(got) == C.DSIR_K
-            # memo: second invocation returns the same table name
-            key = (spark.sparkContext.applicationId, sf_dir)
-            name = C._DSIR_EXPORT_MEMO[key]
+            # memo: a second invocation reads the same landed files (a
+            # second landing would write to a fresh scratch directory)
             again = C.dsir_export_table(spark, sf_dir)
-            assert C._DSIR_EXPORT_MEMO[key] == name
+            assert sorted(again.inputFiles()) == \
+                sorted(landed.inputFiles())
             assert sorted(tuple(r) for r in again
                           .select("doc_id", "lang", "score_ppm",
                                   "n_chars").collect()) == want

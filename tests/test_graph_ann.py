@@ -60,7 +60,7 @@ class TestConnectedComponents:
 
 
 class TestIvfAnn:
-    def test_ivf_nlist_tracks_corpus_size(self, sf_dir):
+    def test_ivf_nlist_tracks_corpus_size(self, spark, sf_dir):
         """NLIST ~ sqrt(N) (the FAISS rule, r10 100x-sweep finding made
         behavior in r11): pinned at the 16 floor at every gate/bench
         scale — so the static {IVF_NLIST}-embedding oracle strings stay
@@ -84,7 +84,7 @@ class TestIvfAnn:
             assert k >= prev and k <= max(n, IVF_NLIST)
             prev = k
         # the footer-derived value for the test sf_dir is the floor
-        assert ivf_nlist_for(sf_dir) == IVF_NLIST
+        assert ivf_nlist_for(spark, sf_dir) == IVF_NLIST
 
     def test_ivf_prunes_candidates(self, spark, sf_dir):
         from columnar_estimator_sample_spark.operators.similarity import (
@@ -247,7 +247,7 @@ class TestIvfIncremental:
         idx = ivf_incremental_index(spark, sf_dir)
         got = sorted((r["vec_id"], r["centroid_id"], r["phase"])
                      for r in idx.collect())
-        nlist = ivf_nlist_for(sf_dir)
+        nlist = ivf_nlist_for(spark, sf_dir)
         thr = inc_batch_threshold(sf_dir)
         ex = _exploded(table(spark, sf_dir, "embeddings"))
         cex = (ex.filter(F.col("vec_id") < nlist)
@@ -272,7 +272,7 @@ class TestIvfIncremental:
         )
         from columnar_estimator_sample_spark.sources.tables import table
         thr = inc_batch_threshold(sf_dir)
-        nlist = ivf_nlist_for(sf_dir)
+        nlist = ivf_nlist_for(spark, sf_dir)
         ex = _exploded(table(spark, sf_dir, "embeddings"))
         cex = (ex.filter(F.col("vec_id") < nlist)
                .select(F.col("vec_id").alias("centroid_id"), "i",
@@ -300,8 +300,7 @@ class TestIvfIncremental:
         identical rows, shrink to one file per non-empty bucket, and
         re-point the memo so later reads scan the compacted layout."""
         from columnar_estimator_sample_spark.operators.similarity import (
-            _IVF_INC_TABLES, ivf_inc_compact, ivf_incremental_index,
-            ivf_nlist_for,
+            ivf_inc_compact, ivf_incremental_index, ivf_nlist_for,
         )
         idx = ivf_incremental_index(spark, sf_dir)
         before = sorted(tuple(r) for r in idx.collect())
@@ -309,14 +308,13 @@ class TestIvfIncremental:
         new = ivf_inc_compact(spark, sf_dir)
         after = sorted(tuple(r) for r in new.collect())
         assert after == before
-        nlist = ivf_nlist_for(sf_dir)
+        nlist = ivf_nlist_for(spark, sf_dir)
         files_after = len(new.inputFiles())
         assert files_after <= nlist
         # base CTAS + batch append each write their own bucket files,
         # so compaction must strictly shrink the listing
         assert files_after < files_before
-        key = (spark.sparkContext.applicationId, sf_dir)
-        assert _IVF_INC_TABLES[key] is new
+        assert ivf_incremental_index(spark, sf_dir) is new
         # and the maintained-census plan still rides the bucketing
         from columnar_estimator_sample_spark.operators.similarity import (
             q_ann_ivf_incremental,

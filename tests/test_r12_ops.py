@@ -186,14 +186,15 @@ class TestAdaptiveWinnowCap:
 
     def test_census_memo_probes_once(self, spark, sf_dir):
         from columnar_estimator_sample_spark.operators.dedup import (
-            _DIGEST_CENSUS_MEMO, digest_census,
+            digest_census,
         )
+        from columnar_estimator_sample_spark.sources import tables
         a = digest_census(spark, sf_dir)
-        key = (spark.sparkContext.applicationId, sf_dir)
-        _DIGEST_CENSUS_MEMO[key] = ("sentinel", "sentinel")
-        assert digest_census(spark, sf_dir) == ("sentinel", "sentinel")
-        _DIGEST_CENSUS_MEMO[key] = a
-        assert digest_census(spark, sf_dir) == a
+        # a second probe would build a new tuple; the memo returns the
+        # stored one
+        assert digest_census(spark, sf_dir) is a
+        assert tables.memo(spark, ("digest_census", sf_dir),
+                           lambda: ("sentinel", "sentinel")) is a
 
 
 class TestWinnowLaneProperty:

@@ -240,20 +240,24 @@ class TestCLI:
 
 def test_reset_handles_clears_registered_memos(spark, sf_dir):
     """reset_handles() is the single cache-invalidation point: it must
-    clear the operator-level per-session memos (IVF / ER / set-join)
-    alongside the table handles, so a test that rewrites a testdata
-    table in place never sees a stale checkpointed frame."""
+    drop the operator-level per-session artifacts (IVF / ER) alongside
+    the table handles, so a test that rewrites a testdata table in
+    place never sees a stale checkpointed frame."""
     from columnar_estimator_sample_spark.operators import entity, similarity
     from columnar_estimator_sample_spark.sources import tables
 
-    tables.table(spark, sf_dir, "nation")
-    similarity._IVF_MEMO[("app", sf_dir)] = ("sentinel",)
-    entity._PAIRS_MEMO[("app", sf_dir)] = "sentinel"
-    assert tables._HANDLES and similarity._IVF_MEMO and entity._PAIRS_MEMO
     tables.reset_handles()
-    assert not tables._HANDLES
-    assert not similarity._IVF_MEMO
-    assert not entity._PAIRS_MEMO
+    nation = tables.table(spark, sf_dir, "nation")
+    # the operators read their artifacts from the store
+    tables.memo(spark, ("ivf_cells", sf_dir), lambda: "sentinel")
+    tables.memo(spark, ("er_pairs", sf_dir), lambda: "sentinel")
+    assert similarity._ivf_cells(spark, sf_dir) == "sentinel"
+    assert entity.er_matched_pairs(spark, sf_dir) == "sentinel"
+    tables.reset_handles()
+    assert tables.table(spark, sf_dir, "nation") is not nation
+    assert tables.memo(spark, ("ivf_cells", sf_dir), lambda: "new") == "new"
+    assert tables.memo(spark, ("er_pairs", sf_dir), lambda: "new") == "new"
+    tables.reset_handles()
 
 
 def test_reset_handles_sweeps_registered_tempdirs(spark, sf_dir):

@@ -348,7 +348,7 @@ class TestStreamAnnIngestReplay:
             drained = ann_ingest_stream(spark, sf)
             before = sorted(tuple(r) for r in drained.collect())
             # rebuild the drain's epoch-0 assignment and re-land it
-            nlist = ivf_nlist_for(sf)
+            nlist = ivf_nlist_for(spark, sf)
             thr = inc_batch_threshold(sf)
             ex = _exploded(table(spark, sf, "embeddings"))
             cex = (ex.filter(F.col("vec_id") < nlist)
@@ -361,15 +361,7 @@ class TestStreamAnnIngestReplay:
             # deterministic table name (other tests create their own
             # ivf_ings_* tables in the shared session — picking the
             # first listTables() match grabbed a stale one mid-suite)
-            import hashlib
-            import os
-            import re
-            tag = re.sub(
-                r"[^0-9A-Za-z]+", "_",
-                os.path.basename(sf.rstrip("/")) + "_"
-                + hashlib.md5(sf.encode()).hexdigest()[:8] + "_"
-                + spark.sparkContext.applicationId)
-            name = f"ivf_ings_{tag}"
+            name = f"ivf_ings_{tables.table_tag(spark, sf)}"
             prev = spark.conf.get(
                 "spark.sql.sources.partitionOverwriteMode", None)
             spark.conf.set(

@@ -134,13 +134,10 @@ class TestDataSource:
 
 
 class TestTFRecordStreamSource:
-    import pytest as _pytest
-
-    @_pytest.mark.parametrize("reader", ["partitioned", "simple"])
-    def test_count_offsets_rejected(self, tmp_path, reader):
+    def test_count_offsets_rejected(self, tmp_path):
         """Offsets are explicit seen-file lists, {"files": [...]}. An
         offset in the old {"files_seen": n} count form can only come from
-        a checkpoint on disk; both readers refuse it with a ValueError
+        a checkpoint on disk; the reader refuses it with a ValueError
         that names the expected form instead of replaying a guess."""
         import os
 
@@ -155,23 +152,16 @@ class TestTFRecordStreamSource:
         schema = StructType([StructField("a", LongType())])
         listed = {"files": [os.path.join(d, "part-00000.tfrecord")]}
         count = {"files_seen": 1}
-        if reader == "simple":
-            r = tfr.TFRecordStreamReader(schema, {"path": d})
-            calls = [lambda: r.read(count),
-                     lambda: r.readBetweenOffsets(count, listed),
-                     lambda: r.readBetweenOffsets({"files": []}, count)]
-        else:
-            r = tfr.TFRecordPartitionedStreamReader(schema, {"path": d})
-            calls = [lambda: r.partitions(count, listed),
-                     lambda: r.partitions({"files": []}, count)]
+        r = tfr.TFRecordPartitionedStreamReader(schema, {"path": d})
+        calls = [lambda: r.partitions(count, listed),
+                 lambda: r.partitions({"files": []}, count)]
         for call in calls:
             with pytest.raises(ValueError, match='"files"'):
                 call()
 
-    @_pytest.mark.parametrize("reader", ["partitioned", "simple"])
     def test_incremental_shards_across_restart(self, spark, sf_dir,
-                                               tmp_path, reader):
-        """Offset bookkeeping of the simpleStreamReader: drain a 2-shard
+                                               tmp_path):
+        """Offset bookkeeping of the stream reader: drain a 2-shard
         directory, add 2 more shards, restart from the SAME checkpoint —
         the second drain must deliver ONLY the new shards (no re-read,
         no loss), i.e. the landing-queue pickup semantics."""
@@ -201,8 +191,7 @@ class TestTFRecordStreamSource:
                 foreach_batch_parquet_sink,
             )
             stream = (spark.readStream.format("tfrecord_example")
-                      .schema(schema).option("path", d)
-                      .option("reader", reader).load())
+                      .schema(schema).option("path", d).load())
             # memory sinks refuse checkpoint recovery; the exactly-once
             # parquet sink is the restartable drain
             foreach_batch_parquet_sink(stream, out, ckpt)

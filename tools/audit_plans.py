@@ -119,7 +119,7 @@ BUILD_RUNS_JOBS = {
     "q_funnel_latency", "q_purchase_intervals", "q_rfm_segments",
     "q_first_order_predictiveness", "q_curriculum_schedule",
     # r9: the IVF family shares one lazily-checkpointed coarse
-    # assignment (similarity._IVF_MEMO); whichever builds first
+    # assignment (similarity._ivf_cells); whichever builds first
     # materializes it (r10: q_ann_ivf_topk also writes the bucketed
     # assignment tables once per session)
     "q_ann_ivf_topk", "q_ann_ivf_pq_topk", "q_ann_ivf_pq_residual",
@@ -133,12 +133,12 @@ BUILD_RUNS_JOBS = {
     # (r12: the trajectory is memoized and shared with the whiten apply)
     "q_embed_pca", "q_embed_whiten",
     # r10: the LM-score consumers share one lazily-checkpointed
-    # doc_lm_scores frame (textstats._LM_SCORES_MEMO)
+    # doc_lm_scores frame (textstats.doc_lm_scores)
     "q_doc_lm_score", "q_ccnet_tiers", "q_token_budget_pack",
     "q_quality_cascade", "q_quality_ensemble",
     "q_pretrain_mix_pipeline",
     # r10: the ExactSubstr family shares one lazily-checkpointed anchor
-    # frame (dedup._EXACTSUBSTR_ANCHORS_MEMO)
+    # frame (dedup.exactsubstr_anchors_table)
     "q_dedup_exactsubstr", "q_dedup_exactsubstr_savings",
     "q_dedup_exactsubstr_apply", "q_dedup_exactsubstr_keepfirst",
     # r9: fanout's partition probe on the post-contraction frame
@@ -211,7 +211,7 @@ COLLECT_ALLOWED = {
     "q_mmr_rerank_scaled": "|Q|*S shortlist + S^2 pair sims (config "
                            "S=25; SQ8-lane candidates, same bound)",
     "q_embed_pca": "dim^2 Gram frame (4096 rows, corpus-independent)",
-    "q_embed_whiten": "dim^2 Gram frame (shared _PCA_MEMO trajectory)",
+    "q_embed_whiten": "dim^2 Gram frame (shared _pca_eigvec trajectory)",
     # dogfood instrumentation: the profiled/estimated run IS the point
     "q_cbo_estimation": "per-operator metric rows of ONE profiled plan",
     "q_cbo_actuals": "same bound (projection of q_cbo_estimation)",
