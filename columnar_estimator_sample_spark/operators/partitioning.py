@@ -44,12 +44,18 @@ def bucketed_ctas(spark: SparkSession, name: str, df: DataFrame,
     bucketing (e.g. the corpus export: partitioned by lang for partition
     pruning, bucketed by doc_id for exchange-free downstream joins) —
     the bucketed scan still reports hash(bucket_col) output
-    partitioning across partitions, so the join elision survives."""
+    partitioning across partitions, so the join elision survives. A
+    partitioned table carries the table option
+    ``partitionOverwriteMode=dynamic``: an overwrite ``insertInto``
+    (the streaming ingests' epoch landing) replaces only the partitions
+    it writes, without touching the session conf — ``insertInto``
+    honours the table option, not a per-write ``.option``."""
     w = (df.write.mode("overwrite")
          .bucketBy(n_buckets, bucket_col)
          .sortBy(bucket_col))
     if partition_by is not None:
-        w = w.partitionBy(partition_by)
+        w = (w.partitionBy(partition_by)
+             .option("partitionOverwriteMode", "dynamic"))
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(name)

@@ -198,37 +198,82 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load ``events`` with nanosecond-timestamp handling.
+    """Load ``events`` with nanosecond-timestamp handling (see
+    :func:`_decode_events`)."""
+    return _decode_events(
+        spark, lambda: spark.read.parquet(f"{sf_dir}/events.parquet"))
+
+
+def table_stream(spark: SparkSession, sf_dir: str, name: str,
+                 files_per_trigger: int = 1) -> DataFrame:
+    """Table ``name`` as a file stream, ``files_per_trigger`` parquet
+    files per micro-batch — 1 pins per-file batches for tests; the
+    registered corpus drains pass streaming/corpus.py's
+    ``STREAM_FILES_PER_TRIGGER``, the measured knee on many-part
+    corpora, where per-file batches are pure trigger overhead.
+    ``events`` arrives decoded exactly as :func:`events_table` returns
+    it.
+
+    The schema is read once per session (a file stream needs it up
+    front; the read would otherwise run at every streaming build)."""
+    import os
+
+    path = f"{sf_dir}/{name}.parquet"
+
+    def load() -> DataFrame:
+        schema = memo(spark, ("stream_schema", sf_dir, name),
+                      lambda: spark.read.parquet(path).schema)
+        reader = (spark.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", files_per_trigger))
+        if os.path.isdir(path):
+            # Spark-written layout ({name}.parquet is a DIRECTORY of
+            # part-* files, e.g. the gen_scale benchdata dirs and the
+            # sf1/sf10 mirrors): stream the directory itself — a
+            # leaf-name glob would match no part file and silently
+            # stream zero rows (r6: every streaming query returned empty
+            # on multi-file scale dirs; r12: the corpus streams drained
+            # 0 rows on every generated scale factor)
+            return reader.parquet(path)
+        # driver layout: one flat file per table in sf_dir; file streams
+        # take a directory, pathGlobFilter selects the table
+        return (reader.option("pathGlobFilter", f"{name}.parquet")
+                .parquet(sf_dir))
+    return _decode_events(spark, load) if name == "events" else load()
+
+
+def _decode_events(spark: SparkSession,
+                   load: Callable[[], DataFrame]) -> DataFrame:
+    """The events frame ``load()`` returns (batch read or file stream),
+    with nanosecond-timestamp handling.
 
     The events parquet stores ``ts`` as INT64 TIMESTAMP(NANOS), which
     Spark's parquet reader rejects outright; with the legacy flag it
-    surfaces as a raw int64 nanosecond count — which we keep, deriving
-    ``us`` (epoch microseconds, ``ts div 1000``, matching DuckDB's
-    truncation to TIMESTAMP) and a µs-precision ``ts`` restated as the
-    original wall-clock instant. Working in integer µs keeps every
-    downstream computation exact and independent of the session timezone
-    (the reference stores trace times the same way — raw int64 µs,
-    /root/reference/README.md:93,107).
+    surfaces as a raw int64 nanosecond count — which we keep as
+    ``ts_ns``, deriving ``us`` (epoch microseconds, ``ts div 1000``,
+    matching DuckDB's truncation to TIMESTAMP). Working in integer µs
+    keeps every downstream computation exact and independent of the
+    session timezone (the reference stores trace times the same way —
+    raw int64 µs, the reference's README.md:93,107). µs/ms files arrive
+    as a timestamp type directly and only gain ``us``.
 
     The session timezone is pinned to UTC here for the same reason the
     nanos flag is: downstream queries convert µs -> timestamp -> date
-    (timestamp_micros/to_date), and those conversions read the SESSION
-    timezone while the DuckDB oracles' epoch arithmetic is timezone-free.
-    Under a plain session on a non-UTC machine, 15+ timeseries queries
-    silently shift day boundaries (measured: TZ=America/New_York flips
+    (timestamp_micros/to_date, streaming window()), and those
+    conversions read the SESSION timezone while the DuckDB oracles'
+    epoch arithmetic is timezone-free. Under a plain session on a
+    non-UTC machine, 15+ timeseries queries silently shift day
+    boundaries (measured: TZ=America/New_York flips
     q_rate_anomaly/q_ewma/q_ols_trend/... red). Pinning at the single
     funnel every events read goes through makes the whole tier
     environment-independent — in any session, any host timezone.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = load()
     if dict(df.dtypes).get("ts") == "bigint":
-        df = (df.withColumnRenamed("ts", "ts_ns")
-              .withColumn("us", F.expr("ts_ns div 1000")))
-    else:  # future-proof: already a timestamp type
-        df = df.withColumn("us", F.unix_micros(F.col("ts").cast("timestamp")))
-    return df
+        return (df.withColumnRenamed("ts", "ts_ns")
+                .withColumn("us", F.expr("ts_ns div 1000")))
+    return df.withColumn("us", F.unix_micros(F.col("ts").cast("timestamp")))
 
 
 def register_views(spark: SparkSession, sf_dir: str,

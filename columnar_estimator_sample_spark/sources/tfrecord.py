@@ -572,12 +572,11 @@ def q_tfrecord_stream_census(spark: SparkSession,
     import tempfile
 
     from columnar_estimator_sample_spark.streaming.windows import (
-        _sink_name, run_to_completion,
+        run_to_completion,
     )
 
     register_tfrecord(spark)
     out = tempfile.mkdtemp(prefix="tfrec_stream_q_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_tfrec_stream_q_")
     try:
         docs = (table(spark, sf_dir, "documents")
                 .filter(F.col("doc_id") < 200)
@@ -591,14 +590,11 @@ def q_tfrecord_stream_census(spark: SparkSession,
                   .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
                        F.sum("n_chars").cast("long").alias("total_chars"),
                        F.min("doc_id").alias("first_doc")))
-        res = run_to_completion(census, ckpt,
-                                _sink_name("tfrec_stream_census"),
-                                mode="complete")
         rows = [(r.lang, r.n_docs, r.total_chars, r.first_doc)
-                for r in res.orderBy("lang").collect()]
+                for r in run_to_completion(census).orderBy("lang")
+                .collect()]
     finally:
         shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "lang string, n_docs long, total_chars long, first_doc long")

@@ -47,34 +47,6 @@ from columnar_estimator_sample_spark.registry import register
 STREAM_FILES_PER_TRIGGER = 32
 
 
-def documents_stream(spark: SparkSession, sf_dir: str,
-                     files_per_trigger: int = 1) -> DataFrame:
-    """The documents table as a file stream (``files_per_trigger``
-    parquet files per micro-batch — 1 pins per-file batches for tests;
-    the registered drains pass {STREAM_FILES_PER_TRIGGER}
-    (:data:`STREAM_FILES_PER_TRIGGER`), the measured knee on many-part
-    corpora, where per-file batches are pure trigger overhead: the 100x
-    mirror drains the cascade in 148 s at 1 file/trigger vs 15 s at
-    32). Handles both layouts: a single
-    ``documents.parquet`` FILE (the driver's testdata) is picked out of
-    ``sf_dir`` by a leaf-name glob; a ``documents.parquet`` DIRECTORY
-    of part files (Spark-written corpora — the sf1/sf10 mirrors) is
-    streamed directly, since its parts are named ``part-*`` and a
-    leaf-name glob would silently match NOTHING (caught in r12: the
-    stream drained 0 rows on every generated scale factor)."""
-    import os
-    static = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    path = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(path):
-        return (spark.readStream.schema(static.schema)
-                .option("maxFilesPerTrigger", files_per_trigger)
-                .parquet(path))
-    return (spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir))
-
-
 def _gated(docs: DataFrame) -> DataFrame:
     toks = F.split("text", " ")
     sw = F.array([F.lit(s) for s in STOPWORDS])
@@ -90,20 +62,11 @@ def _gated(docs: DataFrame) -> DataFrame:
 
 def corpus_ingest_stream(docs: DataFrame) -> DataFrame:
     """Quality gate -> streaming exact dedup -> per-language running
-    admission counts (complete-mode aggregation)."""
-    admitted = (_gated(docs)
-                .withColumn("digest", F.md5("text"))
-                .dropDuplicates(["digest", "lang"]))
-    return (admitted.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n_admitted"),
-                 F.sum("n_tokens").alias("admitted_tokens")))
-
-
-def corpus_ingest_batch(docs: DataFrame) -> DataFrame:
-    """Batch twin of :func:`corpus_ingest_stream` for parity testing.
-    The dedup key is (digest, lang): every non-key output column is a
-    function of the key, so WHICH physical row survives is immaterial
-    and stream/batch results match regardless of arrival order."""
+    admission counts (complete-mode aggregation); the same function runs
+    on a static frame as its batch twin. The dedup key is (digest,
+    lang): every non-key output column is a function of the key, so
+    WHICH physical row survives is immaterial and stream/batch results
+    match regardless of arrival order."""
     admitted = (_gated(docs)
                 .withColumn("digest", F.md5("text"))
                 .dropDuplicates(["digest", "lang"]))
@@ -175,13 +138,13 @@ def quality_cascade_stream(spark: SparkSession, sf_dir: str,
     the batch; the ledger is their exact integer sum. This is the
     production shape too: foreachBatch into an idempotent upsert of the
     admission-ledger table."""
-    import shutil
-    import tempfile
     from collections import defaultdict
 
     from columnar_estimator_sample_spark.operators.textstats import (
         bigram_lm_model,
     )
+    from columnar_estimator_sample_spark.sources.tables import table_stream
+    from columnar_estimator_sample_spark.streaming.windows import drain
 
     model = bigram_lm_model(spark, sf_dir)
     # keyed by epoch id, not appended: a streaming retry re-runs the
@@ -203,18 +166,9 @@ def quality_cascade_stream(spark: SparkSession, sf_dir: str,
                 .collect())
         partials[int(epoch_id)] = rows
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_cascade_")
-    src = (documents_stream(spark, sf_dir, files_per_trigger)
+    src = (table_stream(spark, sf_dir, "documents", files_per_trigger)
            if docs_stream is None else docs_stream)
-    try:
-        q = (src
-             .writeStream.foreachBatch(score_batch)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain(src.writeStream.foreachBatch(score_batch))
     acc: dict = defaultdict(lambda: [0, 0])
     for rows in partials.values():
         for r in rows:
@@ -264,24 +218,6 @@ def q_stream_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def embeddings_stream(spark: SparkSession, sf_dir: str,
-                      files_per_trigger: int = 1) -> DataFrame:
-    """The embeddings table as a file stream — same dual-layout
-    handling as :func:`documents_stream` (single file via leaf glob,
-    Spark-written directory streamed directly)."""
-    import os
-    static = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isdir(path):
-        return (spark.readStream.schema(static.schema)
-                .option("maxFilesPerTrigger", files_per_trigger)
-                .parquet(path))
-    return (spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .option("pathGlobFilter", "embeddings.parquet")
-            .parquet(sf_dir))
-
-
 def ann_ingest_stream(spark: SparkSession, sf_dir: str,
                       arrivals: DataFrame | None = None,
                       files_per_trigger: int = STREAM_FILES_PER_TRIGGER
@@ -325,7 +261,7 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
         _exploded, _inc_coarse_assign, inc_batch_threshold, ivf_nlist_for,
     )
     from columnar_estimator_sample_spark.sources.tables import (
-        memo, register_tempdir, table, table_tag,
+        memo, register_tempdir, table, table_stream, table_tag,
     )
 
     def build() -> DataFrame:
@@ -359,7 +295,7 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
             _ingest_epoch(_inc_coarse_assign(_exploded(batch), cex, cnorms,
                                              "batch"), name, epoch_id)
 
-        src = (embeddings_stream(spark, sf_dir, files_per_trigger)
+        src = (table_stream(spark, sf_dir, "embeddings", files_per_trigger)
                if arrivals is None else arrivals)
         _epoch_drain(spark, src, ingest_batch, f"ckpt_ann_ingest_{tag}",
                      name)
@@ -370,17 +306,17 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
 def _epoch_drain(spark: SparkSession, src: DataFrame, ingest_batch,
                  ckpt_name: str, table_name: str) -> None:
     """The shared exactly-once maintained-index drain (ann + neardup
-    ingest): run ``src`` through ``foreachBatch(ingest_batch)`` with
+    ingest): :func:`windows.drain` ``src`` through
+    ``foreachBatch(ingest_batch)`` with
 
     * a DETERMINISTIC per-(session, corpus) checkpoint (``ckpt_name``):
       a failed drain leaves it in place so the next invocation RESUMES
       (committed epochs skipped, the uncommitted epoch re-run against
-      its own dynamically-overwritten partition); removed only after
-      clean termination. register_tempdir still sweeps it at
-      interpreter exit if the session dies without ever succeeding;
-    * dynamic partition overwrite set on the PARENT session before the
-      stream starts so the foreachBatch clone inherits it — what makes
-      an epoch replay idempotent — restored afterwards;
+      its own dynamically-overwritten partition — the table carries
+      ``partitionOverwriteMode=dynamic``, see
+      operators/partitioning.bucketed_ctas); removed only after clean
+      termination. register_tempdir still sweeps it at interpreter exit
+      if the session dies without ever succeeding;
     * a final ``refreshTable``: foreachBatch runs in a CLONED session,
       so its insertInto lands on disk but does NOT invalidate the
       parent session's cached file index — without the refresh the
@@ -394,24 +330,11 @@ def _epoch_drain(spark: SparkSession, src: DataFrame, ingest_batch,
     from columnar_estimator_sample_spark.sources.tables import (
         register_tempdir,
     )
+    from columnar_estimator_sample_spark.streaming.windows import drain
     ckpt = register_tempdir(os.path.join(tempfile.gettempdir(),
                                          ckpt_name))
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                               None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        q = (src.writeStream.foreachBatch(ingest_batch)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           prev_mode)
+    drain(src.writeStream.foreachBatch(ingest_batch), ckpt)
+    shutil.rmtree(ckpt, ignore_errors=True)
     spark.catalog.refreshTable(table_name)
 
 
@@ -500,7 +423,7 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
         bucketed_ctas,
     )
     from columnar_estimator_sample_spark.sources.tables import (
-        memo, register_tempdir, table, table_tag,
+        memo, register_tempdir, table, table_stream, table_tag,
     )
 
     def build() -> DataFrame:
@@ -529,7 +452,7 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
                 .withColumn("phase", F.lit("batch")),
                 name, epoch_id)
 
-        src = (documents_stream(spark, sf_dir, files_per_trigger)
+        src = (table_stream(spark, sf_dir, "documents", files_per_trigger)
                if arrivals is None else arrivals)
         _epoch_drain(spark, src, ingest_batch, f"ckpt_neardup_ingest_{tag}",
                      name)

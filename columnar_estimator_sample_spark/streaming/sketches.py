@@ -21,7 +21,7 @@ pins stream == batch on the same builders).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from columnar_estimator_sample_spark.functions.hashing import (
@@ -30,14 +30,6 @@ from columnar_estimator_sample_spark.operators.sketches import (
     CM_D, CM_W, HLL_M, HLL_RHO_CAP)
 
 _A, _B = minhash_params(CM_D, seed=13)  # same family as q_countmin_hh
-
-
-def documents_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    static = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir))
 
 
 def cm_counters(docs: DataFrame) -> DataFrame:
@@ -73,15 +65,3 @@ def hll_registers(docs: DataFrame) -> DataFrame:
                       .alias("r"))
             .groupBy("j").agg(F.max("r").alias("m")))
 
-
-def run_sketch_stream(stream_df: DataFrame, build, ckpt: str) -> DataFrame:
-    """Drain a file stream through a sketch builder with availableNow,
-    returning the final in-memory sketch table."""
-    q = (build(stream_df)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName("sketch_sink")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return stream_df.sparkSession.sql("SELECT * FROM sketch_sink")

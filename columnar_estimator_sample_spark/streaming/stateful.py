@@ -22,57 +22,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from columnar_estimator_sample_spark.registry import register
 
-OUT_SCHEMA = ("user_id long, n_events long, total_value double, "
-              "first_us long, last_us long")
-STATE_SCHEMA = "n long, total double, first_us long, last_us long"
-
-
-def _update_user_totals(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState) -> Iterable[pd.DataFrame]:
-    """Running per-user totals across micro-batches. Emits the UPDATED
-    running row for every batch in which the user appears (an update-mode
-    stream of per-key accumulators)."""
-    if state.exists:
-        n, total, first_us, last_us = state.get
-    else:
-        n, total, first_us, last_us = 0, 0.0, None, None
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        lo = int(pdf["us"].min())
-        hi = int(pdf["us"].max())
-        first_us = lo if first_us is None else min(first_us, lo)
-        last_us = hi if last_us is None else max(last_us, hi)
-    state.update((n, total, first_us, last_us))
-    yield pd.DataFrame([{
-        "user_id": key[0], "n_events": n, "total_value": total,
-        "first_us": first_us, "last_us": last_us,
-    }])
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Stateful running totals per user — the custom-operator shape the
-    built-in windows can't express (state survives across micro-batches,
-    output is the running value, not a window close)."""
-    return (
-        events.select("user_id", "value", "us")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user_totals,
-            outputStructType=OUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Registered query: exact-arithmetic running totals (driver-gated)
-# ---------------------------------------------------------------------------
-
 EXACT_OUT_SCHEMA = ("user_id long, n_events long, total_micros long, "
                     "first_us long, last_us long")
 EXACT_STATE_SCHEMA = "n long, total_micros long, first_us long, last_us long"
@@ -82,11 +31,13 @@ def _update_user_totals_exact(
         key: Tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState) -> Iterable[pd.DataFrame]:
-    """Exact-integer twin of :func:`_update_user_totals`: the running sum
-    is kept in integer MICROS (values are 6-decimal fixed point across
-    the engine, see functions/exact.dsum), so accumulation is order-free
-    — a float running sum would depend on the per-batch row order the
-    state-store shuffle happens to produce, which no oracle can pin."""
+    """Running per-user totals across micro-batches. Emits the UPDATED
+    running row for every batch in which the user appears (an update-mode
+    stream of per-key accumulators). The running sum is kept in integer
+    MICROS (values are 6-decimal fixed point across the engine, see
+    functions/exact.dsum), so accumulation is order-free — a float
+    running sum would depend on the per-batch row order the state-store
+    shuffle happens to produce, which no oracle can pin."""
     if state.exists:
         n, total_micros, first_us, last_us = state.get
     else:
@@ -108,7 +59,9 @@ def _update_user_totals_exact(
 
 def running_user_totals_exact(events: DataFrame) -> DataFrame:
     """Integer-exact stateful running totals per user (registered as
-    q_stream_user_totals)."""
+    q_stream_user_totals) — the custom-operator shape the built-in
+    windows can't express (state survives across micro-batches, output
+    is the running value, not a window close)."""
     return (
         events.select("user_id", "value", "us")
         .groupBy("user_id")
@@ -149,31 +102,21 @@ def q_stream_user_totals(spark, sf_dir: str) -> DataFrame:
 
     Scale: state is O(active users) small tuples, partitioned by key
     across executors; Arrow batch transfer per (key, micro-batch)."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from columnar_estimator_sample_spark.streaming.windows import (
-        _sink_name, events_stream, run_to_completion,
+        events_stream, run_to_completion,
     )
 
-    name = _sink_name("stream_user_totals")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_totals_")
-    try:
-        ev = events_stream(spark, sf_dir)
-        sink = run_to_completion(running_user_totals_exact(ev), ckpt,
-                                 name, mode="update")
-        final = (sink.groupBy("user_id")
-                 .agg(F.max(F.struct("n_events", "total_micros",
-                                     "first_us", "last_us")).alias("m"))
-                 .select("user_id", "m.n_events", "m.total_micros",
-                         "m.first_us", "m.last_us")
-                 .orderBy("user_id"))
-        res = spark.createDataFrame(final.collect(), EXACT_OUT_SCHEMA)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return res
+    sink = run_to_completion(
+        running_user_totals_exact(events_stream(spark, sf_dir)), "update")
+    final = (sink.groupBy("user_id")
+             .agg(F.max(F.struct("n_events", "total_micros",
+                                 "first_us", "last_us")).alias("m"))
+             .select("user_id", "m.n_events", "m.total_micros",
+                     "m.first_us", "m.last_us")
+             .orderBy("user_id"))
+    return spark.createDataFrame(final.collect(), EXACT_OUT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -253,12 +196,9 @@ def first_seen_census(events: DataFrame) -> DataFrame:
     """Per-user (event_type, first_us, running n) via
     ``transformWithStateInPandas``. Requires Python protobuf at runtime
     (see :func:`transform_with_state_available`) and the RocksDB state
-    store provider on the session:
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
+    store provider on the session
+    (``spark.sql.streaming.stateStore.providerClass`` =
+    ``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``).
     """
     if not transform_with_state_available():
         raise NotImplementedError(

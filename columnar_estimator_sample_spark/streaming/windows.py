@@ -22,8 +22,10 @@ import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from columnar_estimator_sample_spark.functions.exact import dsum, sql_dsum
+from columnar_estimator_sample_spark.sources import tables
 from columnar_estimator_sample_spark.registry import register
 
 US_PER_DAY = 86_400_000_000
@@ -31,11 +33,10 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # session_window('30 minutes')
 SLIDE_US = 30 * 60 * 1_000_000  # q_stream_sliding_value's 30 min slide
 
 
-def events_stream(spark: SparkSession, sf_dir: str,
-                  max_files_per_trigger: int | None = None) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file stream (one parquet file = one
-    micro-batch unit). Restates nanosecond ``ts`` as a timestamp for
-    watermarking, plus integer ``us`` for exact arithmetic.
+    micro-batch unit, decoded by :func:`tables.table_stream`), with
+    ``ts`` restated from integer ``us`` as a timestamp for watermarking.
 
     Replay caveat: the gen_scale benchdata dirs replay N key-shifted
     copies of the SAME time range as successive micro-batches, so the
@@ -46,37 +47,7 @@ def events_stream(spark: SparkSession, sf_dir: str,
     checked at sf1, 10 micro-batches); the driver's single-file layout
     drains everything in one batch, so every oracle comparison is
     exact."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # same UTC pin as sources/tables.events_table: window()/date math
-    # read the SESSION timezone, the oracles' epoch arithmetic is
-    # timezone-free — a plain session on a non-UTC host would shift
-    # every day boundary
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    import os
-
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
-    reader = (spark.readStream.schema(static.schema)
-              .option("maxFilesPerTrigger", max_files_per_trigger or 1))
-    if os.path.isdir(f"{sf_dir}/events.parquet"):
-        # Spark-written layout (events.parquet is a DIRECTORY of part
-        # files, e.g. the gen_scale benchdata dirs): stream the directory
-        # itself — a pathGlobFilter of "events.parquet" would match no
-        # leaf file and silently stream zero rows (r6 bug: every
-        # streaming query returned empty on multi-file scale dirs)
-        df = reader.parquet(f"{sf_dir}/events.parquet")
-    else:
-        # driver layout: one flat file per table in sf_dir; file streams
-        # take a directory, pathGlobFilter selects the table
-        df = reader.option("pathGlobFilter", "events.parquet")\
-            .parquet(sf_dir)
-    # Same two physical encodings as the batch loader (sources/tables.py):
-    # TIMESTAMP(NANOS) surfaces as bigint under nanosAsLong; µs/ms files
-    # arrive as a timestamp type directly.
-    if dict(static.dtypes).get("ts") == "bigint":
-        return (df.withColumnRenamed("ts", "ts_ns")
-                .withColumn("us", F.expr("ts_ns div 1000"))
-                .withColumn("ts", F.timestamp_micros(F.col("us"))))
-    return (df.withColumn("us", F.unix_micros(F.col("ts").cast("timestamp")))
+    return (tables.table_stream(spark, sf_dir, "events")
             .withColumn("ts", F.timestamp_micros(F.col("us"))))
 
 
@@ -168,31 +139,29 @@ def stream_stream_join(left: DataFrame, right: DataFrame,
              .alias("lag_us"))
 
 
-def run_to_completion(stream_df: DataFrame, checkpoint_dir: str,
-                      out_table: str, mode: str = "complete") -> DataFrame:
-    """Drain the stream deterministically with availableNow into a memory
-    sink table; returns the result as a DataFrame. Used by tests to prove
-    stream/batch parity. ``mode``: "complete" for aggregations, "append"
-    for row streams (dedup)."""
-    q = (stream_df.writeStream
-         .format("memory")
-         .queryName(out_table)
-         .outputMode(mode)
-         .option("checkpointLocation", checkpoint_dir)
+def drain(writer: DataStreamWriter, checkpoint_dir: str | None = None
+          ) -> None:
+    """Run ``writer`` to completion with the availableNow trigger: every
+    file present at start is drained in deterministic micro-batches and
+    the query terminates. ``checkpoint_dir`` persists progress across
+    calls (exactly-once restarts); without one a temporary checkpoint is
+    used and removed afterwards — the sink holds the rows, the
+    checkpoint is only needed while the stream runs, so don't leak a
+    /tmp dir per call."""
+    import shutil
+    import tempfile
+
+    ckpt = (tempfile.mkdtemp(prefix="ckpt_stream_")
+            if checkpoint_dir is None else checkpoint_dir)
+    try:
+        (writer.option("checkpointLocation", ckpt)
          .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    return spark.table(out_table)
+         .start()
+         .awaitTermination())
+    finally:
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
-
-# --------------------------------------------------------------------------
-# Registered streaming query (round 5): the first streaming entry in the
-# driver registry, and it carries a FULL SQL oracle — because the stream
-# is proven equal to its batch twin, the batch twin's oracle verifies the
-# STREAMING execution path end to end (file-stream source, watermark,
-# windowed state store, availableNow drain, memory sink).
-# --------------------------------------------------------------------------
 
 _SINK_SEQ = itertools.count(1)
 
@@ -203,6 +172,27 @@ def _sink_name(prefix: str) -> str:
     (``next`` on an ``itertools.count`` is atomic)."""
     return f"{prefix}_{next(_SINK_SEQ)}"
 
+
+def run_to_completion(stream_df: DataFrame, mode: str = "complete",
+                      checkpoint_dir: str | None = None) -> DataFrame:
+    """:func:`drain` the stream into a fresh memory sink table and
+    return that table — how the registered queries and the stream/batch
+    parity tests run a stream. ``mode``: "complete" for aggregations,
+    "append" for row streams (dedup, joins), "update" for running
+    state."""
+    name = _sink_name("stream")
+    drain(stream_df.writeStream.format("memory").queryName(name)
+          .outputMode(mode), checkpoint_dir)
+    return stream_df.sparkSession.table(name)
+
+
+# --------------------------------------------------------------------------
+# Registered streaming query (round 5): the first streaming entry in the
+# driver registry, and it carries a FULL SQL oracle — because the stream
+# is proven equal to its batch twin, the batch twin's oracle verifies the
+# STREAMING execution path end to end (file-stream source, watermark,
+# windowed state store, availableNow drain, memory sink).
+# --------------------------------------------------------------------------
 
 @register(
     "q_stream_daily_counts",
@@ -229,20 +219,9 @@ def q_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the memory sink is the test/driver harness — production uses
     foreachBatch into the partitioned parquet writer (sources/io.py)
     with exactly-once via checkpoint + idempotent epoch overwrite."""
-    import shutil
-    import tempfile
-
-    name = _sink_name("stream_daily_counts")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_daily_")
-    try:
-        ev = events_stream(spark, sf_dir)
-        res = run_to_completion(daily_counts_stream(ev), ckpt, name,
-                                mode="complete")
-    finally:
-        # the drained memory sink holds the rows; the checkpoint is only
-        # needed while the stream runs — don't leak a /tmp dir per call
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return res.orderBy("day", "event_type")
+    return (run_to_completion(daily_counts_stream(events_stream(spark,
+                                                                sf_dir)))
+            .orderBy("day", "event_type"))
 
 
 @register(
@@ -287,18 +266,8 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is O(active users) open windows, merged and closed by
     the watermark; the memory sink is the harness, production drains via
     foreachBatch."""
-    import shutil
-    import tempfile
-
-    name = _sink_name("stream_sessions")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_sessions_")
-    try:
-        ev = events_stream(spark, sf_dir)
-        res = run_to_completion(session_stream(ev), ckpt, name,
-                                mode="complete")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return res.orderBy("user_id", "start_us")
+    return (run_to_completion(session_stream(events_stream(spark, sf_dir)))
+            .orderBy("user_id", "start_us"))
 
 
 @register(
@@ -331,18 +300,9 @@ def q_stream_sliding_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is O(in-flight windows) = 2× the tumbling count; the
     decimal sum is the same exact-arithmetic dsum as the batch tier."""
-    import shutil
-    import tempfile
-
-    name = _sink_name("stream_sliding")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_sliding_")
-    try:
-        ev = events_stream(spark, sf_dir)
-        res = run_to_completion(sliding_value_stream(ev), ckpt, name,
-                                mode="complete")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return res.orderBy("win_start_s")
+    return (run_to_completion(sliding_value_stream(events_stream(spark,
+                                                                 sf_dir)))
+            .orderBy("win_start_s"))
 
 
 @register(
@@ -378,27 +338,18 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``view.ts + 10 min``; the equi-key (user_id) keeps the join
     hash-partitioned, the range predicate only gates within-partition
     matches."""
-    import shutil
-    import tempfile
-
-    name = _sink_name("stream_attribution")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_attr_")
-    try:
-        ev = events_stream(spark, sf_dir)
-        views = ev.filter(F.col("event_type") == "view")
-        clicks = ev.filter(F.col("event_type") == "click")
-        joined = stream_stream_join(views, clicks, within="10 minutes")
-        sink = run_to_completion(joined, ckpt, name, mode="append")
-        res = (sink.select(F.col("l_user").alias("user_id"),
-                           F.col("l_id").alias("view_id"),
-                           F.col("r_id").alias("click_id"), "lag_us")
-               .orderBy("user_id", "view_id", "click_id"))
-        res = spark.createDataFrame(
-            res.collect(),
-            "user_id long, view_id long, click_id long, lag_us long")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return res
+    ev = events_stream(spark, sf_dir)
+    views = ev.filter(F.col("event_type") == "view")
+    clicks = ev.filter(F.col("event_type") == "click")
+    joined = stream_stream_join(views, clicks, within="10 minutes")
+    res = (run_to_completion(joined, "append")
+           .select(F.col("l_user").alias("user_id"),
+                   F.col("l_id").alias("view_id"),
+                   F.col("r_id").alias("click_id"), "lag_us")
+           .orderBy("user_id", "view_id", "click_id"))
+    return spark.createDataFrame(
+        res.collect(),
+        "user_id long, view_id long, click_id long, lag_us long")
 
 
 @register(
@@ -432,28 +383,18 @@ def q_stream_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is O(distinct in-horizon keys); production swaps the
     memory sink for foreachBatch into the idempotent parquet writer."""
-    import shutil
-    import tempfile
-
-    name = _sink_name("stream_dedup_census")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_dedup_")
-    try:
-        ev = events_stream(spark, sf_dir)
-        keys = (ev.select("user_id", "event_type", "ts")
-                .withWatermark("ts", "1 day")
-                .dropDuplicates(["user_id", "event_type"])
-                .select("user_id", "event_type"))
-        sink = run_to_completion(keys, ckpt, name, mode="append")
-        # the sink is materialized (memory sink holds rows); the census
-        # below is a plain batch aggregate over the drained key set
-        res = (sink.groupBy("event_type")
-               .agg(F.count(F.lit(1)).cast("long").alias("n_users"))
-               .orderBy("event_type"))
-        res = spark.createDataFrame(res.collect(),
-                                    "event_type string, n_users long")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return res
+    keys = (events_stream(spark, sf_dir)
+            .select("user_id", "event_type", "ts")
+            .withWatermark("ts", "1 day")
+            .dropDuplicates(["user_id", "event_type"])
+            .select("user_id", "event_type"))
+    # the sink is materialized (memory sink holds rows); the census
+    # below is a plain batch aggregate over the drained key set
+    res = (run_to_completion(keys, "append").groupBy("event_type")
+           .agg(F.count(F.lit(1)).cast("long").alias("n_users"))
+           .orderBy("event_type"))
+    return spark.createDataFrame(res.collect(),
+                                 "event_type string, n_users long")
 
 
 # ---------------------------------------------------------------------------
@@ -499,12 +440,7 @@ def foreach_batch_parquet_sink(stream_df: DataFrame, out_dir: str,
             raise RuntimeError(
                 f"injected crash after writing epoch {batch_id}")
 
-    q = (stream_df.writeStream
-         .foreachBatch(write_batch)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    drain(stream_df.writeStream.foreachBatch(write_batch), checkpoint_dir)
 
 
 @register(

@@ -6,23 +6,18 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 
-def test_running_user_totals_converges_to_batch(spark, sf_dir, tmp_path):
+def test_running_user_totals_converges_to_batch(spark, sf_dir):
     from columnar_estimator_sample_spark.streaming.stateful import (
-        running_user_totals,
+        running_user_totals_exact,
     )
     from columnar_estimator_sample_spark.streaming.windows import (
-        events_stream,
+        events_stream, run_to_completion,
     )
     from columnar_estimator_sample_spark.sources.tables import table
 
-    stream = running_user_totals(events_stream(spark, sf_dir))
-    q = (stream.writeStream.format("memory").queryName("user_totals")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    got_df = run_to_completion(
+        running_user_totals_exact(events_stream(spark, sf_dir)), "update")
     # update mode: keep the LAST emitted row per user
-    got_df = spark.table("user_totals")
     last = (got_df.groupBy("user_id")
             .agg(F.max("n_events").alias("n_events"),
                  F.max("last_us").alias("last_us"),

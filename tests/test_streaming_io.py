@@ -15,19 +15,14 @@ import pyspark.sql.types as T
 import pytest
 
 
-@pytest.fixture()
-def ckpt(tmp_path):
-    return str(tmp_path / "ckpt")
-
-
 class TestStreaming:
-    def test_daily_counts_matches_batch(self, spark, sf_dir, ckpt):
+    def test_daily_counts_matches_batch(self, spark, sf_dir):
         from columnar_estimator_sample_spark.registry import queries
         from columnar_estimator_sample_spark.streaming.windows import (
             daily_counts_stream, events_stream, run_to_completion,
         )
         stream = daily_counts_stream(events_stream(spark, sf_dir))
-        got = run_to_completion(stream, ckpt, "stream_daily")
+        got = run_to_completion(stream)
         batch = queries()["q_time_buckets"](spark, sf_dir)
         s = {(r["day"], r["event_type"]): (r["n_events"], r["total_value"])
              for r in got.collect()}
@@ -35,20 +30,18 @@ class TestStreaming:
              for r in batch.collect()}
         assert s == b
 
-    def test_session_stream_total_events(self, spark, sf_dir, ckpt):
+    def test_session_stream_total_events(self, spark, sf_dir):
         from columnar_estimator_sample_spark.streaming.windows import (
             events_stream, run_to_completion, session_stream,
         )
         got = run_to_completion(
-            session_stream(events_stream(spark, sf_dir)), ckpt,
-            "stream_sessions")
+            session_stream(events_stream(spark, sf_dir)))
         # session windows partition all events: totals must be preserved
         n = got.agg(F.sum("n_events")).collect()[0][0]
         from columnar_estimator_sample_spark.sources.tables import table
         assert n == table(spark, sf_dir, "events").count()
 
-    def test_session_stream_matches_batch_sessionize(self, spark, sf_dir,
-                                                     ckpt):
+    def test_session_stream_matches_batch_sessionize(self, spark, sf_dir):
         """session_window(gap) must produce the same (start_us, n_events)
         session set as the batch gaps-and-islands implementation."""
         from columnar_estimator_sample_spark.registry import queries
@@ -56,8 +49,7 @@ class TestStreaming:
             events_stream, run_to_completion, session_stream,
         )
         got = run_to_completion(
-            session_stream(events_stream(spark, sf_dir)), ckpt,
-            "stream_sessions_parity")
+            session_stream(events_stream(spark, sf_dir)))
         s = sorted((r["user_id"], r["start_us"], r["n_events"],
                     r["duration_us"]) for r in got.collect())
         b = sorted((r["user_id"], r["start_us"], r["n_events"],
@@ -82,13 +74,12 @@ class TestStreaming:
                            .alias("n_users")).collect())
         assert got == want and len(got) > 0
 
-    def test_dedup_stream(self, spark, sf_dir, ckpt):
+    def test_dedup_stream(self, spark, sf_dir):
         from columnar_estimator_sample_spark.streaming.windows import (
             dedup_stream, events_stream, run_to_completion,
         )
         got = run_to_completion(
-            dedup_stream(events_stream(spark, sf_dir)), ckpt,
-            "stream_dedup", mode="append")
+            dedup_stream(events_stream(spark, sf_dir)), "append")
         from columnar_estimator_sample_spark.sources.tables import table
         n_src = table(spark, sf_dir, "events").count()
         assert got.count() == n_src  # event_ids are unique in testdata
@@ -196,8 +187,7 @@ class TestOrc:
 
 
 class TestStreamStreamJoin:
-    def test_view_click_attribution_matches_batch(self, spark, sf_dir,
-                                                  ckpt):
+    def test_view_click_attribution_matches_batch(self, spark, sf_dir):
         from columnar_estimator_sample_spark.streaming.windows import (
             events_stream, run_to_completion, stream_stream_join,
         )
@@ -205,7 +195,7 @@ class TestStreamStreamJoin:
         views = ev.filter(F.col("event_type") == "view")
         clicks = ev.filter(F.col("event_type") == "click")
         joined = stream_stream_join(views, clicks, within="10 minutes")
-        got = run_to_completion(joined, ckpt, "ssj_out", mode="append")
+        got = run_to_completion(joined, "append")
 
         # batch twin: same predicate on the static table
         from columnar_estimator_sample_spark.sources.tables import table
@@ -229,17 +219,19 @@ class TestStreamStreamJoin:
 
 
 class TestStreamingCorpus:
-    def test_corpus_ingest_matches_batch(self, spark, sf_dir, ckpt):
+    def test_corpus_ingest_matches_batch(self, spark, sf_dir):
+        from columnar_estimator_sample_spark.sources.tables import (
+            table_stream,
+        )
         from columnar_estimator_sample_spark.streaming.corpus import (
-            corpus_ingest_batch, corpus_ingest_stream, documents_stream,
+            corpus_ingest_stream,
         )
         from columnar_estimator_sample_spark.streaming.windows import (
             run_to_completion,
         )
         got = run_to_completion(
-            corpus_ingest_stream(documents_stream(spark, sf_dir)),
-            ckpt, "corpus_ingest", mode="complete")
-        want = corpus_ingest_batch(
+            corpus_ingest_stream(table_stream(spark, sf_dir, "documents")))
+        want = corpus_ingest_stream(
             spark.read.parquet(f"{sf_dir}/documents.parquet"))
         g = {tuple(r) for r in got.collect()}
         w = {tuple(r) for r in want.collect()}
@@ -362,20 +354,13 @@ class TestStreamAnnIngestReplay:
             # ivf_ings_* tables in the shared session — picking the
             # first listTables() match grabbed a stale one mid-suite)
             name = f"ivf_ings_{tables.table_tag(spark, sf)}"
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", None)
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                _ingest_epoch(replay, name, 0)
-                _ingest_epoch(replay, name, 0)  # replay of the replay
-            finally:
-                if prev is None:
-                    spark.conf.unset(
-                        "spark.sql.sources.partitionOverwriteMode")
-                else:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", prev)
+            # the table itself carries dynamic partition overwrite: the
+            # session conf is neither needed nor changed
+            mode_key = "spark.sql.sources.partitionOverwriteMode"
+            conf_before = spark.conf.get(mode_key, None)
+            _ingest_epoch(replay, name, 0)
+            _ingest_epoch(replay, name, 0)  # replay of the replay
+            assert spark.conf.get(mode_key, None) == conf_before
             spark.catalog.refreshTable(name)
             after = sorted(
                 tuple(r) for r in
@@ -534,30 +519,46 @@ class TestCompaction:
 
 
 class TestStreamingSketches:
-    def test_cm_counters_stream_equals_batch(self, spark, sf_dir, ckpt):
+    @pytest.mark.parametrize("layout", ["file", "directory"])
+    def test_cm_counters_stream_equals_batch(self, spark, sf_dir, tmp_path,
+                                             layout):
+        """Both on-disk layouts: the driver's flat documents.parquet
+        file and a Spark-written documents.parquet directory of 3 part
+        files (one micro-batch each)."""
+        from columnar_estimator_sample_spark.sources.tables import (
+            table_stream)
         from columnar_estimator_sample_spark.streaming.sketches import (
-            cm_counters, documents_file_stream, run_sketch_stream)
+            cm_counters)
+        from columnar_estimator_sample_spark.streaming.windows import (
+            run_to_completion)
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        src = sf_dir
+        if layout == "directory":
+            src = str(tmp_path)
+            docs.repartition(3).write.parquet(f"{src}/documents.parquet")
         batch = {(r.row, r.bucket): r.cnt for r in
-                 cm_counters(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-                 .collect()}
+                 cm_counters(docs).collect()}
         streamed = {(r.row, r.bucket): r.cnt for r in
-                    run_sketch_stream(documents_file_stream(spark, sf_dir),
-                                      cm_counters, ckpt).collect()}
+                    run_to_completion(cm_counters(
+                        table_stream(spark, src, "documents"))).collect()}
         assert streamed == batch
-        spark.catalog.dropTempView("sketch_sink")
 
-    def test_hll_registers_stream_equals_batch(self, spark, sf_dir, ckpt):
+    def test_hll_registers_stream_equals_batch(self, spark, sf_dir):
+        from columnar_estimator_sample_spark.sources.tables import (
+            table_stream)
         from columnar_estimator_sample_spark.streaming.sketches import (
-            documents_file_stream, hll_registers, run_sketch_stream)
+            hll_registers)
+        from columnar_estimator_sample_spark.streaming.windows import (
+            run_to_completion)
         batch = {r.j: r.m for r in
                  hll_registers(
                      spark.read.parquet(f"{sf_dir}/documents.parquet"))
                  .collect()}
         streamed = {r.j: r.m for r in
-                    run_sketch_stream(documents_file_stream(spark, sf_dir),
-                                      hll_registers, ckpt).collect()}
+                    run_to_completion(hll_registers(
+                        table_stream(spark, sf_dir, "documents")))
+                    .collect()}
         assert streamed == batch
-        spark.catalog.dropTempView("sketch_sink")
 
 
 class TestWriteAuditPublish:
@@ -662,8 +663,8 @@ class TestRocksDBStateStore:
         try:
             ev = events_stream(spark, sf_dir)
             got = run_to_completion(
-                daily_counts_stream(ev), str(tmp_path / "ckpt"),
-                "rocksdb_daily", mode="complete")
+                daily_counts_stream(ev),
+                checkpoint_dir=str(tmp_path / "ckpt"))
             g = sorted((r.day, r.event_type, r.n_events,
                         round(r.total_value, 6))
                        for r in got.collect())
