@@ -35,16 +35,6 @@ def sql_h64(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def hash_bucket(col: Column, n_buckets: int) -> Column:
-    """Feature-hash a string into ``n_buckets`` (trainer.py:264 semantics:
-    bucket count = NDV * 5, assignment = hash(value) mod buckets)."""
-    return (h64(col) % F.lit(n_buckets)).alias("bucket")
-
-
-def sql_hash_bucket(expr: str, n_buckets: int) -> str:
-    return f"({sql_h64(expr)} % {n_buckets})"
-
-
 def minhash_params(k: int, seed: int = 7) -> tuple[list[int], list[int]]:
     """Deterministic (a, b) coefficient lists for k universal hash
     functions h_i(x) = (a_i*x + b_i) mod P.  Plain LCG so the oracle SQL

@@ -65,6 +65,8 @@ def build_features(df: DataFrame, label_col: str = "label",
     skew).
 
     Returns (frame with feature columns, feature column names)."""
+    # the reference's transform_row (trainer.py:165-168): drop unused
+    # columns; the label stays in the frame
     df = df.drop(*[c for c in drop if c in df.columns])
     numeric = [f.name for f in df.schema.fields
                if f.dataType.simpleString() in ("float", "double")

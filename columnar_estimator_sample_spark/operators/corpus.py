@@ -2021,28 +2021,20 @@ def dsir_export_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the landing write is K-row, not corpus-sized. The landed table
     name is memoized per (session, sf_dir) — the q_corpus_export
     write-once discipline for the SELECTED mix."""
-    import os
-    import tempfile
-
     from columnar_estimator_sample_spark.operators.partitioning import (
         bucketed_ctas,
     )
-    from columnar_estimator_sample_spark.sources.tables import (
-        register_tempdir, table_tag,
-    )
+    from columnar_estimator_sample_spark.sources.tables import table_tag
 
     def build() -> str:
         docs = table(spark, sf_dir, "documents")
         sel = _dsir_selected(spark, sf_dir, _dsir_bigram_feats(docs))
         name = f"dsir_export_{table_tag(spark, sf_dir)}"
-        base = register_tempdir(
-            tempfile.mkdtemp(prefix="spark-graft-dsir-"))
         bucketed_ctas(
             spark, name,
             sel.join(docs.select("doc_id", "n_chars"), "doc_id")
             .select("doc_id", "lang", "score_ppm", "n_chars"),
-            "doc_id", n_buckets=DSIR_EXPORT_BUCKETS,
-            path=os.path.join(base, "mix"), partition_by="lang")
+            "doc_id", n_buckets=DSIR_EXPORT_BUCKETS, partition_by="lang")
         return name
     return spark.table(memo(spark, ("dsir_export", sf_dir), build))
 

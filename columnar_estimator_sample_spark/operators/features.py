@@ -14,7 +14,7 @@ pick columns by *type*) is :func:`columns_by_type`.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -118,16 +118,6 @@ def q_feature_hash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.countDistinct("c_mktsegment").alias("n_values"))
         .orderBy("bucket")
     )
-
-
-def label_feature_split(df: DataFrame, label: str = "label",
-                        drop: tuple[str, ...] = ("row_hash",)
-                        ) -> tuple[DataFrame, Column]:
-    """The reference's transform_row (trainer.py:165-168): drop unused
-    columns, pop the label. In DataFrame style the 'split' is keeping one
-    frame with a label column — returned as (features_df, label_col)."""
-    kept = df.drop(*[c for c in drop if c in df.columns])
-    return kept.drop(label), F.col(label)
 
 
 def hashed_feature_columns(df: DataFrame, ndv_catalog: dict[str, int],

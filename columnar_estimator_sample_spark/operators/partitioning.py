@@ -29,16 +29,15 @@ from columnar_estimator_sample_spark.registry import register
 
 def bucketed_ctas(spark: SparkSession, name: str, df: DataFrame,
                   bucket_col: str, n_buckets: int = 16,
-                  path: str | None = None,
                   partition_by: str | None = None) -> DataFrame:
     """Persist ``df`` bucketed and sorted by ``bucket_col``. Joins between
     tables bucketed identically on the join key skip both the exchange
     and (with sortBy) the sort.
 
-    ``path`` makes the table EXTERNAL at an explicit location instead of
-    the session warehouse — use it when the caller must not depend on
-    the warehouse directory being writable (e.g. a query materializing
-    under an arbitrary host session).
+    The table is EXTERNAL, landed in a fresh scratch directory from
+    :func:`~columnar_estimator_sample_spark.sources.tables.landing_dir`,
+    so ``sources.tables.reset_handles()`` drops it with the rest of the
+    artifact store.
 
     ``partition_by`` adds a hive-style partition column ON TOP of the
     bucketing (e.g. the corpus export: partitioned by lang for partition
@@ -50,14 +49,18 @@ def bucketed_ctas(spark: SparkSession, name: str, df: DataFrame,
     (the streaming ingests' epoch landing) replaces only the partitions
     it writes, without touching the session conf — ``insertInto``
     honours the table option, not a per-write ``.option``."""
+    from columnar_estimator_sample_spark.sources.tables import landing_dir
+
+    # never the session warehouse: the write must not depend on the HOST
+    # session's warehouse dir being writable (the driver gate runs
+    # queries under its own plain session in an arbitrary cwd)
     w = (df.write.mode("overwrite")
          .bucketBy(n_buckets, bucket_col)
-         .sortBy(bucket_col))
+         .sortBy(bucket_col)
+         .option("path", landing_dir(spark, name)))
     if partition_by is not None:
         w = (w.partitionBy(partition_by)
              .option("partitionOverwriteMode", "dynamic"))
-    if path is not None:
-        w = w.option("path", path)
     w.saveAsTable(name)
     return spark.table(name)
 

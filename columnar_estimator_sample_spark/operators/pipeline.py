@@ -19,8 +19,6 @@ broadcast-sized).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -185,8 +183,6 @@ def corpus_export_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     The landed table name is memoized per (session, sf_dir): the export
     writes ONCE per session (the corpus is deterministic) and the census
     query reads the LANDED table — write-once / read-many."""
-    import tempfile
-
     from columnar_estimator_sample_spark.operators.dedup import (
         exactsubstr_apply, exactsubstr_keepfirst_spans,
     )
@@ -197,7 +193,7 @@ def corpus_export_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_ctas,
     )
     from columnar_estimator_sample_spark.sources.tables import (
-        fanout, register_tempdir, table_tag,
+        fanout, table_tag,
     )
 
     def build() -> str:
@@ -208,14 +204,11 @@ def corpus_export_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         cleaned = exactsubstr_apply(
             kept, spans=exactsubstr_keepfirst_spans(kept))
         name = f"corpus_export_{table_tag(spark, sf_dir)}"
-        base = register_tempdir(
-            tempfile.mkdtemp(prefix="spark-graft-export-"))
         bucketed_ctas(
             spark, name,
             cleaned.filter(F.col("kept_toks") > 0)
             .select("doc_id", "lang", "clean_text"),
-            "doc_id", n_buckets=EXPORT_BUCKETS,
-            path=os.path.join(base, "corpus"), partition_by="lang")
+            "doc_id", n_buckets=EXPORT_BUCKETS, partition_by="lang")
         return name
     return spark.table(memo(spark, ("corpus_export", sf_dir), build))
 

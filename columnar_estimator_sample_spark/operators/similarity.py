@@ -734,13 +734,10 @@ def ivf_bucketed_assignment(spark: SparkSession, sf_dir: str
     This is the IVF inverted file PROMOTED from a per-session checkpoint
     memo to the write-once materialized layer it stands in for
     (SCALE.md §3); the table pair is memoized per (session, sf_dir)."""
-    import tempfile
     from columnar_estimator_sample_spark.operators.partitioning import (
         bucketed_ctas,
     )
-    from columnar_estimator_sample_spark.sources.tables import (
-        register_tempdir, table_tag,
-    )
+    from columnar_estimator_sample_spark.sources.tables import table_tag
 
     def build() -> tuple[DataFrame, DataFrame]:
         tag = table_tag(spark, sf_dir)
@@ -769,19 +766,13 @@ def ivf_bucketed_assignment(spark: SparkSession, sf_dir: str
         probes = (ranked.filter((F.col("vec_id") < N_QUERIES)
                                 & (F.col("rnk") <= IVF_NPROBE))
                   .select(F.col("vec_id").alias("query_id"), "centroid_id"))
-        # explicit external location: the write must not depend on the HOST
-        # session's warehouse dir being writable (the driver gate runs
-        # queries under its own plain session in an arbitrary cwd)
-        base = register_tempdir(tempfile.mkdtemp(prefix="spark-graft-ivf-"))
         # bucket count tracks the cell count
         nlist = ivf_nlist_for(spark, sf_dir)
         return (
             bucketed_ctas(spark, f"ivf_assign_{tag}", assign,
-                          "centroid_id", n_buckets=nlist,
-                          path=os.path.join(base, "assign")),
+                          "centroid_id", n_buckets=nlist),
             bucketed_ctas(spark, f"ivf_probes_{tag}", probes,
-                          "centroid_id", n_buckets=nlist,
-                          path=os.path.join(base, "probes")),
+                          "centroid_id", n_buckets=nlist),
         )
     return memo(spark, ("ivf_tables", sf_dir), build)
 
@@ -865,13 +856,10 @@ def _ivf_inc_entry(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     post-append so a re-invocation in the same session reads the table
     instead of appending the batch twice. A list so that
     :func:`ivf_inc_compact` can re-point it at the compacted table."""
-    import tempfile
     from columnar_estimator_sample_spark.operators.partitioning import (
         bucketed_ctas,
     )
-    from columnar_estimator_sample_spark.sources.tables import (
-        register_tempdir, table_tag,
-    )
+    from columnar_estimator_sample_spark.sources.tables import table_tag
 
     def build() -> list[DataFrame]:
         nlist = ivf_nlist_for(spark, sf_dir)
@@ -883,15 +871,13 @@ def _ivf_inc_entry(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
         cnorms = cex.groupBy("centroid_id").agg(
             F.sum(F.col("ci") * F.col("ci")).alias("nc_s"))
         name = f"ivf_inc_{table_tag(spark, sf_dir)}"
-        base = register_tempdir(
-            tempfile.mkdtemp(prefix="spark-graft-ivfinc-"))
         # the write-once build (production: already on disk when a batch
         # arrives; the 100x probe times ONLY the append step below)
         bucketed_ctas(
             spark, name,
             _inc_coarse_assign(ex.filter(F.col("vec_id") < thr), cex,
                                cnorms, "base"),
-            "centroid_id", n_buckets=nlist, path=os.path.join(base, "idx"))
+            "centroid_id", n_buckets=nlist)
         # the incremental step: the batch filter pushes into the parquet
         # scan (plan-asserted), so this touches O(batch) rows + the NLIST
         # centroid frames, then appends into the bucketed layout
@@ -918,22 +904,17 @@ def ivf_inc_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo re-points, so every later read — censuses, probe joins —
     scans the compacted layout. The FAISS maintenance cycle completed:
     build once -> append arrivals -> compact."""
-    import tempfile
     from columnar_estimator_sample_spark.operators.partitioning import (
         bucketed_ctas,
     )
-    from columnar_estimator_sample_spark.sources.tables import (
-        register_tempdir, table_tag,
-    )
+    from columnar_estimator_sample_spark.sources.tables import table_tag
     entry = _ivf_inc_entry(spark, sf_dir)
     nlist = ivf_nlist_for(spark, sf_dir)
-    base = register_tempdir(tempfile.mkdtemp(prefix="spark-graft-ivfc-"))
     entry[0] = bucketed_ctas(
         spark, f"ivf_inc_g{next(_COMPACTIONS)}_{table_tag(spark, sf_dir)}",
         entry[0].repartition(
             nlist, F.expr(f"pmod(hash(centroid_id), {nlist})")),
-        "centroid_id", n_buckets=nlist,
-        path=os.path.join(base, "idx"))
+        "centroid_id", n_buckets=nlist)
     return entry[0]
 
 

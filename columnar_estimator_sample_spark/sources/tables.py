@@ -19,6 +19,7 @@ from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -45,8 +46,10 @@ T = TypeVar("T")
 # and pin executor blocks — exactly when the handles do.
 #
 # INVALIDATION: :func:`reset_handles` is the ONE invalidation point. It
-# drops every entry at once; a test that rewrites a table in place calls
-# it after writing.
+# drops every entry at once, and every landed table: catalog entry
+# first, then directory, so no ``tableExists`` guard sees a table whose
+# files are gone. A test that rewrites a table in place calls it after
+# writing.
 #
 # CONCURRENCY: a hit is one dict read and takes no lock. A miss takes
 # that key's build lock, so concurrent first calls for one key run the
@@ -60,18 +63,19 @@ _STORE: dict[tuple, object] = {}
 _BUILD_LOCKS: dict[tuple, threading.Lock] = {}
 _LOCK = threading.Lock()  # guards swapping _STORE / _BUILD_LOCKS
 
-# Scratch directories created by materializing operators (the IVF
-# inverted file, the corpus export landing). Each is one mkdtemp per
+# Scratch directories created by materializing operators (every
+# landed table, the ingests' resumable checkpoints). Each is one per
 # (session, sf_dir); without tracking, a long-lived session iterating
 # sf_dirs — exactly the use case reset_handles() serves — would leak a
 # full parquet copy per iteration. reset_handles() removes them with
 # the store entries that point at them; an atexit hook sweeps whatever
 # is left when the interpreter exits.
 _TEMPDIRS: list[str] = []
+_LANDED: list[tuple[SparkSession, str]] = []  # (session, table name)
 
 
 def register_tempdir(path: str) -> str:
-    """Track a mkdtemp scratch dir for removal by :func:`reset_handles`
+    """Track a scratch dir for removal by :func:`reset_handles`
     (and at interpreter exit). Returns ``path`` for one-line use."""
     _TEMPDIRS.append(path)
     return path
@@ -84,6 +88,14 @@ def _sweep_tempdirs() -> None:
 
 
 atexit.register(_sweep_tempdirs)
+
+
+def landing_dir(spark: SparkSession, name: str) -> str:
+    """A fresh scratch directory to land table ``name`` in;
+    :func:`reset_handles` drops the table and removes the directory."""
+    import tempfile
+    _LANDED.append((spark, name))
+    return register_tempdir(tempfile.mkdtemp(prefix="spark-graft-land-"))
 
 
 def memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
@@ -110,13 +122,17 @@ def reset_handles() -> None:
     fresh handles. For tests that rewrite a testdata table in place, and
     as the release hook for long-lived sessions iterating several
     sf_dirs (each artifact otherwise pins its locally-checkpointed
-    blocks for the application lifetime). Scratch dirs the artifacts
-    point at (IVF bucketed tables, the corpus export landing) are
-    removed too — the store was the only live reference to those
-    files."""
+    blocks for the application lifetime). Landed tables are dropped
+    from the catalog and their scratch dirs removed too — the store was
+    the only live reference to those files."""
     global _STORE, _BUILD_LOCKS
     with _LOCK:
         _STORE, _BUILD_LOCKS = {}, {}
+    while _LANDED:
+        spark, name = _LANDED.pop()
+        # a stopped session's catalog is gone with its context
+        if spark.sparkContext._jsc is not None:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
     _sweep_tempdirs()
 
 
@@ -200,8 +216,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load ``events`` with nanosecond-timestamp handling (see
     :func:`_decode_events`)."""
+    path = f"{sf_dir}/events.parquet"
     return _decode_events(
-        spark, lambda: spark.read.parquet(f"{sf_dir}/events.parquet"))
+        spark, lambda: spark.read.schema(_events_schema(spark, path))
+        .parquet(path))
 
 
 def table_stream(spark: SparkSession, sf_dir: str, name: str,
@@ -222,7 +240,9 @@ def table_stream(spark: SparkSession, sf_dir: str, name: str,
 
     def load() -> DataFrame:
         schema = memo(spark, ("stream_schema", sf_dir, name),
-                      lambda: spark.read.parquet(path).schema)
+                      lambda: _events_schema(spark, path)
+                      if name == "events"
+                      else spark.read.parquet(path).schema)
         reader = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", files_per_trigger))
         if os.path.isdir(path):
@@ -241,13 +261,33 @@ def table_stream(spark: SparkSession, sf_dir: str, name: str,
     return _decode_events(spark, load) if name == "events" else load()
 
 
+def _events_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema events are read with. Spark's parquet reader rejects
+    an INT64 TIMESTAMP(NANOS) column unless the read schema declares it
+    ``long``, which surfaces the raw nanosecond count without any
+    session conf. So when the parquet footer (a driver-side metadata
+    read, never a Spark job) stores ``ts`` that way, the schema comes
+    from the footer with ``ts`` as long; otherwise it is Spark's own."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import LongType, StructField
+
+    arrow = ds.dataset(path, format="parquet").schema
+    ts = arrow.field("ts").type
+    if not (pa.types.is_timestamp(ts) and ts.unit == "ns"):
+        return spark.read.parquet(path).schema
+    return StructType([StructField("ts", LongType()) if f.name == "ts"
+                       else f for f in from_arrow_schema(arrow).fields])
+
+
 def _decode_events(spark: SparkSession,
                    load: Callable[[], DataFrame]) -> DataFrame:
     """The events frame ``load()`` returns (batch read or file stream),
     with nanosecond-timestamp handling.
 
-    The events parquet stores ``ts`` as INT64 TIMESTAMP(NANOS), which
-    Spark's parquet reader rejects outright; with the legacy flag it
+    The events parquet stores ``ts`` as INT64 TIMESTAMP(NANOS); read
+    through :func:`_events_schema`'s ``ts long`` schema it
     surfaces as a raw int64 nanosecond count — which we keep as
     ``ts_ns``, deriving ``us`` (epoch microseconds, ``ts div 1000``,
     matching DuckDB's truncation to TIMESTAMP). Working in integer µs
@@ -256,8 +296,8 @@ def _decode_events(spark: SparkSession,
     raw int64 µs, the reference's README.md:93,107). µs/ms files arrive
     as a timestamp type directly and only gain ``us``.
 
-    The session timezone is pinned to UTC here for the same reason the
-    nanos flag is: downstream queries convert µs -> timestamp -> date
+    The session timezone is pinned to UTC here because the
+    downstream queries convert µs -> timestamp -> date
     (timestamp_micros/to_date, streaming window()), and those
     conversions read the SESSION timezone while the DuckDB oracles'
     epoch arithmetic is timezone-free. Under a plain session on a
@@ -267,7 +307,6 @@ def _decode_events(spark: SparkSession,
     funnel every events read goes through makes the whole tier
     environment-independent — in any session, any host timezone.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = load()
     if dict(df.dtypes).get("ts") == "bigint":

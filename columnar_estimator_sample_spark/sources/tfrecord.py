@@ -508,12 +508,13 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame is materialized from the audited read-back rows, so a later
     re-collect cannot re-read the temp files under different conditions.
     """
-    import shutil
     import tempfile
 
     register_tfrecord(spark)
-    out = tempfile.mkdtemp(prefix="tfrec_roundtrip_")
-    try:
+    # the fingerprints force materialization: nothing lazy still reads
+    # the temp files once the directory is removed
+    with tempfile.TemporaryDirectory(prefix="tfrec_roundtrip_",
+                                     ignore_cleanup_errors=True) as out:
         docs = (table(spark, sf_dir, "documents")
                 .filter(F.col("doc_id") < 200)
                 .select("doc_id", "lang", "n_chars"))
@@ -529,10 +530,6 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"wrote {expected} read back {got} (dir {out})")
         result = [(r.lang, r.n_docs, r.total_chars, r.first_doc)
                   for r in got]
-    finally:
-        # fingerprints above force materialization; nothing lazy still
-        # reads the temp files, so reclaim them instead of leaking /tmp
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         result,
         "lang string, n_docs long, total_chars long, first_doc long")
@@ -568,7 +565,6 @@ def q_tfrecord_stream_census(spark: SparkSession,
     shards picked up via the seen-file-list offsets, replayable between
     offsets; see TFRecordPartitionedStreamReader for the seen-list
     caveat."""
-    import shutil
     import tempfile
 
     from columnar_estimator_sample_spark.streaming.windows import (
@@ -576,8 +572,8 @@ def q_tfrecord_stream_census(spark: SparkSession,
     )
 
     register_tfrecord(spark)
-    out = tempfile.mkdtemp(prefix="tfrec_stream_q_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tfrec_stream_q_",
+                                     ignore_cleanup_errors=True) as out:
         docs = (table(spark, sf_dir, "documents")
                 .filter(F.col("doc_id") < 200)
                 .select("doc_id", "lang", "n_chars"))
@@ -593,8 +589,6 @@ def q_tfrecord_stream_census(spark: SparkSession,
         rows = [(r.lang, r.n_docs, r.total_chars, r.first_doc)
                 for r in run_to_completion(census).orderBy("lang")
                 .collect()]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "lang string, n_docs long, total_chars long, first_doc long")

@@ -38,12 +38,12 @@ from columnar_estimator_sample_spark.operators.textstats import _DOC_LM_SQL
 from columnar_estimator_sample_spark.registry import register
 
 
-# Default micro-batch granularity for the REGISTERED drains: the
+# Micro-batch granularity for the REGISTERED drains: the
 # measured knee on the 100x mirror (cascade drain: 148 s at 1
 # file/trigger vs 15.5 s at 32 — per-trigger overhead dominates below
 # it, no further gain above it). Gate corpora are single-file, so the
 # default is behavior-identical there; tests that pin the partial-sum
-# path pass files_per_trigger=1 (or their own source) explicitly.
+# path pass their own one-file-per-trigger source.
 STREAM_FILES_PER_TRIGGER = 32
 
 
@@ -116,17 +116,15 @@ def cascade_signals(docs: DataFrame, model: DataFrame) -> DataFrame:
 
 
 def quality_cascade_stream(spark: SparkSession, sf_dir: str,
-                           docs_stream: DataFrame | None = None,
-                           files_per_trigger: int = STREAM_FILES_PER_TRIGGER
+                           docs_stream: DataFrame | None = None
                            ) -> DataFrame:
     """Drain the documents file stream through the cascade and return
     the landed (lang, verdict) admission ledger as a local frame.
     ``docs_stream`` overrides the source (tests drive a multi-file
     directory through one-file micro-batches to pin the partial-sum
-    path); ``files_per_trigger`` sets the drain granularity of the
-    default source (default :data:`STREAM_FILES_PER_TRIGGER`, the
-    measured knee — the ledger is granularity-invariant because each
-    doc lands in exactly one epoch and partials sum exactly); the LM
+    path); the default source drains :data:`STREAM_FILES_PER_TRIGGER`
+    files per micro-batch — the ledger is granularity-invariant because
+    each doc lands in exactly one epoch and partials sum exactly; the LM
     model always trains on ``sf_dir``'s static corpus.
 
     Shape: the per-doc LM score needs its own keyed aggregation, and a
@@ -166,7 +164,8 @@ def quality_cascade_stream(spark: SparkSession, sf_dir: str,
                 .collect())
         partials[int(epoch_id)] = rows
 
-    src = (table_stream(spark, sf_dir, "documents", files_per_trigger)
+    src = (table_stream(spark, sf_dir, "documents",
+                        STREAM_FILES_PER_TRIGGER)
            if docs_stream is None else docs_stream)
     drain(src.writeStream.foreachBatch(score_batch))
     acc: dict = defaultdict(lambda: [0, 0])
@@ -219,9 +218,7 @@ def q_stream_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ingest_stream(spark: SparkSession, sf_dir: str,
-                      arrivals: DataFrame | None = None,
-                      files_per_trigger: int = STREAM_FILES_PER_TRIGGER
-                      ) -> DataFrame:
+                      arrivals: DataFrame | None = None) -> DataFrame:
     """Maintained IVF inverted file fed by a stream: the base corpus's
     assignment is written once (the warm index), then each micro-batch
     of arriving vectors (vec_id >= the batch threshold — the same
@@ -251,9 +248,6 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
     exchange-free (the corpus-export layout). The drained handle is
     memoized per (session, sf_dir) post-drain, so a re-invocation reads
     the table instead of re-appending arrivals."""
-    import os
-    import tempfile
-
     from columnar_estimator_sample_spark.operators.partitioning import (
         bucketed_ctas,
     )
@@ -261,7 +255,7 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
         _exploded, _inc_coarse_assign, inc_batch_threshold, ivf_nlist_for,
     )
     from columnar_estimator_sample_spark.sources.tables import (
-        memo, register_tempdir, table, table_stream, table_tag,
+        memo, table, table_stream, table_tag,
     )
 
     def build() -> DataFrame:
@@ -280,22 +274,20 @@ def ann_ingest_stream(spark: SparkSession, sf_dir: str,
         # already landed it — rebuilding with overwrite would wipe the
         # committed epochs the resumed checkpoint will not replay
         if not spark.catalog.tableExists(name):
-            base = register_tempdir(
-                tempfile.mkdtemp(prefix="spark-graft-ivfs-"))
             bucketed_ctas(
                 spark, name,
                 _inc_coarse_assign(ex.filter(F.col("vec_id") < thr), cex,
                                    cnorms, "base")
                 .withColumn("epoch", F.lit(-1).cast("long")),
-                "centroid_id", n_buckets=nlist,
-                path=os.path.join(base, "idx"), partition_by="epoch")
+                "centroid_id", n_buckets=nlist, partition_by="epoch")
 
         def ingest_batch(bdf: DataFrame, epoch_id: int) -> None:
             batch = bdf.filter(F.col("vec_id") >= thr)
             _ingest_epoch(_inc_coarse_assign(_exploded(batch), cex, cnorms,
                                              "batch"), name, epoch_id)
 
-        src = (table_stream(spark, sf_dir, "embeddings", files_per_trigger)
+        src = (table_stream(spark, sf_dir, "embeddings",
+                            STREAM_FILES_PER_TRIGGER)
                if arrivals is None else arrivals)
         _epoch_drain(spark, src, ingest_batch, f"ckpt_ann_ingest_{tag}",
                      name)
@@ -390,9 +382,7 @@ def neardup_batch_threshold(sf_dir: str) -> int:
 
 
 def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
-                          arrivals: DataFrame | None = None,
-                          files_per_trigger: int = STREAM_FILES_PER_TRIGGER
-                          ) -> DataFrame:
+                          arrivals: DataFrame | None = None) -> DataFrame:
     """Maintained MinHash-LSH band index fed by a stream: the base
     corpus's bands (doc_id < the batch threshold) are written once as a
     band_key-bucketed table; each micro-batch of arriving documents is
@@ -413,9 +403,6 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
     this table on (band, band_key) with no rescan of history; bucketing
     by band_key keeps that join and the bucket census exchange-free.
     The drained handle is memoized per (session, sf_dir) post-drain."""
-    import os
-    import tempfile
-
     from columnar_estimator_sample_spark.operators.dedup import (
         LSH_BANDS, minhash_bands,
     )
@@ -423,7 +410,7 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
         bucketed_ctas,
     )
     from columnar_estimator_sample_spark.sources.tables import (
-        memo, register_tempdir, table, table_stream, table_tag,
+        memo, table, table_stream, table_tag,
     )
 
     def build() -> DataFrame:
@@ -432,16 +419,13 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
         tag = table_tag(spark, sf_dir)
         name = f"lsh_ings_{tag}"
         if not spark.catalog.tableExists(name):
-            base = register_tempdir(
-                tempfile.mkdtemp(prefix="spark-graft-lsh-"))
             bucketed_ctas(
                 spark, name,
                 minhash_bands(docs.filter(F.col("doc_id") < thr))
                 .withColumn("band", F.col("band").cast("long"))
                 .withColumn("phase", F.lit("base"))
                 .withColumn("epoch", F.lit(-1).cast("long")),
-                "band_key", n_buckets=2 * LSH_BANDS,
-                path=os.path.join(base, "idx"), partition_by="epoch")
+                "band_key", n_buckets=2 * LSH_BANDS, partition_by="epoch")
 
         def ingest_batch(bdf: DataFrame, epoch_id: int) -> None:
             batch = (bdf.filter(F.col("doc_id") >= thr)
@@ -452,7 +436,8 @@ def neardup_ingest_stream(spark: SparkSession, sf_dir: str,
                 .withColumn("phase", F.lit("batch")),
                 name, epoch_id)
 
-        src = (table_stream(spark, sf_dir, "documents", files_per_trigger)
+        src = (table_stream(spark, sf_dir, "documents",
+                            STREAM_FILES_PER_TRIGGER)
                if arrivals is None else arrivals)
         _epoch_drain(spark, src, ingest_batch, f"ckpt_neardup_ingest_{tag}",
                      name)

@@ -51,13 +51,12 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("ts", F.timestamp_micros(F.col("us"))))
 
 
-def daily_counts_stream(events: DataFrame,
-                        watermark: str = "1 day") -> DataFrame:
+def daily_counts_stream(events: DataFrame) -> DataFrame:
     """Watermarked tumbling daily aggregation — the streaming twin of
     q_time_buckets. Late events beyond the watermark are dropped; state
     per (day, event_type) window is evicted once the watermark passes."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"),
              dsum(F.col("value"), "total_value", 6))
@@ -69,14 +68,12 @@ def daily_counts_stream(events: DataFrame,
     )
 
 
-def sliding_value_stream(events: DataFrame,
-                         window: str = "1 hour",
-                         slide: str = "30 minutes") -> DataFrame:
-    """Sliding-window aggregation (each event lands in window/slide
-    overlapping windows)."""
+def sliding_value_stream(events: DataFrame) -> DataFrame:
+    """Sliding-window aggregation (1 hour windows sliding by 30
+    minutes: each event lands in 2 overlapping windows)."""
     return (
         events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", window, slide).alias("w"))
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"),
              dsum(F.col("value"), "total_value", 6))
         .select(F.col("w.start").cast("long").alias("win_start_s"),
@@ -84,14 +81,15 @@ def sliding_value_stream(events: DataFrame,
     )
 
 
-def session_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_stream(events: DataFrame) -> DataFrame:
     """Native session windows (``session_window``): the streaming
     equivalent of the batch gaps-and-islands sessionization
     (operators/events.py::q_sessionize). State = one open window per
     active user, merged/closed by the watermark."""
     return (
         events.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"),
+                 F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.min("us").alias("start_us"),
              (F.max("us") - F.min("us")).alias("duration_us"))
@@ -99,11 +97,11 @@ def session_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def dedup_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup on event_id within the watermark horizon —
     the streaming twin of the batch hash-dedup. State is the id set inside
     the watermark window."""
-    return (events.withWatermark("ts", watermark)
+    return (events.withWatermark("ts", "1 day")
             .dropDuplicates(["event_id"]))
 
 
@@ -148,19 +146,16 @@ def drain(writer: DataStreamWriter, checkpoint_dir: str | None = None
     used and removed afterwards — the sink holds the rows, the
     checkpoint is only needed while the stream runs, so don't leak a
     /tmp dir per call."""
-    import shutil
     import tempfile
 
-    ckpt = (tempfile.mkdtemp(prefix="ckpt_stream_")
-            if checkpoint_dir is None else checkpoint_dir)
-    try:
-        (writer.option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start()
-         .awaitTermination())
-    finally:
-        if checkpoint_dir is None:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    if checkpoint_dir is None:
+        with tempfile.TemporaryDirectory(
+                prefix="ckpt_stream_", ignore_cleanup_errors=True) as ckpt:
+            return drain(writer, ckpt)
+    (writer.option("checkpointLocation", checkpoint_dir)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
 
 
 _SINK_SEQ = itertools.count(1)
@@ -402,7 +397,7 @@ def q_stream_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def foreach_batch_parquet_sink(stream_df: DataFrame, out_dir: str,
-                               checkpoint_dir: str,
+                               checkpoint_dir: str | None,
                                fail_on_batch: "int | None" = None) -> None:
     """The production drain every streaming docstring in this module
     refers to: ``foreachBatch`` into a parquet table partitioned by the
@@ -420,6 +415,7 @@ def foreach_batch_parquet_sink(stream_df: DataFrame, out_dir: str,
     written but BEFORE foreachBatch returns (i.e. before the epoch
     commits) — the worst-case window the overwrite exists for; tests
     restart from the same checkpoint and must see no loss and no dupes.
+    Without a ``checkpoint_dir``, :func:`drain` uses a temporary one.
 
     Scale: this is the standard Spark lakehouse landing pattern; the
     per-epoch directory doubles as the compaction unit
@@ -467,17 +463,13 @@ def q_stream_landing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the sink is the standard lakehouse landing pattern (see
     foreach_batch_parquet_sink); the census is one map-side-partial
     aggregate over the landed files."""
-    import shutil
     import tempfile
 
-    from columnar_estimator_sample_spark.functions.exact import dsum
-
-    out = tempfile.mkdtemp(prefix="land_stream_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_land_stream_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="land_stream_",
+                                     ignore_cleanup_errors=True) as out:
         ev = events_stream(spark, sf_dir).select(
             "event_id", "event_type", "value")
-        foreach_batch_parquet_sink(ev, out, ckpt)
+        foreach_batch_parquet_sink(ev, out, None)
         landed = spark.read.parquet(out)
         res = (landed.groupBy("event_type")
                .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -490,8 +482,5 @@ def q_stream_landing_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_schema = ("event_type string, n_events long, "
                       "n_distinct_ids long, total_value double")
         return spark.createDataFrame(rows, out_schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 

@@ -586,9 +586,6 @@ class TestRound10ApplyOps:
         training text' step — must plan as a SortMergeJoin with ZERO
         exchanges, both sides' partitioning coming from the bucketed
         scans themselves."""
-        import os
-        import tempfile
-
         from columnar_estimator_sample_spark.operators.partitioning import (
             bucketed_ctas,
         )
@@ -598,18 +595,13 @@ class TestRound10ApplyOps:
         from columnar_estimator_sample_spark.operators.textstats import (
             doc_lm_scores,
         )
-        from columnar_estimator_sample_spark.sources.tables import (
-            register_tempdir,
-        )
 
         landed = corpus_export_table(spark, sf_dir)
-        base = register_tempdir(tempfile.mkdtemp(prefix="graft-scores-"))
         scores = bucketed_ctas(
             spark, "test_doc_scores_bucketed",
             doc_lm_scores(spark, sf_dir)
             .select("doc_id", "lm_score_permille"),
-            "doc_id", n_buckets=EXPORT_BUCKETS,
-            path=os.path.join(base, "scores"))
+            "doc_id", n_buckets=EXPORT_BUCKETS)
         j = (landed.hint("merge").join(scores, "doc_id")
              .select("doc_id", "lang", "lm_score_permille"))
         n = j.count()

@@ -148,6 +148,38 @@ def test_reset_rereads_rewritten_trace(spark, tmp_path):
         tables.reset_handles()
 
 
+def test_reset_rebuilds_landed_ingest_tables(spark, sf_dir, tmp_path):
+    """reset_handles() drops each landed table from the catalog, not
+    only its directory: a stale entry made the rebuild skip the base
+    landing and lose every base row."""
+    import os
+    import shutil
+
+    from columnar_estimator_sample_spark.streaming.corpus import (
+        q_stream_ann_ingest, q_stream_neardup_ingest,
+    )
+
+    for t in ("embeddings", "documents"):
+        shutil.copy(os.path.join(sf_dir, f"{t}.parquet"),
+                    tmp_path / f"{t}.parquet")
+    sf = str(tmp_path)
+
+    def run():
+        return [sorted(tuple(r) for r in q(spark, sf).collect())
+                for q in (q_stream_ann_ingest, q_stream_neardup_ingest)]
+
+    tables.reset_handles()
+    try:
+        first = run()
+        tables.reset_handles()
+        stale = spark.catalog.tableExists(
+            f"ivf_ings_{tables.table_tag(spark, sf)}")
+        assert run() == first
+        assert not stale
+    finally:
+        tables.reset_handles()
+
+
 def test_memory_sink_names_unique_across_threads():
     from columnar_estimator_sample_spark.streaming.windows import _sink_name
 

@@ -160,10 +160,8 @@ def test_entry_smoke(spark):
 CONF_LEAK_ALLOWED = {
     # registry._with_conf_pins: the per-query AQE coalescing-floor pins
     "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-    # sources.tables.events_table: the events funnel reads nanosecond
-    # timestamps and needs UTC day boundaries on plain driver sessions
-    # (tests/test_tz_invariance.py)
-    "spark.sql.legacy.parquet.nanosAsLong",
+    # sources.tables.events_table: the events funnel needs UTC day
+    # boundaries on plain driver sessions (tests/test_tz_invariance.py)
     "spark.sql.session.timeZone",
     # plans.stats: the NDV extension's broadcast-table input
     "spark.graft.ndv.broadcastTables",

@@ -561,6 +561,42 @@ class TestStreamingSketches:
         assert streamed == batch
 
 
+class TestNanosecondEvents:
+    def test_nanos_ts_read_without_session_conf(self, spark, tmp_path):
+        """INT64 TIMESTAMP(NANOS) events decode to exact ``ts_ns`` /
+        ``us`` through both the batch and the stream read, and neither
+        read sets the legacy nanos conf."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from columnar_estimator_sample_spark.sources import tables
+        from columnar_estimator_sample_spark.streaming.windows import (
+            run_to_completion)
+        ts_ns = [1704067414839244869, 1704067414839245999,
+                 1704153600000000001]
+        pq.write_table(pa.table({
+            "event_id": pa.array([0, 1, 2], pa.int64()),
+            "ts": pa.array(ts_ns, pa.timestamp("ns")),
+            "user_id": pa.array([7, 7, 9], pa.int64()),
+            "event_type": ["view", "click", "view"],
+            "value": [1.5, 2.0, 3.25],
+        }), tmp_path / "events.parquet")
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        spark.conf.unset(key)
+        sf = str(tmp_path)
+        want = [(t, t // 1000) for t in ts_ns]
+        try:
+            batch = tables.table(spark, sf, "events")
+            streamed = run_to_completion(
+                tables.table_stream(spark, sf, "events"), "append")
+            for df in (batch, streamed):
+                assert sorted(tuple(r) for r in
+                              df.select("ts_ns", "us").collect()) == want
+            assert key not in dict(spark.conf.getAll)
+        finally:
+            tables.reset_handles()
+
+
 class TestWriteAuditPublish:
     def test_failing_audit_blocks_publish(self, spark, sf_dir, tmp_path):
         from columnar_estimator_sample_spark.sources.io import (
