@@ -5,10 +5,13 @@ The reference hard-codes a per-column distinct-value catalog
 physical structures (hash buckets = NDV*5, trainer.py:264). This module is
 the Spark-native generalization:
 
-  * :func:`ndv_catalog` computes the catalog from data with
-    ``approx_count_distinct`` (HyperLogLog++) — one pass, mergeable
-    sketches, the only approach that works at 100 TB (exact distinct for
-    verification at test scale via ``exact=True``).
+  * :func:`ndv_catalog` computes the catalog from data with Spark's
+    built-in DataSketches HLL (``hll_sketch_agg`` /
+    ``hll_sketch_estimate``) at lgConfigK = max(12, ceil(log2((1.04 /
+    rsd)²))), capped at 21 — one pass, mergeable sketches (the binary
+    format ``hll_union_agg`` merges), the only approach that works at
+    100 TB (exact distinct for verification at test scale via
+    ``exact=True``).
   * :func:`analyze_tables` persists column-level stats into the session
     catalog (``ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS``) where
     Catalyst's cost-based optimizer consumes distinctCount/min/max/nulls
@@ -22,23 +25,49 @@ the Spark-native generalization:
 
 from __future__ import annotations
 
+import math
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def ndv_catalog(df: DataFrame, cols: list[str] | None = None,
                 exact: bool = False, rsd: float = 0.02) -> dict[str, int]:
     """Per-column NDV catalog (the ``vocab_size`` dict, computed not
-    hand-maintained). HLL++ sketches by default; exact for tests."""
+    hand-maintained). DataSketches HLL sketches by default, exact for
+    tests. The sketch's relative standard error is 1.04 / sqrt(2^k) for
+    lgConfigK k, so k = ceil(log2((1.04 / rsd)²)) keeps ``rsd`` an upper
+    bound; it is never coarser than the library default of 12 nor
+    finer than the library maximum of 21."""
     cols = cols or df.columns
     if exact:
         aggs = [F.countDistinct(c).alias(c) for c in cols]
     else:
-        aggs = [F.approx_count_distinct(c, rsd).alias(c) for c in cols]
+        k = min(21, max(12, math.ceil(math.log2((1.04 / rsd) ** 2))))
+        aggs = [F.hll_sketch_estimate(F.hll_sketch_agg(
+            _sketchable(df.schema[c].dataType, F.col(c)), k)).alias(c)
+            for c in cols]
     row = df.agg(*aggs).collect()[0]
-    return {c: int(row[c]) for c in cols}
+    return {c: int(row[c] or 0) for c in cols}
+
+
+def _sketchable(dt: T.DataType, col: Column) -> Column:
+    """``col`` as a type ``hll_sketch_agg`` accepts (INT, BIGINT,
+    STRING, BINARY), converted losslessly so that distinct values stay
+    distinct; nulls stay null."""
+    if isinstance(dt, (T.IntegerType, T.LongType, T.StringType,
+                       T.BinaryType)):
+        return col
+    if isinstance(dt, T.TimestampType):
+        # a local-time string repeats in the hour a DST change folds
+        return F.unix_micros(col)
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        # countDistinct counts -0.0 and 0.0 as one value; their
+        # strings differ
+        col = F.when(col == 0, F.lit(0.0)).otherwise(col)
+    return col.cast("string")
 
 
 def hash_bucket_sizes(catalog: dict[str, int],

@@ -42,8 +42,8 @@ _NDV_COLUMNS = [
 )
 def q_ndv_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact NDV catalog over the categorical columns of the testdata —
-    the ground truth that ``plans.stats.ndv_catalog`` (HLL++) estimates
-    and that feeds hash-bucket sizing (NDV*5) and Catalyst CBO."""
+    the exact ground truth that ``plans.stats.ndv_catalog``'s
+    DataSketches HLL sketches estimate."""
     parts = []
     for t, c in _NDV_COLUMNS:
         parts.append(

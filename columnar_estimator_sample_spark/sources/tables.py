@@ -14,11 +14,13 @@ materializes or collects.
 from __future__ import annotations
 
 import atexit
+import os
 import threading
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 TABLES = [
@@ -48,8 +50,8 @@ T = TypeVar("T")
 # INVALIDATION: :func:`reset_handles` is the ONE invalidation point. It
 # drops every entry at once, and every landed table: catalog entry
 # first, then directory, so no ``tableExists`` guard sees a table whose
-# files are gone. A test that rewrites a table in place calls it after
-# writing.
+# files are gone. It stops every live landing too. A test that rewrites
+# a table in place calls it after writing.
 #
 # CONCURRENCY: a hit is one dict read and takes no lock. A miss takes
 # that key's build lock, so concurrent first calls for one key run the
@@ -98,6 +100,42 @@ def landing_dir(spark: SparkSession, name: str) -> str:
     return register_tempdir(tempfile.mkdtemp(prefix="spark-graft-land-"))
 
 
+# LIVE LANDINGS: one running streaming query per checkpoint directory,
+# checkpoint -> (session, sink, query), kept by :func:`live_query` so
+# repeated landings on one checkpoint skip the query start (a new Python
+# source worker and the first trigger). reset_handles() stops them.
+_LIVE: dict[str, tuple[SparkSession, tuple, StreamingQuery]] = {}
+_LIVE_LOCK = threading.Lock()
+
+
+def live_query(spark: SparkSession, checkpoint_dir: str, sink: tuple,
+               start: Callable[[], StreamingQuery]) -> StreamingQuery:
+    """The live query on ``checkpoint_dir`` if it is active and writes
+    to the same ``sink``; otherwise ``start()``'s query, which replaces
+    it and resumes from the checkpoint. Every live query whose
+    checkpoint directory is gone is stopped first."""
+    ckpt = os.path.abspath(checkpoint_dir)
+    with _LIVE_LOCK:
+        for gone in [c for c in _LIVE if not os.path.isdir(c)]:
+            _stop_live(gone)
+        held = _LIVE.get(ckpt)
+        if held is not None and held[1] == sink and held[2].isActive:
+            return held[2]
+        _stop_live(ckpt)
+        query = start()
+        _LIVE[ckpt] = (spark, sink, query)
+        return query
+
+
+def _stop_live(ckpt: str) -> None:
+    """Stop and forget the live query on ``ckpt``, if any; the caller
+    holds ``_LIVE_LOCK``."""
+    held = _LIVE.pop(ckpt, None)
+    # a stopped session's queries are gone with its context
+    if held is not None and held[0].sparkContext._jsc is not None:
+        held[2].stop()
+
+
 def memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
     """The value stored under ``(applicationId, *key)``, running
     ``build()`` on the first call only (see the store's rules above)."""
@@ -122,10 +160,14 @@ def reset_handles() -> None:
     fresh handles. For tests that rewrite a testdata table in place, and
     as the release hook for long-lived sessions iterating several
     sf_dirs (each artifact otherwise pins its locally-checkpointed
-    blocks for the application lifetime). Landed tables are dropped
-    from the catalog and their scratch dirs removed too — the store was
-    the only live reference to those files."""
+    blocks for the application lifetime). Live landings are stopped,
+    and landed tables are dropped from the catalog and their scratch
+    dirs removed too — the store was the only live reference to those
+    files."""
     global _STORE, _BUILD_LOCKS
+    with _LIVE_LOCK:
+        for ckpt in list(_LIVE):
+            _stop_live(ckpt)
     with _LOCK:
         _STORE, _BUILD_LOCKS = {}, {}
     while _LANDED:

@@ -35,7 +35,9 @@ import glob as _glob
 import gzip
 import io
 import os
+import shutil
 import struct
+import uuid
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -316,19 +318,34 @@ class TFRecordReader(DataSourceReader):
 
 
 class TFRecordWriter(DataSourceWriter):
+    """Publishes a write all at once. Tasks write their shards into a
+    hidden sibling staging directory, ``.<name>.<uuid>``, which readers
+    and stream listings skip; :meth:`commit` makes it the path with one
+    ``os.rename`` and :meth:`abort` removes it. A stream over the parent
+    directory therefore never lists a half-written write, and
+    ``overwrite`` replaces every old shard instead of only the ones a
+    new shard's name collides with. Shard names carry the write's id,
+    so an append into an existing path moves each shard in beside the
+    old ones."""
+
     def __init__(self, schema: T.StructType, options: dict, overwrite: bool):
         self.schema = schema
         self.path = options.get("path")
         self.compression = options.get("compression")
+        self.overwrite = overwrite
         if not self.path:
             raise ValueError("tfrecord sink requires a path")
+        self.job = uuid.uuid4().hex
+        parent, name = os.path.split(os.path.abspath(self.path))
+        self.staging = os.path.join(parent, f".{name}.{self.job}")
 
     def write(self, iterator) -> WriterCommitMessage:
         from pyspark import TaskContext
         pid = TaskContext.get().partitionId()
-        os.makedirs(self.path, exist_ok=True)
+        os.makedirs(self.staging, exist_ok=True)
         suffix = ".gz" if self.compression == "gzip" else ""
-        out = os.path.join(self.path, f"part-{pid:05d}.tfrecord{suffix}")
+        out = os.path.join(self.staging,
+                           f"part-{pid:05d}-{self.job}.tfrecord{suffix}")
         fields = self.schema.fields
 
         def payloads():
@@ -348,6 +365,25 @@ class TFRecordWriter(DataSourceWriter):
 
         write_tfrecords(out, payloads(), self.compression)
         return WriterCommitMessage()
+
+    def commit(self, messages) -> None:
+        # a write of zero partitions ran no task: publish an empty dir
+        os.makedirs(self.staging, exist_ok=True)
+        if not os.path.exists(self.path):
+            os.rename(self.staging, self.path)
+        elif self.overwrite:
+            old = f"{self.staging}.old"
+            os.rename(self.path, old)
+            os.rename(self.staging, self.path)
+            shutil.rmtree(old)
+        else:
+            for f in os.listdir(self.staging):
+                os.rename(os.path.join(self.staging, f),
+                          os.path.join(self.path, f))
+            os.rmdir(self.staging)
+
+    def abort(self, messages) -> None:
+        shutil.rmtree(self.staging, ignore_errors=True)
 
 
 def _to_proto_scalar(v: object, dt: T.DataType) -> object:
@@ -396,6 +432,7 @@ class TFRecordPartitionedStreamReader(DataSourceStreamReader):
         self._dir = options.get("path")
         if not self._dir:
             raise ValueError("tfrecord stream source requires a path")
+        self._seen: set[str] = set()
 
     def _files(self) -> list:
         pat = (os.path.join(self._dir, "*")
@@ -406,7 +443,12 @@ class TFRecordPartitionedStreamReader(DataSourceStreamReader):
         return {"files": []}
 
     def latestOffset(self) -> dict:
-        return {"files": self._files()}
+        # never drop a file already offered (FileStreamSource's seen-files
+        # rule): a shrunken offset differs from the committed one, so a
+        # live query would plan a batch for it and write its offset into
+        # a checkpoint that may be gone with the source
+        self._seen.update(self._files())
+        return {"files": sorted(self._seen)}
 
     def partitions(self, start: dict, end: dict):
         new = sorted(_offset_files(end) - _offset_files(start))

@@ -396,6 +396,11 @@ def q_stream_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Production file sink: foreachBatch with exactly-once epoch overwrite
 # ---------------------------------------------------------------------------
 
+#: processing-time trigger of a live landing: the longest a landing
+#: call waits for the next trigger to list its source
+LIVE_TRIGGER = "20 milliseconds"
+
+
 def foreach_batch_parquet_sink(stream_df: DataFrame, out_dir: str,
                                checkpoint_dir: str | None,
                                fail_on_batch: "int | None" = None) -> None:
@@ -411,22 +416,33 @@ def foreach_batch_parquet_sink(stream_df: DataFrame, out_dir: str,
         instead of appending a duplicate — idempotent per epoch, and
         readers never see a torn epoch partition mix of two attempts.
 
+    With a ``checkpoint_dir`` the landing is LIVE: the first call starts
+    one query on a :data:`LIVE_TRIGGER` processing-time trigger, which
+    ``sources.tables.live_query`` keeps running, and every call —
+    that one and each later one on the same checkpoint — returns once
+    everything its source lists has landed. A checkpoint belongs to one
+    stream, so later calls land through the live query whatever frame
+    they pass; a call with another ``out_dir`` or ``fail_on_batch``
+    restarts it from the checkpoint. The query stops at
+    ``reset_handles()``, or at the next landing call once its
+    checkpoint directory is gone. A query that died is replaced by the
+    next call, which resumes from the checkpoint; a call whose query is
+    not active when it returns raises. Without a ``checkpoint_dir`` the
+    call is a one-shot :func:`drain` on a temporary checkpoint.
+
     ``fail_on_batch`` injects a crash AFTER the batch's files are
     written but BEFORE foreachBatch returns (i.e. before the epoch
     commits) — the worst-case window the overwrite exists for; tests
     restart from the same checkpoint and must see no loss and no dupes.
-    Without a ``checkpoint_dir``, :func:`drain` uses a temporary one.
 
     Scale: this is the standard Spark lakehouse landing pattern; the
     per-epoch directory doubles as the compaction unit
     (operators/partitioning.q_compaction_plan) and the write-audit-
     publish staging root (sources/io.py)."""
-    from pyspark.sql import functions as FF
-
     fired = {"armed": fail_on_batch is not None}
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
-        (df.withColumn("epoch", FF.lit(int(batch_id)))
+        (df.withColumn("epoch", F.lit(int(batch_id)))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("epoch")
@@ -436,7 +452,24 @@ def foreach_batch_parquet_sink(stream_df: DataFrame, out_dir: str,
             raise RuntimeError(
                 f"injected crash after writing epoch {batch_id}")
 
-    drain(stream_df.writeStream.foreachBatch(write_batch), checkpoint_dir)
+    if checkpoint_dir is None:
+        drain(stream_df.writeStream.foreachBatch(write_batch))
+        return
+    query = tables.live_query(
+        stream_df.sparkSession, checkpoint_dir, (out_dir, fail_on_batch),
+        lambda: stream_df.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(processingTime=LIVE_TRIGGER).start())
+    # A trigger that listed the source before this call's files existed
+    # can set the no-new-data flag after the first wait cleared it, and
+    # so end that wait early. The second wait ends only on a trigger
+    # that started after the first returned.
+    query.processAllAvailable()
+    query.processAllAvailable()
+    if not query.isActive:
+        raise RuntimeError(
+            f"live landing on {checkpoint_dir} stopped before its "
+            f"source was drained: {query.exception()}")
 
 
 @register(

@@ -650,12 +650,25 @@ class TestStats:
     def test_ndv_catalog_exact_vs_approx(self, spark, sf_dir):
         from columnar_estimator_sample_spark.plans.stats import ndv_catalog
         from columnar_estimator_sample_spark.sources.tables import table
-        cust = table(spark, sf_dir, "customer")
-        exact = ndv_catalog(cust, ["c_mktsegment", "c_nationkey"], exact=True)
-        approx = ndv_catalog(cust, ["c_mktsegment", "c_nationkey"])
+        cust = table(spark, sf_dir, "customer").select(
+            "c_mktsegment", "c_nationkey", "c_acctbal",
+            # hll_sketch_agg itself takes neither doubles nor dates
+            F.date_add(F.lit("2024-01-01").cast("date"),
+                       F.col("c_custkey").cast("int") % 40).alias("day"),
+            F.lit(None).cast("string").alias("all_null"))
+        cols = cust.columns
+        exact = ndv_catalog(cust, cols, exact=True)
+        approx = ndv_catalog(cust, cols)
         assert exact["c_mktsegment"] == 5
-        for c in exact:
-            assert abs(approx[c] - exact[c]) <= max(1, 0.05 * exact[c])
+        assert exact["all_null"] == 0
+        empty = cust.limit(0)
+        inputs = [(exact, approx),
+                  (ndv_catalog(empty, cols, exact=True),
+                   ndv_catalog(empty, cols))]
+        assert set(inputs[1][0].values()) == {0}
+        for ex, ap in inputs:
+            for c in ex:
+                assert abs(ap[c] - ex[c]) <= max(1, 0.05 * ex[c]), c
 
     def test_hash_bucket_sizes(self):
         from columnar_estimator_sample_spark.plans.stats import (

@@ -132,6 +132,33 @@ class TestDataSource:
         assert back.rdd.getNumPartitions() == 4
         assert sorted(r["a"] for r in back.collect()) == [0, 1, 2, 3]
 
+    def test_overwrite_replaces_every_shard(self, spark, tmp_path):
+        """An overwrite with fewer partitions leaves no old shard behind
+        (a shard whose name no new shard reuses used to survive)."""
+        register_tfrecord(spark)
+        out = str(tmp_path / "ow")
+        for n, parts in ((100, 4), (10, 2)):
+            (spark.range(n).repartition(parts).write
+             .format("tfrecord_example").mode("overwrite").save(out))
+        back = (spark.read.format("tfrecord_example")
+                .schema("id long").load(out))
+        assert sorted(r["id"] for r in back.collect()) == list(range(10))
+
+    def test_failed_write_publishes_nothing(self, spark, tmp_path):
+        """A write whose task raises leaves nothing at the path and no
+        staging directory beside it."""
+        import os
+
+        from pyspark.sql import functions as F
+        register_tfrecord(spark)
+        out = str(tmp_path / "failed")
+        # the sink has no proto type for a date: the task raises
+        df = spark.range(10).repartition(2).select(
+            "id", F.current_date().alias("day"))
+        with pytest.raises(Exception, match="unsupported tfrecord type"):
+            df.write.format("tfrecord_example").mode("overwrite").save(out)
+        assert os.listdir(tmp_path) == []
+
 
 class TestTFRecordStreamSource:
     def test_count_offsets_rejected(self, tmp_path):
@@ -159,6 +186,27 @@ class TestTFRecordStreamSource:
             with pytest.raises(ValueError, match='"files"'):
                 call()
 
+    def test_latest_offset_never_shrinks(self, tmp_path):
+        """A shard deleted after it was offered stays in the offset:
+        a shrunken offset would make a live query plan a batch (and
+        write its offset) for a source that is gone."""
+        import os
+
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        from columnar_estimator_sample_spark.sources import tfrecord as tfr
+
+        d = str(tmp_path / "shards")
+        os.makedirs(d)
+        paths = [os.path.join(d, f"part-{i:05d}.tfrecord") for i in (0, 1)]
+        for i, p in enumerate(paths):
+            write_tfrecords(p, iter([encode_example({"a": i})]), None)
+        schema = StructType([StructField("a", LongType())])
+        r = tfr.TFRecordPartitionedStreamReader(schema, {"path": d})
+        assert r.latestOffset() == {"files": paths}
+        os.remove(paths[0])
+        assert r.latestOffset() == {"files": paths}
+
     def test_incremental_shards_across_restart(self, spark, sf_dir,
                                                tmp_path):
         """Offset bookkeeping of the stream reader: drain a 2-shard
@@ -167,7 +215,9 @@ class TestTFRecordStreamSource:
         no loss), i.e. the landing-queue pickup semantics."""
         from pyspark.sql import functions as F
 
-        from columnar_estimator_sample_spark.sources.tables import table
+        from columnar_estimator_sample_spark.sources.tables import (
+            reset_handles, table,
+        )
         from columnar_estimator_sample_spark.sources.tfrecord import (
             register_tfrecord,
         )
@@ -213,6 +263,99 @@ class TestTFRecordStreamSource:
             os.rename(os.path.join(tmp2, f),
                       os.path.join(d, f"aa-extra-{i}-{f}"))
 
+        # the landing on ckpt is live: stop it so that the second drain
+        # restarts from the checkpoint
+        reset_handles()
         got2 = drain()
         assert got2 == {r.doc_id for r in docs.collect()}, \
             "second drain must ADD exactly the newly landed shards"
+
+
+class TestLiveLanding:
+    """``foreach_batch_parquet_sink`` with a checkpoint keeps one live
+    query per checkpoint: each publish-then-land round lands exactly its
+    own epoch through that query."""
+
+    @staticmethod
+    def _segment(spark, root):
+        import os
+        os.makedirs(os.path.join(root, "in"))
+        return (spark.readStream.format("tfrecord_example")
+                .schema("id long")
+                .option("path", os.path.join(root, "in", "*", "part-*"))
+                .load())
+
+    @staticmethod
+    def _round(spark, root, stream, k):
+        """Publish batch ``k`` (ids 100k .. 100k+99), land it and return
+        the landed epochs with their ids."""
+        import os
+
+        from columnar_estimator_sample_spark.streaming.windows import (
+            foreach_batch_parquet_sink,
+        )
+        (spark.range(100 * k, 100 * k + 100).repartition(2).write
+         .format("tfrecord_example").mode("overwrite")
+         .save(os.path.join(root, "in", f"b{k}")))
+        out = os.path.join(root, "out")
+        foreach_batch_parquet_sink(stream, out, os.path.join(root, "ckpt"))
+        landed = spark.read.parquet(out).collect()
+        return {e: sorted(r.id for r in landed if r.epoch == e)
+                for e in {r.epoch for r in landed}}
+
+    def test_one_query_per_checkpoint(self, spark, tmp_path):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        from columnar_estimator_sample_spark.sources.tables import (
+            reset_handles,
+        )
+
+        class Starts(StreamingQueryListener):
+            n = 0
+
+            def onQueryStarted(self, event):
+                Starts.n += 1
+
+            def onQueryProgress(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                pass
+
+        register_tfrecord(spark)
+        reset_handles()
+        root = str(tmp_path)
+        stream = self._segment(spark, root)
+        listener = Starts()
+        spark.streams.addListener(listener)
+        try:
+            for k in range(3):
+                got = self._round(spark, root, stream, k)
+                assert got == {e: list(range(100 * e, 100 * e + 100))
+                               for e in range(k + 1)}
+        finally:
+            spark.streams.removeListener(listener)
+        # a started event reaches listeners before start() returns
+        assert Starts.n == 1
+        assert len(spark.streams.active) == 1
+        reset_handles()
+        assert spark.streams.active == []
+
+    def test_gone_checkpoint_stopped_at_next_landing(self, spark, tmp_path):
+        import shutil
+
+        from columnar_estimator_sample_spark.sources.tables import (
+            reset_handles,
+        )
+        register_tfrecord(spark)
+        reset_handles()
+        a, b = str(tmp_path / "a"), str(tmp_path / "b")
+        assert self._round(spark, a, self._segment(spark, a), 0) == {
+            0: list(range(100))}
+        [first] = spark.streams.active
+        shutil.rmtree(a)
+        assert self._round(spark, b, self._segment(spark, b), 1) == {
+            0: list(range(100, 200))}
+        assert not first.isActive
+        assert len(spark.streams.active) == 1
+        reset_handles()
