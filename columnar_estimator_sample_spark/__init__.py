@@ -26,6 +26,59 @@ Layout:
                      estimators
 """
 
-__version__ = "0.1.0"
+import os
+import sys
+import zipimport
 
 from columnar_estimator_sample_spark.registry import queries, oracle_sql  # noqa: F401
+
+__version__ = "0.1.0"
+
+
+def _keep_unchanged_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed on disk.
+
+    Every PySpark Python worker call (``pyspark/worker_util.py``'s
+    ``setup_spark_files``: tasks and every planner main under
+    ``pyspark/sql/worker/``) runs ``importlib.invalidate_caches()``
+    before any engine code. In CPython 3.11 that makes each zip importer
+    re-read its archive's whole directory, and Spark puts
+    ``pyspark.zip`` (1,328 entries) first on every worker's PYTHONPATH,
+    so a worker holds about 15 such importers. Measured on 4 cores: one
+    call takes 0.10-0.16 s on an idle core and 0.2-0.4 s with 4 tasks
+    running, and a ``tfrecord_ingest`` request runs four worker steps in
+    series (write planner, write tasks, commit planner, landing read
+    tasks). Skipping the re-read cut a warm 512-row TFRecord write from
+    0.88 to 0.21 s and its read-back from 1.0 to 0.30 s.
+
+    The original still runs whenever the archive's ``(st_ino, st_size,
+    st_mtime_ns)`` differs from the key stored on that importer at its
+    last reload, or ``os.stat`` fails, so a changed zip is re-read at
+    the next call as before (CPython 3.13 does the same, lazily). Every
+    worker that unpickles engine code imports this package, which
+    reloads and keys the importers the worker already holds; Spark
+    reuses workers, so every later call in a worker skips the reload.
+    Installing twice does nothing."""
+    reload = zipimport.zipimporter.invalidate_caches
+    if getattr(reload, "keeps_unchanged", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return reload(self)
+        key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        if getattr(self, "_dir_key", None) != key:
+            reload(self)
+            self._dir_key = key
+
+    invalidate_caches.keeps_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder.invalidate_caches()
+
+
+_keep_unchanged_zip_directories()

@@ -291,6 +291,18 @@ def _decode_rows(path: str, schema: T.StructType) -> Iterator[tuple]:
                     for f in fields)
 
 
+def _shard_files(path: str) -> list:
+    """The shards at ``path``, sorted. For a directory: every regular
+    file whose name does not start with ``.`` or ``_`` (the hidden-file
+    rule of Hadoop and Spark's file index, which skips ``_SUCCESS`` and
+    the writer's staging directory); otherwise the glob's matching
+    regular files."""
+    if os.path.isdir(path):
+        return sorted(e.path for e in os.scandir(path)
+                      if e.is_file() and e.name[0] not in "._")
+    return sorted(p for p in _glob.glob(path) if os.path.isfile(p))
+
+
 class _FilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
@@ -304,11 +316,7 @@ class TFRecordReader(DataSourceReader):
             raise ValueError("tfrecord source requires a path")
 
     def partitions(self):
-        paths = sorted(_glob.glob(self.path))
-        if os.path.isdir(self.path):
-            paths = sorted(
-                _glob.glob(os.path.join(self.path, "part-*")) or
-                _glob.glob(os.path.join(self.path, "*")))
+        paths = _shard_files(self.path)
         if not paths:
             raise FileNotFoundError(self.path)
         return [_FilePartition(p) for p in paths]
@@ -434,11 +442,6 @@ class TFRecordPartitionedStreamReader(DataSourceStreamReader):
             raise ValueError("tfrecord stream source requires a path")
         self._seen: set[str] = set()
 
-    def _files(self) -> list:
-        pat = (os.path.join(self._dir, "*")
-               if os.path.isdir(self._dir) else self._dir)
-        return sorted(p for p in _glob.glob(pat) if os.path.isfile(p))
-
     def initialOffset(self) -> dict:
         return {"files": []}
 
@@ -447,7 +450,7 @@ class TFRecordPartitionedStreamReader(DataSourceStreamReader):
         # rule): a shrunken offset differs from the committed one, so a
         # live query would plan a batch for it and write its offset into
         # a checkpoint that may be gone with the source
-        self._seen.update(self._files())
+        self._seen.update(_shard_files(self._dir))
         return {"files": sorted(self._seen)}
 
     def partitions(self, start: dict, end: dict):

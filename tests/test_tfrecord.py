@@ -159,6 +159,23 @@ class TestDataSource:
             df.write.format("tfrecord_example").mode("overwrite").save(out)
         assert os.listdir(tmp_path) == []
 
+    def test_directory_reads_every_visible_file(self, spark, tmp_path):
+        """A directory read takes every file not hidden by a leading
+        ``.`` or ``_``, not only the ``part-*`` ones."""
+        import os
+        d = str(tmp_path / "mixed")
+        os.makedirs(d)
+        for name, ids, comp in (("part-00000-a.tfrecord.gz", range(10),
+                                 "gzip"),
+                                ("extra.tfrecord", range(10, 20), None)):
+            write_tfrecords(os.path.join(d, name),
+                            (encode_example({"id": i}) for i in ids), comp)
+        open(os.path.join(d, "_SUCCESS"), "w").close()
+        register_tfrecord(spark)
+        back = (spark.read.format("tfrecord_example")
+                .schema("id long").load(d))
+        assert sorted(r["id"] for r in back.collect()) == list(range(20))
+
 
 class TestTFRecordStreamSource:
     def test_count_offsets_rejected(self, tmp_path):
