@@ -52,53 +52,14 @@ def digest_census(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
 
 def duplication_estimate(spark: SparkSession, sf_dir: str) -> int:
     """Whole-corpus duplication factor (docs per distinct content,
-    integer-floored, >= 1). Two lanes, cheapest first:
-
-      1. session catalog: ANALYZEd ``documents`` column stats for
-         ``text`` when the table PROVABLY derives from this sf_dir
-         (the ``ces.sf_dir`` table property or an external location
-         inside sf_dir — :func:`plans.stats.corpus_table_matches`) AND
-         the analyzed row count matches this sf_dir's parquet footer
-         count (zero jobs — the same guarded lane as
-         textstats._ccnet_docs_per_lang_bound). Row count alone is not
-         identity: two corpora with equal counts but different
-         duplication (a genuine sf1 vs a 10-way-replicated mirror)
-         must not silently swap estimates, because this estimate
-         scales the winnow cap and the lane switch;
-      2. otherwise the memoized :func:`digest_census` probe (one
-         2-scalar plan-time job — the minhash contraction gate's probe,
-         shared).
+    integer-floored, >= 1) from the memoized :func:`digest_census` (the
+    minhash contraction gate's probe, shared).
 
     Gate/bench corpora are duplication-light (estimate 1, test-pinned),
     so consumers that embed static constants in their oracles stay
     byte-stable there; replicated corpora (the sf1/sf10 testbeds are
-    10/100-way mirrored) get the true factor. Honest note: ANALYZE's
-    column NDV is HLL-approximate, so the two lanes can disagree by a
-    few percent on a duplicated corpus — acceptable because the
-    estimate feeds tuning knobs (the winnow cap, the lane switch), not
-    result semantics, and at the oracle-pinned gate SFs both lanes are
-    exactly 1."""
-    import os as _os
-    import re as _re
-    from columnar_estimator_sample_spark.sources.tables import (
-        parquet_num_rows,
-    )
-    n = parquet_num_rows(_os.path.join(sf_dir, "documents.parquet"))
-    try:
-        from columnar_estimator_sample_spark.plans.stats import (
-            catalog_stats, column_stats, corpus_table_matches,
-        )
-        if (spark.catalog.tableExists("documents")
-                and corpus_table_matches(spark, "documents", sf_dir)):
-            stats = catalog_stats(spark, "documents").get("table", "")
-            m = _re.search(r"(\d+)\s+rows", stats)
-            if m and int(m.group(1)) == n:
-                d = column_stats(spark, "documents",
-                                 "text").get("distinct_count")
-                if d is not None and str(d).isdigit() and int(d) > 0:
-                    return max(n // int(d), 1)
-    except Exception:
-        pass  # fall through to the census probe
+    10/100-way mirrored) get the true factor. The estimate feeds tuning
+    knobs (the winnow cap, the lane switch), never result semantics."""
     n_docs, n_distinct = digest_census(spark, sf_dir)
     return max(n_docs // max(n_distinct, 1), 1)
 

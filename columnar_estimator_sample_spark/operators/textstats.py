@@ -20,6 +20,7 @@ from columnar_estimator_sample_spark.functions.hashing import sql_h64
 from columnar_estimator_sample_spark.registry import register
 from columnar_estimator_sample_spark.sources.tables import (
     memo,
+    parquet_num_rows,
     table,
 )
 
@@ -949,51 +950,6 @@ def ntile3_by_score(pool: DataFrame, n_parts: int = 32) -> DataFrame:
 CCNET_WINDOW_MAX_DOCS_PER_LANG = 100_000_000
 
 
-def _ccnet_docs_per_lang_bound(spark: SparkSession, sf_dir: str) -> int:
-    """Job-free upper bound on docs-per-language for the switch-over:
-    the documents footer row count (plan-time metadata read) divided by
-    the lang NDV when the session's NDV catalog holds persisted column
-    stats for an ANALYZEd ``documents`` table (plans/stats.py), else by
-    1 — the conservative all-one-language bound. Either way: metadata
-    only, never a plan-build job."""
-    from columnar_estimator_sample_spark.sources.tables import (
-        parquet_num_rows,
-    )
-    n = parquet_num_rows(os.path.join(sf_dir, "documents.parquet"))
-    ndv = 1
-    try:
-        from columnar_estimator_sample_spark.plans.stats import (
-            column_stats,
-        )
-        # tableExists first: DESCRIBE on a missing table raises (and
-        # Spark logs a scary analyzer ERROR before we can catch it)
-        if spark.catalog.tableExists("documents"):
-            # the catalog name 'documents' is session-global, not keyed
-            # to sf_dir: trust its NDV only when the table provably
-            # derives from THIS sf_dir (ces.sf_dir property / external
-            # location — the same identity guard as
-            # dedup.duplication_estimate) AND its analyzed row count
-            # matches this sf_dir's footer count; both lanes here are
-            # result-identical (tests pin them equal) so this guards
-            # only the perf switch, but the guard is shared
-            from columnar_estimator_sample_spark.plans.stats import (
-                catalog_stats, corpus_table_matches,
-            )
-            if not corpus_table_matches(spark, "documents", sf_dir):
-                return n
-            import re as _re
-            stats = catalog_stats(spark, "documents").get("table", "")
-            m = _re.search(r"(\d+)\s+rows", stats)
-            if m and int(m.group(1)) == n:
-                d = column_stats(spark, "documents",
-                                 "lang").get("distinct_count")
-                if d is not None and str(d).isdigit() and int(d) > 0:
-                    ndv = int(d)
-    except Exception:
-        pass  # no analyzed catalog table in this session -> bound by 1
-    return n // max(ndv, 1)
-
-
 @register(
     "q_ccnet_tiers",
     oracle=f"""
@@ -1028,8 +984,8 @@ def q_ccnet_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: scoring is the q_doc_lm_score frame (one text scan, LM join
     bounded by vocab²); the census aggregates map-side. The tercile
-    assignment picks its path by a plan-time metadata check
-    (:func:`_ccnet_docs_per_lang_bound` vs
+    assignment picks its path by a plan-time footer check (the
+    documents row count, an upper bound on any one language's docs, vs
     {CCNET_WINDOW_MAX_DOCS_PER_LANG} — no manual edit): the
     per-language NTILE window holds one lang's (doc_id, score) rows in
     one task — fine to ~10⁸ docs/lang (narrow rows), and MEASURED
@@ -1043,7 +999,7 @@ def q_ccnet_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     staying scan-local."""
     from pyspark.sql import Window as W
     scores = doc_lm_scores(spark, sf_dir)
-    if (_ccnet_docs_per_lang_bound(spark, sf_dir)
+    if (parquet_num_rows(os.path.join(sf_dir, "documents.parquet"))
             > CCNET_WINDOW_MAX_DOCS_PER_LANG):
         tiers = (ntile3_by_score(
             scores.select("doc_id", "lang",

@@ -86,62 +86,6 @@ def analyze_tables(spark: SparkSession, names: list[str],
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS{col_clause}")
 
 
-# Table property naming the corpus directory a catalog table was built
-# from. Set it when registering/ANALYZEing a corpus copy so plan-time
-# consumers (dedup.duplication_estimate, textstats' lane switch) can
-# prove the session-global name matches THEIR sf_dir.
-CORPUS_DIR_PROP = "ces.sf_dir"
-
-
-def corpus_table_matches(spark: SparkSession, name: str,
-                         sf_dir: str) -> bool:
-    """Identity guard for a session-global catalog table standing in for
-    a corpus table: True only when the table provably derives from THIS
-    ``sf_dir`` — either it carries the :data:`CORPUS_DIR_PROP` table
-    property (set by whoever saved/ANALYZEd it), or its storage location
-    resolves inside ``sf_dir`` (an external table over the corpus
-    parquet itself). Row-count equality alone is NOT identity: two
-    corpora with equal counts but different content (a genuine sf1 vs a
-    replicated mirror) would otherwise hand a consumer the wrong NDV.
-    Metadata-only — never runs a job."""
-    import os
-    want = os.path.abspath(sf_dir)
-    try:
-        props = {r.key: r.value for r in
-                 spark.sql(f"SHOW TBLPROPERTIES {name}").collect()}
-        tagged = props.get(CORPUS_DIR_PROP)
-        if tagged is not None:
-            return os.path.abspath(tagged) == want
-    except Exception:
-        pass  # temp view or pre-property table: try the location probe
-    try:
-        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
-        loc = next((r.data_type for r in rows
-                    if r.col_name == "Location"), "")
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
-        return bool(loc) and os.path.abspath(loc).startswith(want + os.sep)
-    except Exception:
-        return False
-
-
-def catalog_stats(spark: SparkSession, name: str) -> dict[str, str]:
-    """Read back persisted stats (rowCount, sizeInBytes, per-column NDV)
-    from DESCRIBE EXTENDED output."""
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
-    out = {}
-    for r in rows:
-        if r.col_name == "Statistics":
-            out["table"] = r.data_type
-    return out
-
-
-def column_stats(spark: SparkSession, table: str, column: str) -> dict[str, str]:
-    rows = spark.sql(
-        f"DESCRIBE TABLE EXTENDED {table} {column}").collect()
-    return {r.info_name: r.info_value for r in rows}
-
-
 _EST_RE = re.compile(r"Statistics\(([^)]*)\)")
 
 

@@ -661,14 +661,18 @@ class TestRound10ApplyOps:
     def test_ccnet_switchover_paths_equal(self, spark, sf_dir,
                                           monkeypatch):
         """q_ccnet_tiers picks window vs histogram by a plan-time
-        metadata check (docs-per-lang bound vs the task threshold —
-        verdict r10 #6: a config check, not a manual edit). Forcing the
-        histogram path via the threshold must yield the byte-identical
-        census the default window path yields."""
+        footer check (documents row count vs the task threshold — a
+        config check, not a manual edit). Forcing the histogram path
+        via the threshold must yield the byte-identical census the
+        default window path yields."""
+        import os
         import columnar_estimator_sample_spark.operators.textstats as ts
+        from columnar_estimator_sample_spark.sources.tables import (
+            parquet_num_rows,
+        )
 
-        bound = ts._ccnet_docs_per_lang_bound(spark, sf_dir)
-        assert 0 < bound <= ts.CCNET_WINDOW_MAX_DOCS_PER_LANG
+        n = parquet_num_rows(os.path.join(sf_dir, "documents.parquet"))
+        assert 0 < n <= ts.CCNET_WINDOW_MAX_DOCS_PER_LANG
         base = sorted(tuple(r) for r in
                       ts.q_ccnet_tiers(spark, sf_dir).collect())
         monkeypatch.setattr(ts, "CCNET_WINDOW_MAX_DOCS_PER_LANG", 0)

@@ -680,13 +680,15 @@ class TestStats:
 
     def test_analyze_and_cbo_stats(self, spark, sf_dir):
         from columnar_estimator_sample_spark.plans.stats import (
-            analyze_tables, column_stats,
+            analyze_tables,
         )
         from columnar_estimator_sample_spark.sources.tables import table
         table(spark, sf_dir, "nation").write.mode("overwrite") \
             .saveAsTable("nation_stats_test")
         analyze_tables(spark, ["nation_stats_test"])
-        cs = column_stats(spark, "nation_stats_test", "n_nationkey")
+        cs = {r.info_name: r.info_value for r in spark.sql(
+            "DESCRIBE TABLE EXTENDED nation_stats_test n_nationkey"
+        ).collect()}
         assert int(cs.get("distinct_count", "0")) >= 20
         spark.sql("DROP TABLE nation_stats_test")
 

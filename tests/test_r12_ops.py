@@ -1,5 +1,6 @@
 """Round-12 operator tests: adaptive winnow MAXDF (duplication-scaled
-boilerplate cap), the shared digest-census probe, and its catalog lane.
+boilerplate cap) and the shared digest-census probe it reads its
+duplication factor from.
 Tiny synthetic sf_dirs are hand-built parquet (the operators read
 {sf_dir}/{table}.parquet, so a tmp dir IS a scale factor)."""
 
@@ -119,39 +120,13 @@ class TestAdaptiveWinnowCap:
         D.q_dedup_winnow(spark, sf)
         monkeypatch.undo()
 
-    def test_catalog_lane_is_job_free(self, spark, tmp_path, monkeypatch):
-        """With fresh ANALYZEd stats for a catalog table named
-        ``documents`` (analyzed row count == this sf_dir's footer
-        count), the estimate must come from the catalog WITHOUT running
-        the census probe — pinned by making the probe raise."""
-        import columnar_estimator_sample_spark.operators.dedup as D
-
-        sf = _replicated_fixture(tmp_path, copies=25)
-        spark.sql("DROP TABLE IF EXISTS documents")
-        try:
-            spark.read.parquet(f"{sf}/documents.parquet") \
-                .write.saveAsTable("documents")
-            spark.sql("ALTER TABLE documents SET TBLPROPERTIES "
-                      f"('ces.sf_dir'='{sf}')")
-            spark.sql("ANALYZE TABLE documents COMPUTE STATISTICS "
-                      "FOR COLUMNS text")
-
-            def boom(s, d):
-                raise AssertionError("census probe ran on catalog lane")
-
-            monkeypatch.setattr(D, "digest_census", boom)
-            assert D.duplication_estimate(spark, sf) == 25
-        finally:
-            spark.sql("DROP TABLE IF EXISTS documents")
-
-    def test_catalog_lane_requires_corpus_identity(self, spark, tmp_path,
-                                                   monkeypatch):
-        """Equal row counts are NOT identity: a catalog table ANALYZEd
-        from corpus A (25-way duplicated) must not answer for corpus B
-        (same row count, all-distinct texts) — the guard falls through
-        to the census, which returns B's true factor of 1. Without the
-        identity guard this returned 25 and silently rescaled the
-        winnow cap (the round-12 advisory)."""
+    def test_catalog_table_does_not_change_estimate(self, spark,
+                                                     tmp_path):
+        """The estimate comes from the corpus's own census, never from a
+        session-global catalog table that happens to be named
+        ``documents``: with an ANALYZEd catalog copy of corpus A (25-way
+        duplicated) present, corpus B (same row count, all-distinct
+        texts) still gets its true factor of 1, and A gets 25."""
         import columnar_estimator_sample_spark.operators.dedup as D
 
         (tmp_path / "a").mkdir()
@@ -171,15 +146,9 @@ class TestAdaptiveWinnowCap:
         try:
             spark.read.parquet(f"{sf_a}/documents.parquet") \
                 .write.saveAsTable("documents")
-            spark.sql("ALTER TABLE documents SET TBLPROPERTIES "
-                      f"('ces.sf_dir'='{sf_a}')")
             spark.sql("ANALYZE TABLE documents COMPUTE STATISTICS "
                       "FOR COLUMNS text")
             assert D.duplication_estimate(spark, sf_b) == 1
-            # and the tagged corpus still rides the catalog lane
-            def boom(s, d):
-                raise AssertionError("census probe ran on catalog lane")
-            monkeypatch.setattr(D, "digest_census", boom)
             assert D.duplication_estimate(spark, sf_a) == 25
         finally:
             spark.sql("DROP TABLE IF EXISTS documents")

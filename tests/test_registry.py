@@ -85,8 +85,8 @@ def test_sf01_ledger_covers_registry_and_matches_source_tree():
     local ledger: full registry coverage, zero fails, and a source-tree
     stamp that goes red on any post-generation source edit. It
     certifies the lanes that only engage above the gate SFs (winnow's
-    adaptive cap, CCNet's catalog lane, DSIR's checkpoint bound, the
-    MMR footer rule) — regenerate with
+    adaptive cap, DSIR's checkpoint bound, the MMR footer rule) —
+    regenerate with
     ``tools/check_oracle.py /root/testdata/sf0.1 --json --out
     CORRECTNESS_SF01.json``."""
     import json

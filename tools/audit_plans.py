@@ -97,8 +97,8 @@ BUILD_RUNS_JOBS = {
     # — both lazily checkpointed (r13: the forced-SQ8 lane twin shares
     # the greedy and additionally builds the SQ8 shortlist memos)
     "q_mmr_rerank", "q_mmr_rerank_scaled",
-    # r12: the adaptive MAXDF cap falls back to the shared digest-census
-    # probe when no fresh catalog stats exist (dedup.duplication_estimate)
+    # r12: the adaptive MAXDF cap reads the shared digest-census probe
+    # (dedup.duplication_estimate)
     "q_dedup_winnow",
     "q_dedup_prefix_filter", "q_media_neardup", "q_media_search",
     "q_media_audio_neardup", "q_media_video_neardup", "q_semdedup",
