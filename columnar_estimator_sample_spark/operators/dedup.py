@@ -308,12 +308,12 @@ def contract_exact_dups(df: DataFrame, id_col: str, payload_col: str,
     cosine set-join / prefix filter / embedding LSH — the window form
     wins 1.2–2.9× even though the contraction measured in ISOLATION has
     the agg+join form ahead; the microbenchmark misses the
-    consumer-level exchange reuse. The priced
-    residual risk stays: one fingerprint group's payload lands in one
-    task, so a pathologically viral corpus (≫10⁶ byte-identical copies
-    of one doc) should switch to :func:`contract_exact_dups_aggjoin`
-    (bit-equal, test-pinned; 1.9× ahead on the planted 10⁶-copy
-    contraction in isolation).
+    consumer-level exchange reuse. The priced residual risk stays: one
+    fingerprint group's payload lands in one task, so a pathologically
+    viral corpus (≫10⁶ byte-identical copies of one doc) needs a
+    groupBy-then-join restatement that keeps the payload out of the fp
+    exchange (1.9× ahead on the planted 10⁶-copy contraction in
+    isolation).
 
     ``fp`` overrides the fingerprint expression (default
     ``md5(payload_col)``, correct for string payloads; array payloads
@@ -327,34 +327,6 @@ def contract_exact_dups(df: DataFrame, id_col: str, payload_col: str,
         .withColumn("gsz", F.count(F.lit(1)).over(w)))
     members = grouped.select(id_col, "gid", "gsz")
     reps = (grouped.filter(F.col(id_col) == F.col("gid"))
-            .select(id_col, payload_col))
-    return members, reps
-
-
-def contract_exact_dups_aggjoin(df: DataFrame, id_col: str,
-                                payload_col: str,
-                                fp: "F.Column | None" = None):
-    """Skew-proof restatement of :func:`contract_exact_dups` (SCALE.md
-    §4): the per-fingerprint (min id, size) comes from a map-side-
-    combinable groupBy — the payload never enters the fp exchange — and
-    members/reps join back on fp/gid, so no single task ever holds a
-    whole fingerprint group's payload. Bit-equal output (test-pinned).
-
-    This is the documented SWITCH for pathologically viral corpora
-    (≫10⁶ byte-identical copies of one payload: 1.9× ahead of the
-    window form on the planted 10⁶-copy contraction), NOT the default:
-    inside real consumers the window form's shared scan + fp exchange
-    wins 1.2–2.9× at 100× data because this form rescans and
-    refingerprints the payload once per branch."""
-    fpc = fp if fp is not None else F.md5(payload_col)
-    keyed = df.withColumn("fp", fpc)
-    agg = (keyed.groupBy("fp")
-           .agg(F.min(id_col).alias("gid"),
-                F.count(F.lit(1)).alias("gsz")))
-    members = (keyed.select(id_col, "fp")
-               .join(agg, "fp")
-               .select(id_col, "gid", "gsz"))
-    reps = (df.join(agg.select(F.col("gid").alias(id_col)), id_col)
             .select(id_col, payload_col))
     return members, reps
 

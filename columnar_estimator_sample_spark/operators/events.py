@@ -213,9 +213,6 @@ def q_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # previous stage's first hit for the same user.
 FUNNEL = ["view", "click", "purchase"]
 
-DAY_US = 86_400_000_000
-
-
 @register(
     "q_funnel",
     oracle="""
@@ -274,7 +271,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_cohort_retention",
     oracle=f"""
     WITH d AS (
-        SELECT user_id, epoch_us(ts) // {DAY_US} AS day FROM events
+        SELECT user_id, epoch_us(ts) // {US_PER_DAY} AS day FROM events
     ), cohort AS (
         SELECT user_id, MIN(day) AS cohort_day FROM d GROUP BY user_id
     ), activity AS (
@@ -299,7 +296,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by days × offsets, not data size. Day arithmetic is integer
     µs // day — timezone-free in both engines."""
     ev = table(spark, sf_dir, "events").select(
-        "user_id", F.expr(f"us div {DAY_US}").alias("day"))
+        "user_id", F.expr(f"us div {US_PER_DAY}").alias("day"))
     cohort = ev.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
     activity = ev.distinct()
     return (
@@ -1109,15 +1106,12 @@ def q_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cohort LTV curve
 # ---------------------------------------------------------------------------
 
-US_PER_WEEK_LTV = 7 * US_PER_DAY
-
-
 @register(
     "q_cohort_ltv",
     oracle=f"""
     WITH ev AS (
         SELECT user_id,
-               CAST(epoch_us(ts) // {US_PER_WEEK_LTV} AS BIGINT) AS week,
+               CAST(epoch_us(ts) // {US_PER_WEEK} AS BIGINT) AS week,
                CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
         FROM events
     ), cohort AS (
@@ -1151,7 +1145,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     weeks² frame."""
     ev = (table(spark, sf_dir, "events")
           .select("user_id",
-                  F.expr(f"CAST(us div {US_PER_WEEK_LTV} AS BIGINT)")
+                  F.expr(f"CAST(us div {US_PER_WEEK} AS BIGINT)")
                   .alias("week"),
                   F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100"
                          " AS BIGINT)").alias("cents")))

@@ -15,8 +15,6 @@ each lever explicit and testable:
     over n tasks instead of stalling one straggler. AQE's skew-join
     handles moderate skew automatically; salting is the deterministic
     fallback for the extreme case.
-  * :func:`repartition_for` — explicit co-partitioning of two frames
-    before a merge-heavy operation, reusing one exchange across stages.
 """
 
 from __future__ import annotations
@@ -91,17 +89,6 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
                          F.lit(n_salts)).cast("int"))
     out = salted_big.join(salted_small, [key, "__salt"], how)
     return out.drop("__salt")
-
-
-def repartition_for(a: DataFrame, b: DataFrame, key: str,
-                    n_partitions: int | None = None)\
-        -> tuple[DataFrame, DataFrame]:
-    """Co-partition two frames on the same key (and count) so the
-    subsequent join/cogroup reuses one exchange per side across stages."""
-    if n_partitions:
-        return (a.repartition(n_partitions, key),
-                b.repartition(n_partitions, key))
-    return a.repartition(key), b.repartition(key)
 
 
 def skew_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from columnar_estimator_sample_spark.functions.exact import dsum, sql_dsum
 from columnar_estimator_sample_spark.registry import register
-from columnar_estimator_sample_spark.sources.tables import table
+from columnar_estimator_sample_spark.sources.tables import epoch_us, table
 
 
 @register(
@@ -386,7 +386,7 @@ def q_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves, and a 1-row ratio."""
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))").alias("us"),
+        epoch_us("l_shipdate").alias("us"),
         F.expr(_CENT_R3).alias("cents"), F.expr(_QTY_R3).alias("qty"))
     rng = li.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
     per = (li.crossJoin(F.broadcast(rng))
@@ -466,7 +466,7 @@ def q_revenue_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     two ranked halves on partkey."""
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))").alias("us"),
+        epoch_us("l_shipdate").alias("us"),
         F.expr(_CENT_R3).alias("cents"))
     rng = li.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
     rev = (li.crossJoin(F.broadcast(rng))
@@ -539,7 +539,7 @@ def q_assortment_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-row report."""
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.expr("unix_micros(CAST(l_shipdate AS TIMESTAMP))").alias("us"),
+        epoch_us("l_shipdate").alias("us"),
         F.expr(_CENT_R3).alias("cents"))
     rng = li.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
     tagged = (li.crossJoin(F.broadcast(rng))

@@ -18,8 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from columnar_estimator_sample_spark.functions.exact import dec
+from columnar_estimator_sample_spark.operators.events import US_PER_DAY
 from columnar_estimator_sample_spark.registry import register
-from columnar_estimator_sample_spark.sources.tables import table
+from columnar_estimator_sample_spark.sources.tables import epoch_us, table
 
 _TS = "timestamp_ntz"
 
@@ -540,7 +541,6 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fulfillment latency percentiles
 # ---------------------------------------------------------------------------
 
-_US_DAY = 86_400_000_000
 LAT_PCTS = (50, 90, 99)
 
 
@@ -549,8 +549,8 @@ LAT_PCTS = (50, 90, 99)
     oracle=f"""
     WITH lat AS (
         SELECT o.o_orderpriority AS priority,
-               (epoch_us(l.l_shipdate) // {_US_DAY})
-               - (epoch_us(o.o_orderdate) // {_US_DAY}) AS days
+               (epoch_us(l.l_shipdate) // {US_PER_DAY})
+               - (epoch_us(o.o_orderdate) // {US_PER_DAY}) AS days
         FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
     ), ranked AS (
         SELECT priority, days,
@@ -583,16 +583,14 @@ def q_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. |priorities| is tiny, so window partitions are wide but
     map-side partial CASE-MAX keeps the final aggregate cheap."""
     li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.expr(f"unix_micros(CAST(l_shipdate AS TIMESTAMP)) div {_US_DAY}")
-        .alias("ship_day"))
+        "l_orderkey", epoch_us("l_shipdate").alias("ship_us"))
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_orderpriority").alias("priority"),
-        F.expr(f"unix_micros(CAST(o_orderdate AS TIMESTAMP)) div {_US_DAY}")
-        .alias("order_day"))
+        epoch_us("o_orderdate").alias("order_us"))
     lat = (li.join(orders, li.l_orderkey == orders.o_orderkey)
            .select("priority",
-                   (F.col("ship_day") - F.col("order_day")).alias("days")))
+                   F.expr(f"ship_us div {US_PER_DAY}"
+                          f" - order_us div {US_PER_DAY}").alias("days")))
     from pyspark.sql import Window
     wp = Window.partitionBy("priority")
     ranked = (lat
@@ -621,7 +619,7 @@ _OCENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
     oracle=f"""
     WITH per_cust AS (
         SELECT o_custkey AS custkey,
-               MAX(epoch_us(o_orderdate) // {_US_DAY}) AS last_day,
+               MAX(epoch_us(o_orderdate) // {US_PER_DAY}) AS last_day,
                CAST(COUNT(*) AS BIGINT) AS frequency,
                CAST(SUM({_OCENTS}) AS BIGINT) AS monetary_cents
         FROM orders GROUP BY o_custkey
@@ -664,16 +662,16 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     window), so no task ever holds the customer table. All integer."""
     orders = table(spark, sf_dir, "orders")
     per_cust = (orders.groupBy(F.col("o_custkey").alias("custkey"))
-                .agg(F.max(F.expr(
-                    f"unix_micros(CAST(o_orderdate AS TIMESTAMP))"
-                    f" div {_US_DAY}")).alias("last_day"),
+                .agg(F.max(epoch_us("o_orderdate")).alias("last_us"),
                      F.count("*").cast("long").alias("frequency"),
                      F.sum(F.expr(_OCENTS)).cast("long")
                      .alias("monetary_cents")))
-    ref = per_cust.agg(F.max("last_day").alias("now_day"))
+    ref = per_cust.agg(F.max("last_us").alias("now_us"))
+    # MAX commutes with the day floor: MAX(us) div d = MAX(us div d)
     rfm = (per_cust.crossJoin(F.broadcast(ref))
            .select("custkey",
-                   (F.col("now_day") - F.col("last_day"))
+                   F.expr(f"now_us div {US_PER_DAY}"
+                          f" - last_us div {US_PER_DAY}")
                    .alias("recency_days"),
                    "frequency", "monetary_cents"))
     # r14: the three global quintile ranks run as range-partitioned
@@ -849,7 +847,7 @@ def q_value_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     two_phase shape at 100 TB, as q_abc_parts); the matrix is 3x3."""
     orders = table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("custkey"),
-        F.expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))").alias("us"),
+        epoch_us("o_orderdate").alias("us"),
         F.expr(_OCENTS).alias("cents"))
     rng = orders.agg(F.min("us").alias("mn"), F.max("us").alias("mx"))
     spend = (orders.crossJoin(F.broadcast(rng))
@@ -1031,7 +1029,7 @@ def q_first_order_predictiveness(spark: SparkSession,
     orders = table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("custkey"),
         F.expr(_OCENTS).alias("cents"),
-        F.expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))").alias("us"),
+        epoch_us("o_orderdate").alias("us"),
         "o_orderkey")
     from pyspark.sql import Window
     wc = Window.partitionBy("custkey").orderBy("us", "o_orderkey")

@@ -13,12 +13,6 @@ is exact, double multiply is IEEE-exact) rounded once to DECIMAL(30,6) and
 summed as decimals — order-free and identical across engines; both the
 Spark query and the DuckDB oracle use the same positional-explode
 formulation. Ranking ties are broken by neighbor id.
-
-Note on the hot path: for raw throughput on a dense corpus the idiomatic
-Spark implementation is an Arrow-batched ``mapInPandas`` with a BLAS
-matmul against a broadcast query matrix (numpy), trading bit-exactness for
-~100× arithmetic density. That variant is :func:`cosine_topk_fast`; the
-oracle-checked query keeps the exact formulation.
 """
 
 from __future__ import annotations
@@ -152,60 +146,6 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= TOP_K)
         .orderBy("query_id", "rank")
     )
-
-
-def cosine_topk_fast(spark: SparkSession, sf_dir: str,
-                     n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
-    """Arrow-batched BLAS brute force: the throughput path.
-
-    The query matrix (n_queries × dim) is shipped once per task inside the
-    closure (small); each Arrow batch of corpus vectors becomes one numpy
-    matmul. Per-partition top-k then a global top-k keeps the shuffle at
-    O(partitions · |Q| · k) rows.
-    """
-    import numpy as np
-
-    emb = table(spark, sf_dir, "embeddings")
-    qrows = (emb.filter(F.col("vec_id") < n_queries)
-             .select("vec_id", "embedding").collect())
-    q_ids = np.array([r["vec_id"] for r in qrows])
-    q_mat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    def score(batches):
-        import pyarrow as pa
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {f: i for i, f in enumerate(rb.schema.names)}
-            d_mat = _list_matrix(rb.column(cols["embedding"]), np) \
-                .astype(np.float64)
-            d_ids = rb.column(cols["vec_id"]).to_numpy(zero_copy_only=True)
-            d_mat /= np.linalg.norm(d_mat, axis=1, keepdims=True)
-            sims = d_mat @ q_mat.T  # (batch, |Q|)
-            qs_out, ns_out, cs_out = [], [], []
-            for qi, qid in enumerate(q_ids):
-                col = sims[:, qi]
-                take = min(k + 1, len(col))
-                idx = np.argpartition(-col, take - 1)[:take]
-                qs_out.append(np.full(len(idx), qid, dtype=np.int64))
-                ns_out.append(d_ids[idx])
-                cs_out.append(col[idx])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(qs_out)),
-                 pa.array(np.concatenate(ns_out)),
-                 pa.array(np.concatenate(cs_out))],
-                ["query_id", "neighbor_id", "cosine"])
-
-    partial = emb.select("vec_id", "embedding").mapInArrow(
-        score, "query_id long, neighbor_id long, cosine double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (partial.filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id", "cosine",
-                    F.row_number().over(w).alias("rank"))
-            .filter(F.col("rank") <= k)
-            .orderBy("query_id", "rank"))
 
 
 # Random-hyperplane LSH parameters. ±1 plane components come from md5

@@ -25,11 +25,11 @@ from pyspark.sql.window import Window
 
 from columnar_estimator_sample_spark.functions.exact import (
     davg, dsum, sql_davg, sql_dsum)
+from columnar_estimator_sample_spark.operators.events import US_PER_DAY
 from columnar_estimator_sample_spark.registry import register
 from columnar_estimator_sample_spark.sources.tables import table
 
 US_PER_HOUR = 3_600_000_000
-US_PER_DAY = 86_400_000_000
 EWMA_USERS = 20  # report cap: users 0..19
 
 

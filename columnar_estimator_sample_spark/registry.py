@@ -85,10 +85,7 @@ def _with_conf_pins(name: str, fn: QueryFn) -> QueryFn:
         confs = dict(_default_confs())
         confs.update(_QUERY_CONF_PINS.get(name, {}))
         for k, v in confs.items():
-            try:
-                spark.conf.set(k, v)
-            except Exception:
-                pass  # read-only/static conf on an exotic session: skip
+            spark.conf.set(k, v)
         return fn(spark, sf_dir)
     return wrapped
 

@@ -18,7 +18,7 @@ import os
 import threading
 from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
@@ -260,8 +260,7 @@ def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_decode_events`)."""
     path = f"{sf_dir}/events.parquet"
     return _decode_events(
-        spark, lambda: spark.read.schema(_events_schema(spark, path))
-        .parquet(path))
+        spark.read.schema(_events_schema(spark, path)).parquet(path))
 
 
 def table_stream(spark: SparkSession, sf_dir: str, name: str,
@@ -276,31 +275,27 @@ def table_stream(spark: SparkSession, sf_dir: str, name: str,
 
     The schema is read once per session (a file stream needs it up
     front; the read would otherwise run at every streaming build)."""
-    import os
-
     path = f"{sf_dir}/{name}.parquet"
-
-    def load() -> DataFrame:
-        schema = memo(spark, ("stream_schema", sf_dir, name),
-                      lambda: _events_schema(spark, path)
-                      if name == "events"
-                      else spark.read.parquet(path).schema)
-        reader = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", files_per_trigger))
-        if os.path.isdir(path):
-            # Spark-written layout ({name}.parquet is a DIRECTORY of
-            # part-* files, e.g. the gen_scale benchdata dirs and the
-            # sf1/sf10 mirrors): stream the directory itself — a
-            # leaf-name glob would match no part file and silently
-            # stream zero rows (r6: every streaming query returned empty
-            # on multi-file scale dirs; r12: the corpus streams drained
-            # 0 rows on every generated scale factor)
-            return reader.parquet(path)
+    schema = memo(spark, ("stream_schema", sf_dir, name),
+                  lambda: _events_schema(spark, path) if name == "events"
+                  else spark.read.parquet(path).schema)
+    reader = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", files_per_trigger))
+    if os.path.isdir(path):
+        # Spark-written layout ({name}.parquet is a DIRECTORY of part-*
+        # files, e.g. the gen_scale benchdata dirs and the sf1/sf10
+        # mirrors): stream the directory itself — a leaf-name glob would
+        # match no part file and silently stream zero rows (r6: every
+        # streaming query returned empty on multi-file scale dirs; r12:
+        # the corpus streams drained 0 rows on every generated scale
+        # factor)
+        stream = reader.parquet(path)
+    else:
         # driver layout: one flat file per table in sf_dir; file streams
         # take a directory, pathGlobFilter selects the table
-        return (reader.option("pathGlobFilter", f"{name}.parquet")
-                .parquet(sf_dir))
-    return _decode_events(spark, load) if name == "events" else load()
+        stream = (reader.option("pathGlobFilter", f"{name}.parquet")
+                  .parquet(sf_dir))
+    return _decode_events(stream) if name == "events" else stream
 
 
 def _events_schema(spark: SparkSession, path: str) -> StructType:
@@ -323,10 +318,18 @@ def _events_schema(spark: SparkSession, path: str) -> StructType:
                        else f for f in from_arrow_schema(arrow).fields])
 
 
-def _decode_events(spark: SparkSession,
-                   load: Callable[[], DataFrame]) -> DataFrame:
-    """The events frame ``load()`` returns (batch read or file stream),
-    with nanosecond-timestamp handling.
+def epoch_us(col: str) -> Column:
+    """Epoch microseconds of the zone-less timestamp expression ``col``
+    (Spark ``timestamp_ntz``, as parquet ``timestamp[us]`` without a
+    zone reads): the DuckDB oracles' ``epoch_us``, independent of the
+    session time zone."""
+    return F.expr("timestampdiff(MICROSECOND,"
+                  f" TIMESTAMP_NTZ'1970-01-01 00:00:00', {col})")
+
+
+def _decode_events(df: DataFrame) -> DataFrame:
+    """The events frame ``df`` (batch read or file stream), with
+    nanosecond-timestamp handling.
 
     The events parquet stores ``ts`` as INT64 TIMESTAMP(NANOS); read
     through :func:`_events_schema`'s ``ts long`` schema it
@@ -338,23 +341,12 @@ def _decode_events(spark: SparkSession,
     raw int64 µs, the reference's README.md:93,107). µs/ms files arrive
     as a timestamp type directly and only gain ``us``.
 
-    The session timezone is pinned to UTC here because the
-    downstream queries convert µs -> timestamp -> date
-    (timestamp_micros/to_date, streaming window()), and those
-    conversions read the SESSION timezone while the DuckDB oracles'
-    epoch arithmetic is timezone-free. Under a plain session on a
-    non-UTC machine, 15+ timeseries queries silently shift day
-    boundaries (measured: TZ=America/New_York flips
-    q_rate_anomaly/q_ewma/q_ols_trend/... red). Pinning at the single
-    funnel every events read goes through makes the whole tier
-    environment-independent — in any session, any host timezone.
+    Both conversions are zone-free, so no session conf is read or set.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = load()
     if dict(df.dtypes).get("ts") == "bigint":
         return (df.withColumnRenamed("ts", "ts_ns")
                 .withColumn("us", F.expr("ts_ns div 1000")))
-    return df.withColumn("us", F.unix_micros(F.col("ts").cast("timestamp")))
+    return df.withColumn("us", epoch_us("ts"))
 
 
 def register_views(spark: SparkSession, sf_dir: str,

@@ -25,10 +25,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from columnar_estimator_sample_spark.functions.exact import dsum, sql_dsum
+from columnar_estimator_sample_spark.operators.events import US_PER_DAY
 from columnar_estimator_sample_spark.sources import tables
 from columnar_estimator_sample_spark.registry import register
 
-US_PER_DAY = 86_400_000_000
 SESSION_GAP_US = 30 * 60 * 1_000_000  # session_window('30 minutes')
 SLIDE_US = 30 * 60 * 1_000_000  # q_stream_sliding_value's 30 min slide
 

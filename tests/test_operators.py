@@ -554,19 +554,6 @@ class TestDedup:
 
 
 class TestSimilarity:
-    def test_fast_path_matches_exact_ids(self, spark, sf_dir):
-        """BLAS mapInPandas top-k must agree with the oracle-checked exact
-        query on neighbor IDs (scores may differ in final ulps)."""
-        from columnar_estimator_sample_spark.operators.similarity import (
-            cosine_topk_fast,
-        )
-        from columnar_estimator_sample_spark.registry import queries
-        exact = {(r["query_id"], r["rank"]): r["neighbor_id"]
-                 for r in queries()["q_similarity_topk"](spark, sf_dir).collect()}
-        fast = {(r["query_id"], r["rank"]): r["neighbor_id"]
-                for r in cosine_topk_fast(spark, sf_dir).collect()}
-        assert exact == fast
-
     def test_lsh_buckets_deterministic(self, spark, sf_dir):
         from columnar_estimator_sample_spark.operators.similarity import (
             ann_lsh_candidates,
@@ -809,14 +796,11 @@ class TestSessionWindowParity:
 
 
 class TestContractExactDups:
-    def test_window_and_aggjoin_forms_bit_identical(self, spark):
-        """contract_exact_dups (the default window form; payload rides
-        the fp exchange) and contract_exact_dups_aggjoin (the skew-proof
-        viral-corpus switch of SCALE.md §4) must
-        return the same (members, reps) on a pool with a viral group,
-        singletons, ties at the min id, and an empty payload."""
+    def test_groups_viral_ties_and_empty_payload(self, spark):
+        """contract_exact_dups on a pool with a viral group, singletons,
+        ties at the min id, and an empty payload."""
         from columnar_estimator_sample_spark.operators.dedup import (
-            contract_exact_dups, contract_exact_dups_aggjoin,
+            contract_exact_dups,
         )
 
         rows = [(7, "viral"), (3, "viral"), (11, "viral"), (30, "viral"),
@@ -824,13 +808,12 @@ class TestContractExactDups:
                 (20, "pair"), (21, "pair")]
         df = spark.createDataFrame(rows, ["doc_id", "text"])
         m1, r1 = contract_exact_dups(df, "doc_id", "text")
-        m2, r2 = contract_exact_dups_aggjoin(df, "doc_id", "text")
-        assert sorted(map(tuple, m1.collect())) == \
-            sorted(map(tuple, m2.collect()))
-        assert sorted(map(tuple, r1.collect())) == \
-            sorted(map(tuple, r2.collect()))
         # spot-check the contract itself: viral group -> gid 3, gsz 4
         mem = {r["doc_id"]: (r["gid"], r["gsz"]) for r in m1.collect()}
         assert mem[7] == (3, 4) and mem[30] == (3, 4)
         assert mem[5] == (5, 2) and mem[9] == (5, 2)
         assert mem[1] == (1, 1)
+        # one representative per group: its min id with the payload
+        assert sorted(map(tuple, r1.collect())) == [
+            (1, "solo-a"), (2, "solo-b"), (3, "viral"), (5, ""),
+            (20, "pair")]

@@ -154,22 +154,30 @@ def test_entry_smoke(spark):
     assert df.columns == ["n_name", "revenue"]
 
 
-# Session confs a query build or drain may leave changed, each with its
-# reason. Any other key that differs after a run leaks into every later
-# query of the session.
+# Session confs a query build or drain may write, each with its reason.
+# Any other key it writes or leaves changed leaks into every later query
+# of the session.
 CONF_LEAK_ALLOWED = {
     # registry._with_conf_pins: the per-query AQE coalescing-floor pins
     "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-    # sources.tables.events_table: the events funnel needs UTC day
-    # boundaries on plain driver sessions (tests/test_tz_invariance.py)
-    "spark.sql.session.timeZone",
     # plans.stats: the NDV extension's broadcast-table input
     "spark.graft.ndv.broadcastTables",
 }
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_runs(spark, sf_dir, name):
+def test_query_runs(spark, sf_dir, name, monkeypatch):
+    # a write of the value the session already holds changes nothing the
+    # before/after diff can see, so record the writes themselves
+    from pyspark.sql.conf import RuntimeConfig
+    written = set()
+    conf_set = RuntimeConfig.set
+
+    def record(self, key, value):
+        written.add(key)
+        return conf_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
     before = dict(spark.conf.getAll)
     df = QUERIES[name](spark, sf_dir)
     assert df.count() >= 0
@@ -179,6 +187,8 @@ def test_query_runs(spark, sf_dir, name):
               if before.get(k) != after.get(k)
               and k not in CONF_LEAK_ALLOWED}
     assert not leaked, f"{name} left session confs changed: {leaked}"
+    assert written <= CONF_LEAK_ALLOWED, (
+        f"{name} wrote session confs: {sorted(written - CONF_LEAK_ALLOWED)}")
 
 
 @pytest.mark.parametrize("name", FAST_DIFF)

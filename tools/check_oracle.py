@@ -19,6 +19,17 @@ import time
 import duckdb
 import pandas as pd
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def use_checkout() -> None:
+    """Import the package from this checkout, both here and in Spark's
+    Python workers, which start in the working directory. Call before
+    the session starts: the JVM hands its environment to the workers."""
+    sys.path.insert(0, REPO)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [REPO] + [p for p in [os.environ.get("PYTHONPATH")] if p])
+
 
 def source_tree_hash(repo: str) -> str:
     """Digest of every query-relevant source file (the package +
@@ -176,7 +187,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
+    use_checkout()
     import __spark_entry__ as entrymod
     from columnar_estimator_sample_spark.session import get_spark
 
@@ -236,8 +247,7 @@ def main() -> int:
     if emit_json:
         import json
         import subprocess
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        out = os.path.join(repo, out_name)
+        out = os.path.join(REPO, out_name)
         prev = None
         if only and os.path.exists(out):
             # subset run: MERGE the fresh rows into the existing ledger
@@ -273,10 +283,10 @@ def main() -> int:
         # (subset merges re-stamp too — their rows come from the CURRENT
         # sources, and a merge into a ledger whose other rows predate a
         # source edit should go red, not hide it).
-        payload["source_sha"] = source_tree_hash(repo)
+        payload["source_sha"] = source_tree_hash(REPO)
         try:
             payload["generated_at_commit"] = subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"], cwd=repo,
+                ["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
                 capture_output=True, text=True, timeout=10).stdout.strip()
         except Exception:  # noqa: BLE001
             payload["generated_at_commit"] = "unknown"

@@ -7,18 +7,22 @@ inherits the host environment. Two defect classes already slipped
 through that gap (round 4: HUGEINT oracle types; round 5: session-
 timezone-dependent day boundaries), so this tool replays the driver's
 shape exactly: plain session, default confs, the host timezone as-is
-(run under `TZ=America/New_York ...` to harden), comparing every
+(run under `TZ=Europe/London ...` to harden: its summer offset moves a
+zone-less midnight date across a day boundary), comparing every
 registered query against its oracle with the same type-strict compare
-as check_oracle.
+as check_oracle, then checking that no query changed the session
+timezone. The package is imported from the checkout this file lives in,
+whatever the working directory.
 
 Run:  python tools/driver_replica.py [sf_dir] [query ...]
-      TZ=America/New_York python tools/driver_replica.py   # non-UTC probe
+      TZ=Europe/London python tools/driver_replica.py   # non-UTC probe
 
 Exit 1 on any failure.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -28,15 +32,16 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import SparkSession
 
-    from check_oracle import compare, compare_types, run_duckdb
+    from check_oracle import compare, compare_types, run_duckdb, use_checkout
 
+    use_checkout()
     spark = (SparkSession.builder.master("local[16]")
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
+    host_tz = spark.conf.get("spark.sql.session.timeZone")
 
     import __spark_entry__ as entrymod
     qs = entrymod.queries()
@@ -67,6 +72,10 @@ def main() -> int:
                 print(f"   - {p}")
     print(f"\n{n} queries under plain session "
           f"(host TZ), {fails} failed")
+    end_tz = spark.conf.get("spark.sql.session.timeZone")
+    if end_tz != host_tz:
+        print(f"FAIL session timezone changed: {host_tz} -> {end_tz}")
+        return 1
     return 1 if fails else 0
 
 
