@@ -48,21 +48,19 @@ class TrainResult:
 
 
 def build_features(df: DataFrame, label_col: str = "label",
-                   drop: tuple[str, ...] = ("row_hash",),
-                   bucket_multiplier: int = 5,
-                   buckets: dict[str, int] | None = None)\
+                   drop: tuple[str, ...] = ("row_hash",), *,
+                   buckets: dict[str, int])\
         -> tuple[DataFrame, list[str]]:
     """Schema-driven feature construction (trainer.py:256-269):
       numeric  = float columns (the ``*_norm`` contract),
-      categorical = string columns, hashed into NDV*bucket_multiplier
-      buckets sized from the measured cardinality catalog.
+      categorical = string columns, hashed into ``buckets[c]`` buckets.
 
-    ``buckets`` (column -> bucket count) pins the hash space: the trainer
-    computes it ONCE (on the training frame) and passes the same catalog
-    for the eval frame — the reference's fixed ``vocab_size`` dict
-    (trainer.py:91-118). Re-measuring NDV per frame would map the same
-    categorical value to different buckets in train vs test (train/serve
-    skew).
+    ``buckets`` (column -> bucket count, from :func:`measure_buckets`)
+    pins the hash space: the trainer measures it ONCE (on the training
+    frame) and passes the same catalog for the eval frame — the
+    reference's fixed ``vocab_size`` dict (trainer.py:91-118).
+    Re-measuring NDV per frame would map the same categorical value to
+    different buckets in train vs test (train/serve skew).
 
     Returns (frame with feature columns, feature column names)."""
     # the reference's transform_row (trainer.py:165-168): drop unused
@@ -73,9 +71,6 @@ def build_features(df: DataFrame, label_col: str = "label",
                and f.name != label_col]
     categorical = [f.name for f in df.schema.fields
                    if f.dataType.simpleString() == "string"]
-    if buckets is None:
-        buckets = hash_bucket_sizes(ndv_catalog(df, categorical),
-                                    bucket_multiplier) if categorical else {}
     out = df
     feature_cols = list(numeric)
     for c in categorical:
@@ -90,16 +85,16 @@ def build_features(df: DataFrame, label_col: str = "label",
     return out, feature_cols
 
 
-def measure_buckets(df: DataFrame, drop: tuple[str, ...] = ("row_hash",),
-                    bucket_multiplier: int = 5) -> dict[str, int]:
-    """Measure the NDV*multiplier bucket catalog once (reference
-    ``vocab_size``, trainer.py:91-118) — shared by train AND eval frames
-    so the hash feature space is identical across both."""
+def measure_buckets(df: DataFrame, drop: tuple[str, ...] = ("row_hash",))\
+        -> dict[str, int]:
+    """Measure the NDV*5 bucket catalog once (reference ``vocab_size``,
+    trainer.py:91-118) — shared by train AND eval frames so the hash
+    feature space is identical across both."""
     categorical = [f.name for f in df.schema.fields
                    if f.dataType.simpleString() == "string"
                    and f.name not in drop]
-    return (hash_bucket_sizes(ndv_catalog(df, categorical),
-                              bucket_multiplier) if categorical else {})
+    return (hash_bucket_sizes(ndv_catalog(df, categorical))
+            if categorical else {})
 
 
 def train_linear(train_df: DataFrame, test_df: DataFrame,

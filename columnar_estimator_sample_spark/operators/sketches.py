@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from columnar_estimator_sample_spark.functions.hashing import (
     MERSENNE_P, h64, minhash_params, sql_h64)
+from columnar_estimator_sample_spark.operators.events import US_PER_DAY
 from columnar_estimator_sample_spark.registry import register
 from columnar_estimator_sample_spark.sources.tables import table
 
@@ -288,7 +289,7 @@ WORD_BITS = 63  # bit positions 0..62: a shift into the sign bit is an
     oracle=f"""
     WITH ud AS (
         SELECT DISTINCT user_id,
-               CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day
+               CAST(epoch_us(ts) // {US_PER_DAY} AS BIGINT) AS day
         FROM events
     ), words AS (
         SELECT day, user_id // {WORD_BITS} AS w,
@@ -327,7 +328,6 @@ def q_bitmap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     only corpus-sized stage; everything after runs on |days| x
     |users|/{WORD_BITS} words. Bit-exact in both engines (sign bit kept
     free — DuckDB checks shift overflow)."""
-    from columnar_estimator_sample_spark.operators.events import US_PER_DAY
     ev = table(spark, sf_dir, "events")
     ud = (ev.select("user_id",
                     F.expr(f"CAST(us div {US_PER_DAY} AS BIGINT)")
@@ -490,9 +490,9 @@ def q_bloom_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_capture_recapture",
-    oracle="""
+    oracle=f"""
     WITH d AS (
-        SELECT user_id, CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day
+        SELECT user_id, CAST(epoch_us(ts) // {US_PER_DAY} AS BIGINT) AS day
         FROM events
     ), rng AS (SELECT MIN(day) AS mn, MAX(day) AS mx FROM d),
     s1 AS (
@@ -525,7 +525,6 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two distinct-user sets (one scan), one equi-join for the
     recapture count, a 1-row report — every piece mergeable."""
-    from columnar_estimator_sample_spark.operators.events import US_PER_DAY
     ev = table(spark, sf_dir, "events")
     d = ev.select("user_id",
                   F.expr(f"CAST(us div {US_PER_DAY} AS BIGINT)")
@@ -563,7 +562,7 @@ KMV_SPACE = 1 << 60              # h64 hash space: 60 bits
     oracle=f"""
     WITH e AS (
         SELECT user_id,
-               CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day
+               CAST(epoch_us(ts) // {US_PER_DAY} AS BIGINT) AS day
         FROM events
     ), rng AS (SELECT MIN(day) AS mn, MAX(day) AS mx FROM e),
     d AS (
@@ -651,7 +650,6 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference tie-in: the reference catalogs per-column NDV for feature
     sizing (/root/reference/trainer.py:91-118); KMV extends that catalog
     to cross-source overlap auditing."""
-    from columnar_estimator_sample_spark.operators.events import US_PER_DAY
     ev = table(spark, sf_dir, "events")
     e = ev.select("user_id",
                   F.expr(f"CAST(us div {US_PER_DAY} AS BIGINT)").alias("day"))
@@ -828,7 +826,7 @@ def _hll_rollup_oracle() -> str:
     return f"""
     WITH e AS (
         SELECT user_id,
-               CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day
+               CAST(epoch_us(ts) // {US_PER_DAY} AS BIGINT) AS day
         FROM events
     ), hx AS (
         SELECT day // 7 AS week, day,
@@ -896,7 +894,6 @@ def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     beside n_sketches (days merged); production drops it. Registers,
     ranks, and the integer harmonic-mean estimate are the q_hll_ndv
     contract — bit-identical in both engines."""
-    from columnar_estimator_sample_spark.operators.events import US_PER_DAY
     ev = table(spark, sf_dir, "events").select(
         "user_id", F.expr(f"us div {US_PER_DAY}").alias("day"))
     hx = ev.select(

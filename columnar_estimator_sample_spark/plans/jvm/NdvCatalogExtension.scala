@@ -1,35 +1,38 @@
 /* Catalyst-injected cardinality-estimator rule (the north-star "custom
  * estimator plugin" clause, delivered literally).
  *
- * The PySpark side maintains an NDV/row-count catalog
- * (plans/stats.py::ndv_catalog — ANALYZE-backed, approx_count_distinct
- * refreshed). This extension closes the loop INSIDE Catalyst: the
- * catalog's verdict of "dimension-small" tables is published to
- * `spark.graft.ndv.broadcastTables` (comma-separated table names, see
- * plans/stats.py::ndv_broadcast_conf), and the injected optimizer rule
- * rewrites every un-hinted Join whose side scans only those tables to
- * carry an explicit BROADCAST join hint — the planner then picks
- * BroadcastHashJoin regardless of the size-estimate heuristics
- * (demonstrated by tests/test_jvm_extension.py: with
- * autoBroadcastJoinThreshold=-1 the same query flips SortMergeJoin ->
- * BroadcastHashJoin exactly when the rule is active).
+ * The injected optimizer rule rewrites every un-hinted Join whose side
+ * scans only small parquet relations to carry an explicit BROADCAST join
+ * hint, so the planner picks BroadcastHashJoin regardless of the
+ * size-estimate heuristics. A relation is small when the row counts in
+ * its parquet footers sum to at most MaxRows; the rule reads them itself
+ * (zero Spark jobs) and caches them per file. Demonstrated by
+ * tests/test_jvm_extension.py: with autoBroadcastJoinThreshold=-1 the
+ * same query flips SortMergeJoin -> BroadcastHashJoin exactly when the
+ * rule is active.
  *
  * Scale rationale: at 100 TB the file-size heuristic
  * (autoBroadcastJoinThreshold) routinely misfires — a 10 GB dimension
  * with 200 distinct join keys is broadcast-profitable, a 1 MB fact
- * sample is not. Driving the decision from the maintained NDV/row-count
- * catalog instead of on-disk bytes is precisely what a custom
- * cardinality estimator is for.
+ * sample is not. Driving the decision from maintained row counts instead
+ * of on-disk bytes is precisely what a custom cardinality estimator is
+ * for.
  *
  * Compiled OFFLINE against the jars PySpark ships (no network, no sbt
  * resolution): python tools/build_jvm_extension.py
  */
 package sparkgraft
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 class NdvCatalogExtension extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -37,59 +40,58 @@ class NdvCatalogExtension extends (SparkSessionExtensions => Unit) {
   }
 }
 
+object NdvBroadcastRule {
+  /** Broadcast a join side whose relations hold at most this many rows
+    * (dimension tables here: nation=25, region=5, supplier=10k/sf). */
+  val MaxRows: Long = 1000000L
+}
+
 case class NdvBroadcastRule(session: SparkSession)
     extends Rule[LogicalPlan] {
+  import NdvBroadcastRule.MaxRows
 
-  private val confKey = "spark.graft.ndv.broadcastTables"
+  /** Footer row count per (path, length, modificationTime): a rewritten
+    * file gets a new key, so the cache never answers for stale bytes. */
+  private val footerRows = TrieMap.empty[(String, Long, Long), Long]
 
-  private def smallNames: Set[String] =
-    session.conf
-      .get(confKey, "")
-      .split(",")
-      .map(_.trim.toLowerCase)
-      .filter(_.nonEmpty)
-      .toSet
+  private def rows(f: FileStatus): Long =
+    footerRows.getOrElseUpdate(
+      (f.getPath.toString, f.getLen, f.getModificationTime), {
+        val conf = session.sparkContext.hadoopConfiguration
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try reader.getRecordCount finally reader.close()
+      })
 
-  /** "nation.parquet" / "nation" -> "nation" */
-  private def stem(fileName: String): String = {
-    val n = fileName.toLowerCase
-    if (n.endsWith(".parquet")) n.dropRight(".parquet".length) else n
-  }
-
-  /** A side is catalog-small iff every leaf it scans is a relation over
-    * a table the NDV catalog marked broadcastable (path stem for
-    * file-based scans, catalog identifier for warehouse tables). */
-  private def isSmall(plan: LogicalPlan, names: Set[String]): Boolean = {
+  /** A side is small iff every leaf it scans is a listed parquet relation
+    * whose footer row counts sum to at most MaxRows (the sum stops at the
+    * first file past the bound). Any other leaf leaves the side un-hinted. */
+  private def isSmall(plan: LogicalPlan): Boolean = {
     val leaves = plan.collectLeaves()
     leaves.nonEmpty && leaves.forall {
       case lr: LogicalRelation =>
         lr.relation match {
-          case fs: HadoopFsRelation =>
-            val roots = fs.location.rootPaths
-            roots.nonEmpty &&
-            roots.forall(p => names.contains(stem(p.getName)))
-          case _ =>
-            lr.catalogTable.exists(ct =>
-              names.contains(ct.identifier.table.toLowerCase))
+          case fs: HadoopFsRelation
+              if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+            fs.location match {
+              case index: PartitioningAwareFileIndex =>
+                index.allFiles().iterator.map(rows)
+                  .scanLeft(0L)(_ + _).forall(_ <= MaxRows)
+              case _ => false
+            }
+          case _ => false
         }
       case _ => false
     }
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val names = smallNames
-    if (names.isEmpty) return plan
-    plan.transformUp {
-      case j @ Join(left, right, _, _, hint) =>
-        val lh = hint.leftHint.orElse(
-          if (isSmall(left, names)) Some(HintInfo(Some(BROADCAST)))
-          else None)
-        val rh = hint.rightHint.orElse(
-          if (isSmall(right, names)) Some(HintInfo(Some(BROADCAST)))
-          else None)
-        if (lh != hint.leftHint || rh != hint.rightHint)
-          j.copy(hint = JoinHint(lh, rh))
-        else j
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case j @ Join(left, right, _, _, hint) =>
+      val lh = hint.leftHint.orElse(
+        if (isSmall(left)) Some(HintInfo(Some(BROADCAST))) else None)
+      val rh = hint.rightHint.orElse(
+        if (isSmall(right)) Some(HintInfo(Some(BROADCAST))) else None)
+      if (lh != hint.leftHint || rh != hint.rightHint)
+        j.copy(hint = JoinHint(lh, rh))
+      else j
   }
 }

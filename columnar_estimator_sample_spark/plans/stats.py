@@ -111,19 +111,12 @@ def actual_vs_estimated(df: DataFrame) -> dict[str, object]:
 
 
 # --- Catalyst-injected estimator plugin (JVM side) ---------------------
-# The literal "custom cardinality estimator plugin" of the north star:
-# plans/jvm/NdvCatalogExtension.scala is a Scala SparkSessionExtensions
-# rule (compiled offline against PySpark's own jars into
-# plans/jvm/sparkgraft-ndv-ext.jar by tools/build_jvm_extension.py) that
-# reads `spark.graft.ndv.broadcastTables` and rewrites un-hinted joins
-# against those tables to BROADCAST — so the NDV catalog drives build-
-# side selection inside Catalyst itself, independent of file-size
-# heuristics. tests/test_jvm_extension.py proves the plan flip
-# (SortMergeJoin -> BroadcastHashJoin) in a fresh JVM.
-
-#: broadcast a table when the NDV catalog bounds its row count below
-#: this (dimension tables here: nation=25, region=5, supplier=10k/sf)
-NDV_BROADCAST_MAX_ROWS = 1_000_000
+# plans/jvm/NdvCatalogExtension.scala (compiled offline into
+# plans/jvm/sparkgraft-ndv-ext.jar by tools/build_jvm_extension.py) is
+# one optimizer rule: it BROADCAST-hints every un-hinted join side whose
+# parquet relations' footer row counts sum to at most its MaxRows.
+# tests/test_jvm_extension.py proves the plan flip (SortMergeJoin ->
+# BroadcastHashJoin) in a fresh JVM.
 
 
 def extension_jar() -> str:
@@ -131,13 +124,3 @@ def extension_jar() -> str:
     import os
     return os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "jvm", "sparkgraft-ndv-ext.jar")
-
-
-def ndv_broadcast_conf(row_counts: dict[str, int],
-                       max_rows: int = NDV_BROADCAST_MAX_ROWS) -> str:
-    """Derive `spark.graft.ndv.broadcastTables` from a table->rowcount
-    catalog (e.g. {t: table(spark, sf, t).count()} refreshed alongside
-    :func:`ndv_catalog`): the comma-separated names whose catalogued
-    cardinality is broadcast-safe."""
-    return ",".join(sorted(t for t, n in row_counts.items()
-                           if n <= max_rows))

@@ -61,13 +61,8 @@ def q_ndv_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Catalog-driven broadcast join (the injected Catalyst rule, dogfooded)
+# Row-count-driven broadcast join (the injected Catalyst rule, dogfooded)
 # ---------------------------------------------------------------------------
-
-#: tables the row-count catalog screens for broadcast-safety before the
-#: star join below (every dimension of the customer->nation->region path)
-_NDV_DIM_TABLES = ["region", "nation", "customer"]
-
 
 @register(
     "q_ndv_broadcast_join",
@@ -84,28 +79,14 @@ _NDV_DIM_TABLES = ["region", "nation", "customer"]
     """,
 )
 def q_ndv_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Un-hinted star join whose build-side selection is driven by the
-    maintained row-count catalog, not file-size heuristics: the query
-    refreshes the catalog (one count per candidate dimension) and
-    publishes its broadcast verdict to ``spark.graft.ndv.broadcastTables``
-    — the conf the Catalyst-injected NdvCatalogExtension rule reads
-    (plans/jvm/, loaded via ``get_spark(ndv_extension=True)``). Under an
-    extension-loaded session the physical plan broadcasts nation and
-    region even with autoBroadcastJoinThreshold=-1 (plan-asserted in the
-    fresh-JVM test); results are identical either way, which is what the
-    oracle certifies.
-
-    Scale: the catalog refresh is count-only metadata work (parquet
-    row-group footers); at 100 TB the verdict comes from the persisted
-    NDV catalog instead of per-query counts — the rule's conf surface is
-    the same."""
-    from columnar_estimator_sample_spark.plans.stats import (
-        ndv_broadcast_conf,
-    )
-
-    counts = {t: table(spark, sf_dir, t).count() for t in _NDV_DIM_TABLES}
-    spark.conf.set("spark.graft.ndv.broadcastTables",
-                   ndv_broadcast_conf(counts))
+    """Un-hinted star join whose build-side selection comes from row
+    counts, not file-size heuristics. Under an extension-loaded session
+    (plans/jvm/, ``get_spark(ndv_extension=True)``) the injected rule
+    reads the parquet footers of customer, nation and region and
+    broadcasts nation and region even with autoBroadcastJoinThreshold=-1
+    (plan-asserted in the fresh-JVM test). The build runs no Spark job;
+    results are identical either way, which is what the oracle
+    certifies."""
     cust = table(spark, sf_dir, "customer")
     nat = table(spark, sf_dir, "nation")
     reg = table(spark, sf_dir, "region")

@@ -7,9 +7,10 @@ centralizes them so tests, perfbench and the driver entry all run the same way.
 
 Scale notes (100 TB / 1000-executor design intent):
   * AQE on -> runtime coalescing, skew-join splitting, dynamic broadcast.
-  * CBO + histogram stats on -> join reordering fed by the stats module
-    (plans/stats.py), the Spark-native analogue of the reference's
-    hand-maintained cardinality catalog (trainer.py:91-118).
+  * CBO + histogram stats on -> join reordering once relations carry
+    statistics. Path-based table handles carry no row counts, so nothing
+    feeds CBO yet: the analogue of the reference's cardinality catalog
+    (trainer.py:91-118), plans/stats.py, is not a Catalyst input.
   * Arrow on -> columnar exchange for every pandas-UDF operator.
   * UTC session timezone -> timestamp semantics identical to the DuckDB
     oracle and independent of host TZ.
@@ -63,9 +64,9 @@ def get_spark(app_name: str = "columnar_estimator_sample_spark",
               ndv_extension: bool = False) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``ndv_extension=True`` loads the Catalyst-injected NDV estimator
-    plugin (plans/jvm/) so the maintained cardinality catalog drives
-    join build-side selection inside the optimizer itself. Opt-in
+    ``ndv_extension=True`` loads the Catalyst-injected estimator rule
+    (plans/jvm/) so parquet footer row counts drive join build-side
+    selection inside the optimizer itself. Opt-in
     because ``spark.sql.extensions`` is a static conf: it only takes
     effect when this call CREATES the JVM — on an already-running shared
     session it is ignored (Spark logs a warning), which is why the

@@ -14,7 +14,7 @@ from columnar_estimator_sample_spark.operators.events import (
 from columnar_estimator_sample_spark.operators.textstats import (
     q_bigram_novelty)
 from columnar_estimator_sample_spark.operators.vq import q_embed_centroids
-from columnar_estimator_sample_spark.sources.tables import table
+from columnar_estimator_sample_spark.sources.tables import epoch_us, table
 
 
 class TestRateAnomaly:
@@ -634,15 +634,12 @@ class TestValueMigration:
             assert 1 <= r.tier_first <= 3 and 1 <= r.tier_second <= 3
             assert r.n_customers >= 1
         # matrix total == customers with orders in both halves
-        orders = table(spark, sf_dir, "orders")
-        mn, mx = orders.agg(
-            F2.min(F2.expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))")),
-            F2.max(F2.expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))"))
-        ).first()
+        orders = table(spark, sf_dir, "orders").select(
+            "o_custkey", epoch_us("o_orderdate").alias("us"))
+        mn, mx = orders.agg(F2.min("us"), F2.max("us")).first()
         half = orders.select(
             "o_custkey",
-            F2.expr(f"CASE WHEN unix_micros(CAST(o_orderdate AS TIMESTAMP))"
-                    f" < ({mn} + {mx}) div 2 THEN 1 ELSE 2 END")
+            F2.expr(f"CASE WHEN us < ({mn} + {mx}) div 2 THEN 1 ELSE 2 END")
             .alias("h")).distinct()
         both = (half.groupBy("o_custkey").count()
                 .filter(F2.col("count") == 2).count())

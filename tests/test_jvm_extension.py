@@ -1,13 +1,14 @@
-"""The Catalyst-injected NDV estimator plugin (plans/jvm/) must flip the
-join strategy from the NDV catalog's verdict.
+"""The Catalyst-injected estimator rule (plans/jvm/) must flip the join
+strategy from the row counts in the parquet footers.
 
 `spark.sql.extensions` is a static conf — it can only be applied when the
 JVM starts — so this test drives a FRESH interpreter+JVM via subprocess
 instead of the shared session fixture. One subprocess proves all three
-contracts: the extension class loads, an un-hinted join against a
-catalog-small table plans as BroadcastHashJoin (with the size heuristic
-disabled, so only the rule can be responsible), and the same join without
-a catalog entry stays SortMergeJoin with identical results.
+contracts: the extension class loads; an un-hinted join of small parquet
+tables plans as BroadcastHashJoin with the rule on (size heuristic
+disabled, so only the rule can be responsible) and as SortMergeJoin with
+the same rows once `spark.sql.optimizer.excludedRules` turns it off; and
+a join the rule cannot count (`spark.range` frames) stays SortMergeJoin.
 """
 
 from __future__ import annotations
@@ -24,9 +25,7 @@ _PROBE = r"""
 import sys
 sys.path.insert(0, %(repo)r)
 from pyspark.sql import SparkSession
-from columnar_estimator_sample_spark.plans.stats import (
-    extension_jar, ndv_broadcast_conf,
-)
+from columnar_estimator_sample_spark.plans.stats import extension_jar
 jar = extension_jar()
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.jars", jar)
@@ -39,26 +38,35 @@ spark = (SparkSession.builder.master("local[4]")
 spark.sparkContext.setLogLevel("ERROR")
 sf = %(sf_dir)r
 
-def mk():
+RULE = "spark.sql.optimizer.excludedRules"
+
+def star():
     cust = spark.read.parquet(f"{sf}/customer.parquet")
     nat = spark.read.parquet(f"{sf}/nation.parquet")
+    reg = spark.read.parquet(f"{sf}/region.parquet")
     return (cust.join(nat, cust.c_nationkey == nat.n_nationkey)
-            .select("c_name", "n_name"))
+            .join(reg, nat.n_regionkey == reg.r_regionkey)
+            .select("c_name", "n_name", "r_name"))
+
+def ranges():
+    a = spark.range(100)
+    b = spark.range(50).withColumnRenamed("id", "k")
+    return a.join(b, a.id == b.k)
 
 def strategy(df):
     p = df._jdf.queryExecution().executedPlan().toString()
-    return "broadcast" if "BroadcastHashJoin" in p else (
-        "sortmerge" if "SortMergeJoin" in p else "other")
+    bhj, smj = "BroadcastHashJoin" in p, "SortMergeJoin" in p
+    return "broadcast" if bhj and not smj else (
+        "sortmerge" if smj and not bhj else "other")
 
-# catalog empty -> heuristics alone (disabled) -> sort-merge
-spark.conf.set("spark.graft.ndv.broadcastTables", "")
-off = mk()
-print("OFF", strategy(off), off.count())
-# catalog marks nation broadcast-safe -> the injected rule must flip it
-spark.conf.set("spark.graft.ndv.broadcastTables",
-               ndv_broadcast_conf({"nation": 25, "customer": 10**9}))
-on = mk()
-print("ON", strategy(on), on.count())
+for case, mk in (("STAR", star), ("RANGE", ranges)):
+    on = mk()
+    print(case, "ON", strategy(on), on.count())
+    # the same JVM with the rule excluded: heuristics alone (disabled)
+    spark.conf.set(RULE, "sparkgraft.NdvBroadcastRule")
+    off = mk()
+    print(case, "OFF", strategy(off), off.count())
+    spark.conf.unset(RULE)
 """
 
 
@@ -107,21 +115,33 @@ def test_committed_jar_matches_committed_source():
         "of NdvCatalogExtension.scala — rerun tools/build_jvm_extension.py")
 
 
-@pytest.mark.skipif(
-    not os.path.exists(_JAR),
-    reason="extension jar not built (tools/build_jvm_extension.py)")
-def test_injected_rule_flips_join_strategy(sf_dir):
-    probe = _PROBE % {"repo": REPO, "sf_dir": sf_dir}
-    r = subprocess.run([sys.executable, "-c", probe],
-                       capture_output=True, text=True, timeout=300)
+@pytest.fixture(scope="module")
+def probe(sf_dir):
+    """{(case, "ON"|"OFF"): [strategy, rows]} from one fresh JVM."""
+    if not os.path.exists(_JAR):
+        pytest.skip("extension jar not built (tools/build_jvm_extension.py)")
+    r = subprocess.run(
+        [sys.executable, "-c", _PROBE % {"repo": REPO, "sf_dir": sf_dir}],
+        capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, r.stderr[-2000:]
-    lines = dict(ln.split(" ", 1) for ln in r.stdout.splitlines()
-                 if ln.startswith(("ON", "OFF")))
-    off_strat, off_rows = lines["OFF"].split()
-    on_strat, on_rows = lines["ON"].split()
-    assert off_strat == "sortmerge", r.stdout
-    assert on_strat == "broadcast", r.stdout
-    assert off_rows == on_rows and int(off_rows) > 0, r.stdout
+    return {tuple(ln.split()[:2]): ln.split()[2:]
+            for ln in r.stdout.splitlines()
+            if ln.startswith(("STAR", "RANGE"))}
+
+
+def test_injected_rule_flips_join_strategy(probe):
+    assert probe[("STAR", "ON")][0] == "broadcast", probe
+    assert probe[("STAR", "OFF")][0] == "sortmerge", probe
+    rows = probe[("STAR", "ON")][1]
+    assert rows == probe[("STAR", "OFF")][1] and int(rows) > 0, probe
+
+
+def test_rule_leaves_uncountable_join_alone(probe):
+    """spark.range leaves have no parquet footer: the rule adds no hint."""
+    assert probe[("RANGE", "ON")][0] == "sortmerge", probe
+    assert probe[("RANGE", "OFF")][0] == "sortmerge", probe
+    rows = probe[("RANGE", "ON")][1]
+    assert rows == probe[("RANGE", "OFF")][1] and int(rows) > 0, probe
 
 
 _ENGINE_PROBE = r"""
@@ -146,9 +166,10 @@ print("ROWS", df.count())
     reason="extension jar not built (tools/build_jvm_extension.py)")
 def test_engine_session_optin_drives_broadcast(sf_dir):
     """get_spark(ndv_extension=True) must load the extension, and the
-    registered q_ndv_broadcast_join — which publishes the row-count
-    catalog's verdict itself — must plan as pure broadcast joins even
-    with the size heuristic disabled (fresh JVM: static conf)."""
+    registered q_ndv_broadcast_join — a plain star join that sets
+    nothing — must plan as pure broadcast joins from its tables' footer
+    row counts even with the size heuristic disabled (fresh JVM: static
+    conf)."""
     probe = _ENGINE_PROBE % {"repo": REPO, "sf_dir": sf_dir}
     r = subprocess.run([sys.executable, "-c", probe],
                        capture_output=True, text=True, timeout=300)

@@ -29,9 +29,10 @@ class TestML:
         assert labels == {0.0, 1.0}
 
     def test_build_features_schema_driven(self, frames):
-        from columnar_estimator_sample_spark.ml.train import build_features
+        from columnar_estimator_sample_spark.ml.train import (
+            build_features, measure_buckets)
         train, _ = frames
-        out, cols = build_features(train)
+        out, cols = build_features(train, buckets=measure_buckets(train))
         assert "row_hash" not in out.columns  # dropped (trainer.py:165-168)
         assert all(c.endswith("_norm") or c.endswith("_bucket")
                    for c in cols)

@@ -214,6 +214,18 @@ class TestZOrderLayout:
         assert z.avg_span_x_pm < 1000 and z.avg_span_y_pm < 1000
 
 
+def _lineitem_day_cents(spark, sf_dir):
+    """lineitem as (ship day since epoch, extended price in cents)."""
+    from columnar_estimator_sample_spark.operators.events import US_PER_DAY
+    from columnar_estimator_sample_spark.sources.tables import epoch_us, table
+    return table(spark, sf_dir, "lineitem").select(
+        epoch_us("l_shipdate").alias("us"),
+        F.expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100"
+               " AS BIGINT)").alias("cents")).select(
+        F.expr(f"CAST(us div {US_PER_DAY} AS BIGINT)").alias("day"),
+        "cents")
+
+
 class TestMaterializedRollup:
     def test_weekly_answers_from_daily_mv(self, spark, sf_dir):
         """Warehouse MV pattern: materialize the daily revenue rollup
@@ -224,15 +236,8 @@ class TestMaterializedRollup:
         table is not."""
         from pyspark.sql import functions as F
         from columnar_estimator_sample_spark.sources.io import ctas
-        from columnar_estimator_sample_spark.sources.tables import table
-        li = table(spark, sf_dir, "lineitem")
-        cents = F.expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100"
-                       " AS BIGINT)")
-        daily = (li.select(
-                     F.expr("CAST(unix_micros(CAST(l_shipdate AS TIMESTAMP))"
-                            " div 86400000000 AS BIGINT)").alias("day"),
-                     cents.alias("cents"))
-                 .groupBy("day")
+        li = _lineitem_day_cents(spark, sf_dir)
+        daily = (li.groupBy("day")
                  .agg(F.sum("cents").alias("rev"),
                       F.count("*").cast("long").alias("n")))
         mv = ctas(spark, "mv_daily_revenue", daily)
@@ -240,11 +245,7 @@ class TestMaterializedRollup:
             weekly_mv = (mv.groupBy(F.expr("day div 7").alias("week"))
                          .agg(F.sum("rev").alias("rev"),
                               F.sum("n").alias("n")))
-            weekly_raw = (li.select(
-                              F.expr("CAST(unix_micros(CAST(l_shipdate AS TIMESTAMP))"
-                                     " div 86400000000 AS BIGINT)")
-                              .alias("day"), cents.alias("cents"))
-                          .groupBy(F.expr("day div 7").alias("week"))
+            weekly_raw = (li.groupBy(F.expr("day div 7").alias("week"))
                           .agg(F.sum("cents").alias("rev"),
                                F.count("*").cast("long").alias("n")))
             a = {r.week: (r.rev, r.n) for r in weekly_mv.collect()}
@@ -260,13 +261,7 @@ class TestMaterializedRollup:
         equal a full recompute over old+new. This is the nightly-load
         path: touch only the affected MV rows, never rescan history."""
         from pyspark.sql import functions as F
-        from columnar_estimator_sample_spark.sources.tables import table
-        li = table(spark, sf_dir, "lineitem")
-        day = F.expr("CAST(unix_micros(CAST(l_shipdate AS TIMESTAMP))"
-                     " div 86400000000 AS BIGINT)")
-        cents = F.expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100"
-                       " AS BIGINT)")
-        base = li.select(day.alias("day"), cents.alias("cents"))
+        base = _lineitem_day_cents(spark, sf_dir)
         cut = base.agg(F.max("day")).collect()[0][0]  # last day = "new"
         old = base.filter(F.col("day") < cut)
         new = base.filter(F.col("day") >= cut)

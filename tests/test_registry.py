@@ -160,8 +160,6 @@ def test_entry_smoke(spark):
 CONF_LEAK_ALLOWED = {
     # registry._with_conf_pins: the per-query AQE coalescing-floor pins
     "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-    # plans.stats: the NDV extension's broadcast-table input
-    "spark.graft.ndv.broadcastTables",
 }
 
 

@@ -76,9 +76,9 @@ BUILD_RUNS_JOBS = {
     # driver-loop algorithm: BPE merge selection collects the single
     # best pair per round (operators/textstats.py)
     "q_bpe_learn",
-    # dogfood instrumentation: the profiler / NDV-catalog queries RUN
-    # instrumented jobs by design (plans/profiler.py, plans/stats.py)
-    "q_cbo_estimation", "q_ndv_broadcast_join",
+    # dogfood instrumentation: the profiler query RUNS
+    # instrumented jobs by design (plans/profiler.py)
+    "q_cbo_estimation",
     # r14: the deterministic twins run their parents' bounded probes at
     # build (q_cbo_actuals executes the 3 probe counts; the approx pair
     # runs the two one-row sketch/rank aggregates)
@@ -221,7 +221,6 @@ COLLECT_ALLOWED = {
     # two returned percentile values) — corpus-size independent
     "q_approx_stats": "3 one-row aggregate collects",
     "q_approx_stats_exact": "same bound (projection of q_approx_stats)",
-    "q_ndv_broadcast_join": "catalog NDV rows (1 row/column)",
     "q_ndv_catalog": "catalog NDV rows (1 row/column)",
     # streaming availableNow drains: the landed result IS a bounded
     # census (distinct windows/sessions at gate SF); re-wrapped via
