@@ -47,10 +47,12 @@ def _keep_unchanged_zip_directories() -> None:
     ``pyspark.zip`` (1,328 entries) first on every worker's PYTHONPATH,
     so a worker holds about 15 such importers. Measured on 4 cores: one
     call takes 0.10-0.16 s on an idle core and 0.2-0.4 s with 4 tasks
-    running, and a ``tfrecord_ingest`` request runs four worker steps in
-    series (write planner, write tasks, commit planner, landing read
-    tasks). Skipping the re-read cut a warm 512-row TFRecord write from
-    0.88 to 0.21 s and its read-back from 1.0 to 0.30 s.
+    running. While the TFRecord source was a Python DataSource, a
+    ``tfrecord_ingest`` request ran four worker steps in series (write
+    planner, write tasks, commit planner, landing read tasks), and
+    skipping the re-read cut a warm 512-row TFRecord write from 0.88 to
+    0.21 s and its read-back from 1.0 to 0.30 s; Python UDF and
+    ``applyInPandas`` tasks still pay it.
 
     The original still runs whenever the archive's ``(st_ino, st_size,
     st_mtime_ns)`` differs from the key stored on that importer at its

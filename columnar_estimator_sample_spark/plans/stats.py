@@ -70,10 +70,9 @@ def _sketchable(dt: T.DataType, col: Column) -> Column:
     return col.cast("string")
 
 
-def hash_bucket_sizes(catalog: dict[str, int],
-                      multiplier: int = 5) -> dict[str, int]:
+def hash_bucket_sizes(catalog: dict[str, int]) -> dict[str, int]:
     """The reference's sizing rule: buckets = NDV * 5 (trainer.py:264)."""
-    return {c: ndv * multiplier for c, ndv in catalog.items()}
+    return {c: ndv * 5 for c, ndv in catalog.items()}
 
 
 def analyze_tables(spark: SparkSession, names: list[str],
@@ -111,16 +110,17 @@ def actual_vs_estimated(df: DataFrame) -> dict[str, object]:
 
 
 # --- Catalyst-injected estimator plugin (JVM side) ---------------------
-# plans/jvm/NdvCatalogExtension.scala (compiled offline into
-# plans/jvm/sparkgraft-ndv-ext.jar by tools/build_jvm_extension.py) is
-# one optimizer rule: it BROADCAST-hints every un-hinted join side whose
+# plans/jvm/NdvCatalogExtension.scala (compiled offline, with the
+# tfrecord_example source, into plans/jvm/sparkgraft-ext.jar by
+# tools/build_jvm_extension.py) is one optimizer rule: it BROADCAST-hints every un-hinted join side whose
 # parquet relations' footer row counts sum to at most its MaxRows.
 # tests/test_jvm_extension.py proves the plan flip (SortMergeJoin ->
 # BroadcastHashJoin) in a fresh JVM.
 
 
 def extension_jar() -> str:
-    """Path of the committed extension jar (see tools/build_jvm_extension.py)."""
+    """Path of the engine's committed JVM jar (see
+    tools/build_jvm_extension.py)."""
     import os
     return os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "jvm", "sparkgraft-ndv-ext.jar")
+                        "jvm", "sparkgraft-ext.jar")

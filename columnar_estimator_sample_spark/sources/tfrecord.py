@@ -1,27 +1,26 @@
-"""TFRecord / tf.Example source & sink (S2) — a Spark 4 Python DataSource.
+"""TFRecord / tf.Example source & sink (S2).
 
 The reference's headline ingest is gzipped TFRecord files of ``tf.Example``
 protos parsed against a fixed schema with per-column defaults
-(/root/reference/trainer.py:185-208, feature spec 120-163). This module
-closes that format gap WITHOUT TensorFlow: the TFRecord framing and the
-``Example`` protobuf wire format are tiny public specifications, so the
-codec here is ~150 lines of pure Python:
+(the reference's trainer.py:185-208, feature spec 120-163). The format is
+served by ``plans/jvm/TFRecordSource.scala``, a DataSource V2 provider
+registered as ``tfrecord_example`` in the engine's one JVM jar: batch
+read (one partition per shard file, gzip detected by magic bytes, CRCs
+checked, missing features read as 0 / 0.0 / "" / b""), append and
+overwrite writes (``option("compression", "gzip")``) published by one
+rename of a hidden staging directory, and a micro-batch stream whose
+offsets are the seen-file list ``{"files": [...]}``. Every face runs in
+the JVM: no Python worker, planner or streaming-source process.
+:func:`register_tfrecord` makes the short name resolve in a session.
 
-  * TFRecord framing: ``uint64 length | uint32 masked-crc32c(length) |
-    payload | uint32 masked-crc32c(payload)`` per record; masked crc =
-    ``rotr15(crc32c(x)) + 0xa282ead8``.
-  * ``tf.Example`` proto: ``Example{1: Features{1: map<string, Feature>}}``
-    with ``Feature`` a oneof of ``BytesList``/``FloatList``/``Int64List``
-    (fields 1/2/3), each a repeated ``value`` field (floats/ints packed).
-
-Spark integration is the public Python DataSource API
-(``pyspark.sql.datasource``): one :class:`InputPartition` per file (the
-reference's file-level parallel interleave, trainer.py:216-219, becomes
-Spark's task-per-file scheduling), Arrow-batched rows, a
-:class:`DataSourceWriter` for the sink side. Gzip is auto-detected by
-magic bytes on read and enabled with ``option("compression", "gzip")`` on
-write. Missing features decode to the schema-derived defaults
-(0 / 0.0 / "" — the ``FixedLenFeature(default_value=...)`` contract).
+This module keeps the pure-Python codec — TFRecord framing
+(``uint64 length | uint32 masked-crc32c(length) | payload | uint32
+masked-crc32c(payload)``, masked crc = ``rotr15(crc32c(x)) +
+0xa282ead8``) and the ``Example{1: Features{1: map<string, Feature>}}``
+proto with ``BytesList``/``FloatList``/``Int64List`` features — as the
+reference the tests check the JVM codec against, plus the two
+oracle-checked queries that round-trip a documents slice through the
+source.
 
 Scale note: per-file partitions are the right granularity for TFRecord
 (the format is not splittable mid-file); at 100 TB the file count, not
@@ -31,24 +30,10 @@ export (``_norm_*`` shards).
 
 from __future__ import annotations
 
-import glob as _glob
 import gzip
 import io
-import os
-import shutil
 import struct
-import uuid
 from typing import Iterator
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
-from pyspark.sql import types as T
 
 # ---------------------------------------------------------------- crc32c
 
@@ -248,254 +233,18 @@ def read_tfrecords(path: str) -> Iterator[bytes]:
         pos += 12 + length + 4
 
 
-# ------------------------------------------------------ Spark DataSource
-
-
-def _default_for(dt: T.DataType) -> object:
-    if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType)):
-        return 0
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return 0.0
-    if isinstance(dt, T.StringType):
-        return ""
-    if isinstance(dt, T.BinaryType):
-        return b""
-    return None
-
-
-def _convert(values: list[object], dt: T.DataType) -> object:
-    """Map decoded proto values onto one schema field."""
-    if isinstance(dt, T.ArrayType):
-        return [_convert([v], dt.elementType) for v in values]
-    if not values:
-        return _default_for(dt)
-    v = values[0]
-    if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType)):
-        return int(v)
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return float(v)
-    if isinstance(dt, T.StringType):
-        return v.decode() if isinstance(v, (bytes, bytearray)) else str(v)
-    if isinstance(dt, T.BinaryType):
-        return bytes(v)
-    return v
-
-
-def _decode_rows(path: str, schema: T.StructType) -> Iterator[tuple]:
-    """One shard's tf.Examples as row tuples in ``schema`` field order —
-    the decode loop shared by the batch and the stream reader."""
-    fields = schema.fields
-    for payload in read_tfrecords(path):
-        ex = decode_example(payload)
-        yield tuple(_convert(ex.get(f.name, []), f.dataType)
-                    for f in fields)
-
-
-def _shard_files(path: str) -> list:
-    """The shards at ``path``, sorted. For a directory: every regular
-    file whose name does not start with ``.`` or ``_`` (the hidden-file
-    rule of Hadoop and Spark's file index, which skips ``_SUCCESS`` and
-    the writer's staging directory); otherwise the glob's matching
-    regular files."""
-    if os.path.isdir(path):
-        return sorted(e.path for e in os.scandir(path)
-                      if e.is_file() and e.name[0] not in "._")
-    return sorted(p for p in _glob.glob(path) if os.path.isfile(p))
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class TFRecordReader(DataSourceReader):
-    def __init__(self, schema: T.StructType, options: dict):
-        self.schema = schema
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("tfrecord source requires a path")
-
-    def partitions(self):
-        paths = _shard_files(self.path)
-        if not paths:
-            raise FileNotFoundError(self.path)
-        return [_FilePartition(p) for p in paths]
-
-    def read(self, partition: _FilePartition):
-        return _decode_rows(partition.path, self.schema)
-
-
-class TFRecordWriter(DataSourceWriter):
-    """Publishes a write all at once. Tasks write their shards into a
-    hidden sibling staging directory, ``.<name>.<uuid>``, which readers
-    and stream listings skip; :meth:`commit` makes it the path with one
-    ``os.rename`` and :meth:`abort` removes it. A stream over the parent
-    directory therefore never lists a half-written write, and
-    ``overwrite`` replaces every old shard instead of only the ones a
-    new shard's name collides with. Shard names carry the write's id,
-    so an append into an existing path moves each shard in beside the
-    old ones."""
-
-    def __init__(self, schema: T.StructType, options: dict, overwrite: bool):
-        self.schema = schema
-        self.path = options.get("path")
-        self.compression = options.get("compression")
-        self.overwrite = overwrite
-        if not self.path:
-            raise ValueError("tfrecord sink requires a path")
-        self.job = uuid.uuid4().hex
-        parent, name = os.path.split(os.path.abspath(self.path))
-        self.staging = os.path.join(parent, f".{name}.{self.job}")
-
-    def write(self, iterator) -> WriterCommitMessage:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        os.makedirs(self.staging, exist_ok=True)
-        suffix = ".gz" if self.compression == "gzip" else ""
-        out = os.path.join(self.staging,
-                           f"part-{pid:05d}-{self.job}.tfrecord{suffix}")
-        fields = self.schema.fields
-
-        def payloads():
-            for row in iterator:
-                feats = {}
-                for f in fields:
-                    v = row[f.name]
-                    if v is None:
-                        continue
-                    if isinstance(f.dataType, T.ArrayType):
-                        elem = f.dataType.elementType
-                        feats[f.name] = [
-                            _to_proto_scalar(x, elem) for x in v]
-                    else:
-                        feats[f.name] = _to_proto_scalar(v, f.dataType)
-                yield encode_example(feats)
-
-        write_tfrecords(out, payloads(), self.compression)
-        return WriterCommitMessage()
-
-    def commit(self, messages) -> None:
-        # a write of zero partitions ran no task: publish an empty dir
-        os.makedirs(self.staging, exist_ok=True)
-        if not os.path.exists(self.path):
-            os.rename(self.staging, self.path)
-        elif self.overwrite:
-            old = f"{self.staging}.old"
-            os.rename(self.path, old)
-            os.rename(self.staging, self.path)
-            shutil.rmtree(old)
-        else:
-            for f in os.listdir(self.staging):
-                os.rename(os.path.join(self.staging, f),
-                          os.path.join(self.path, f))
-            os.rmdir(self.staging)
-
-    def abort(self, messages) -> None:
-        shutil.rmtree(self.staging, ignore_errors=True)
-
-
-def _to_proto_scalar(v: object, dt: T.DataType) -> object:
-    if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType)):
-        return int(v)
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return float(v)
-    if isinstance(dt, T.StringType):
-        return str(v)
-    if isinstance(dt, T.BinaryType):
-        return bytes(v)
-    raise TypeError(f"unsupported tfrecord type {dt}")
-
-
-def _offset_files(offset: dict) -> set:
-    """Committed file set of a stream offset. The only offset form is
-    ``{"files": [...]}``; an offset read back from a checkpoint in any
-    other form is refused, never guessed at."""
-    if not isinstance(offset, dict) or "files" not in offset:
-        raise ValueError(
-            f"tfrecord stream offset must have the form "
-            f'{{"files": [<path>, ...]}}, got {offset!r}')
-    return set(offset["files"])
-
-
-class TFRecordPartitionedStreamReader(DataSourceStreamReader):
-    """Streaming twin of :class:`TFRecordReader`: replays a directory of
-    tfrecord shards as micro-batches — the "stream training examples
-    from TFRecord shards" shape (the reference's input format, served
-    incrementally). Offsets carry the EXPLICIT seen-file list,
-    ``{"files": [...]}``, the same design as Spark's FileStreamSource
-    seen-files log: a batch picks up every listed file not in the
-    committed set, so a shard landing with a name that sorts before
-    already-committed files is still read. Each micro-batch plans ONE
-    :class:`InputPartition` PER NEW SHARD and decodes on the EXECUTORS
-    — the driver only lists filenames (``latestOffset``), so shard
-    payloads never visit it and a batch of K new shards reads K-wide.
-    ``partitions(start, end)`` is computed from the offsets alone (set
-    difference), never from a fresh listing, so a batch replays the
-    exact file set its offsets record (file contents are immutable).
-    Production note: a long-lived queue would compact the seen list
-    the way FileStreamSource's metadata log does."""
-
-    def __init__(self, schema: T.StructType, options: dict):
-        self._schema = schema
-        self._dir = options.get("path")
-        if not self._dir:
-            raise ValueError("tfrecord stream source requires a path")
-        self._seen: set[str] = set()
-
-    def initialOffset(self) -> dict:
-        return {"files": []}
-
-    def latestOffset(self) -> dict:
-        # never drop a file already offered (FileStreamSource's seen-files
-        # rule): a shrunken offset differs from the committed one, so a
-        # live query would plan a batch for it and write its offset into
-        # a checkpoint that may be gone with the source
-        self._seen.update(_shard_files(self._dir))
-        return {"files": sorted(self._seen)}
-
-    def partitions(self, start: dict, end: dict):
-        new = sorted(_offset_files(end) - _offset_files(start))
-        # an empty batch still needs >=1 partition in the v2 protocol
-        return [_FilePartition(p) for p in new] or [_FilePartition("")]
-
-    def read(self, partition: _FilePartition):
-        if not partition.path:
-            return iter(())
-        return _decode_rows(partition.path, self._schema)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-class TFRecordDataSource(DataSource):
-    """``spark.read.format("tfrecord_example").schema(s).load(path)`` /
-    ``df.write.format("tfrecord_example").save(path)`` /
-    ``spark.readStream.format("tfrecord_example").schema(s).load(dir)``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "tfrecord_example"
-
-    def schema(self):
-        raise ValueError(
-            "tfrecord_example requires an explicit schema "
-            "(the reference's parse spec, trainer.py:120-163)")
-
-    def reader(self, schema: T.StructType) -> TFRecordReader:
-        return TFRecordReader(schema, self.options)
-
-    def writer(self, schema: T.StructType,
-               overwrite: bool) -> TFRecordWriter:
-        return TFRecordWriter(schema, self.options, overwrite)
-
-    def streamReader(self, schema: T.StructType)\
-            -> TFRecordPartitionedStreamReader:
-        return TFRecordPartitionedStreamReader(schema, self.options)
+# ------------------------------------------------------ Spark registration
 
 
 def register_tfrecord(spark) -> None:
-    """Idempotently register the format with a session."""
-    spark.dataSource.register(TFRecordDataSource)
+    """Make ``tfrecord_example`` resolve for the calling thread's session
+    and its executors: ``ADD JAR`` of the engine's jar, whose service
+    file registers the source. Spark sets the jar's class loader on the
+    calling JVM thread only, so each Python thread that reads or writes
+    the format calls this first (a repeat took about 0.02 s on a 4-core
+    host)."""
+    from columnar_estimator_sample_spark.plans.stats import extension_jar
+    spark.sql(f"ADD JAR '{extension_jar()}'")
 
 
 # ------------------------------------------------- oracle-checked query
@@ -539,7 +288,7 @@ def _roundtrip_fingerprint(df: DataFrame) -> list:
 )
 def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 end-to-end: export a documents slice as gzipped TFRecord of
-    tf.Example, read it back through the DataSource, aggregate. Matching
+    tf.Example, read it back through the source, aggregate. Matching
     the parquet-side oracle certifies codec fidelity (framing CRCs, proto
     round trip, schema'd parse).
 
@@ -600,16 +349,17 @@ def q_tfrecord_stream_census(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """S2 meets §2.8: export a documents slice as gzipped TFRecord
     shards, then read them back THROUGH THE STREAMING SOURCE
-    (:class:`TFRecordPartitionedStreamReader` — executor-side shard
-    decode; drained availableNow through a checkpoint) and census per
+    (``TFRecordSource.scala``'s micro-batch stream — one partition per
+    new shard, decoded on the executors; drained availableNow through a
+    checkpoint) and census per
     language. The batch oracle over the parquet source certifies the
     whole incremental path: offset bookkeeping, shard replay,
     varint/CRC framing, proto decode.
 
     Scale: the shard queue is the training-data landing pattern — new
     shards picked up via the seen-file-list offsets, replayable between
-    offsets; see TFRecordPartitionedStreamReader for the seen-list
-    caveat."""
+    offsets. A long-lived queue would compact the seen list the way
+    FileStreamSource's metadata log does."""
     import tempfile
 
     from columnar_estimator_sample_spark.streaming.windows import (

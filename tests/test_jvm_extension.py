@@ -9,6 +9,9 @@ tables plans as BroadcastHashJoin with the rule on (size heuristic
 disabled, so only the rule can be responsible) and as SortMergeJoin with
 the same rows once `spark.sql.optimizer.excludedRules` turns it off; and
 a join the rule cannot count (`spark.range` frames) stays SortMergeJoin.
+
+The rule ships in the engine's one committed jar; two more tests pin that
+jar to the package's Scala sources (its manifest stamp, and a recompile).
 """
 
 from __future__ import annotations
@@ -70,35 +73,34 @@ for case, mk in (("STAR", star), ("RANGE", ranges)):
 """
 
 
-_JAR = os.path.join(REPO, "columnar_estimator_sample_spark", "plans",
-                    "jvm", "sparkgraft-ndv-ext.jar")
+sys.path.insert(0, os.path.join(REPO, "tools"))
+from build_jvm_extension import (  # noqa: E402
+    JAR as _JAR, compile_classes, jar_stamp, source_stamp,
+)
+
+
+def test_committed_jar_stamp_matches_scala_sources():
+    """The jar's manifest carries the digest of the Scala sources it was
+    built from: any edit to a ``.scala`` file under the package, without
+    a rerun of tools/build_jvm_extension.py, fails here."""
+    assert jar_stamp() == source_stamp(), (
+        "committed sparkgraft-ext.jar was built from other Scala sources "
+        "than the tree's — rerun tools/build_jvm_extension.py")
 
 
 def test_committed_jar_matches_committed_source():
     """The jar is a committed binary: prove it is exactly what
     tools/build_jvm_extension.py produces from the committed .scala
-    (scalac class output is deterministic for a fixed toolchain — the
-    one PySpark bundles — so a stale or tampered jar fails here)."""
+    files (scalac class output is deterministic for a fixed toolchain —
+    the one PySpark bundles — so a stale or tampered jar fails here)."""
     import hashlib
-    import subprocess
-    import sys as _sys
     import tempfile
     import zipfile
 
-    import pyspark
-
     assert os.path.exists(_JAR), \
         "extension jar missing (tools/build_jvm_extension.py)"
-    src = os.path.join(os.path.dirname(_JAR), "NdvCatalogExtension.scala")
-    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
-    java = os.path.join(os.environ.get("JAVA_HOME", ""), "bin", "java")
-    if not os.path.exists(java):
-        java = "java"
-    cp = ":".join(os.path.join(jars, j) for j in os.listdir(jars))
     with tempfile.TemporaryDirectory() as tmp:
-        r = subprocess.run(
-            [java, "-cp", cp, "scala.tools.nsc.Main", "-usejavacp",
-             "-d", tmp, src], capture_output=True, text=True, timeout=300)
+        r = compile_classes(tmp)
         assert r.returncode == 0, r.stderr[-2000:]
         built = {}
         for root, _, files in os.walk(tmp):
@@ -111,8 +113,8 @@ def test_committed_jar_matches_committed_source():
         jar_classes = {n: hashlib.sha256(z.read(n)).hexdigest()
                        for n in z.namelist() if n.endswith(".class")}
     assert built == jar_classes, (
-        "committed sparkgraft-ndv-ext.jar does not match a fresh compile "
-        "of NdvCatalogExtension.scala — rerun tools/build_jvm_extension.py")
+        "committed sparkgraft-ext.jar does not match a fresh compile "
+        "of the package's .scala files — rerun tools/build_jvm_extension.py")
 
 
 @pytest.fixture(scope="module")

@@ -2,15 +2,19 @@
 
 The reference reads gzipped TFRecord of tf.Example with a schema'd parse
 and per-column defaults (/root/reference/trainer.py:120-208); these tests
-pin the pure-Python codec against known wire bytes and the Spark
-DataSource end-to-end.
+pin the pure-Python reference codec against known wire bytes, the JVM
+``tfrecord_example`` source/sink (plans/jvm/TFRecordSource.scala) against
+that codec in both directions, and the source end-to-end through Spark.
 """
 
 from __future__ import annotations
 
 import glob
-import gzip
+import json
+import os
 import struct
+import subprocess
+import sys
 
 import pytest
 
@@ -91,7 +95,6 @@ class TestDataSource:
     def test_missing_feature_gets_default(self, spark, tmp_path):
         # write rows lacking a column the read schema declares -> defaults
         p = str(tmp_path / "defaults")
-        import os
         os.makedirs(p)
         write_tfrecords(
             os.path.join(p, "part-00000.tfrecord"),
@@ -118,7 +121,6 @@ class TestDataSource:
         assert got[3] == [3, 6]
 
     def test_partition_per_file(self, spark, tmp_path):
-        import os
         p = str(tmp_path / "many")
         os.makedirs(p)
         for i in range(4):
@@ -147,7 +149,6 @@ class TestDataSource:
     def test_failed_write_publishes_nothing(self, spark, tmp_path):
         """A write whose task raises leaves nothing at the path and no
         staging directory beside it."""
-        import os
 
         from pyspark.sql import functions as F
         register_tfrecord(spark)
@@ -159,10 +160,22 @@ class TestDataSource:
             df.write.format("tfrecord_example").mode("overwrite").save(out)
         assert os.listdir(tmp_path) == []
 
+    def test_failed_task_publishes_nothing(self, spark, tmp_path):
+        """A write whose task raises aborts: nothing at the path and no
+        staging directory beside it."""
+        from pyspark.sql import functions as F
+        register_tfrecord(spark)
+        out = str(tmp_path / "failed")
+        df = spark.range(10).repartition(2).select(
+            "id", F.when(F.col("id") == 7, F.raise_error(F.lit("boom")))
+            .otherwise(F.lit("ok")).alias("s"))
+        with pytest.raises(Exception, match="boom"):
+            df.write.format("tfrecord_example").mode("overwrite").save(out)
+        assert os.listdir(tmp_path) == []
+
     def test_directory_reads_every_visible_file(self, spark, tmp_path):
         """A directory read takes every file not hidden by a leading
         ``.`` or ``_``, not only the ``part-*`` ones."""
-        import os
         d = str(tmp_path / "mixed")
         os.makedirs(d)
         for name, ids, comp in (("part-00000-a.tfrecord.gz", range(10),
@@ -177,52 +190,181 @@ class TestDataSource:
         assert sorted(r["id"] for r in back.collect()) == list(range(20))
 
 
+class TestCrossCodec:
+    """The JVM codec against the pure-Python reference, both ways."""
+
+    ROWS = [
+        {"id": 1, "small": 7, "x": 0.5, "d": 0.1, "s": "héllo",
+         "b": b"\x00\xff", "ints": [3, -7, 1 << 40], "strs": ["a", ""],
+         "floats": [1.25, -2.0]},
+        {"id": -1, "small": -3, "x": -1.5, "d": 1e10, "s": "",
+         "b": b"", "ints": [], "strs": [], "floats": [0.1]},
+        # a null column is left out of the record: it reads as its default
+        {"id": -(1 << 63), "small": None, "x": None, "d": None, "s": None,
+         "b": None, "ints": None, "strs": None, "floats": None},
+    ]
+    DDL = ("id long, small int, x float, d double, s string, b binary, "
+           "ints array<long>, strs array<string>, floats array<float>")
+
+    @staticmethod
+    def _f32(v: float) -> float:
+        return struct.unpack("<f", struct.pack("<f", v))[0]
+
+    def test_jvm_shards_decode_with_reference_codec(self, spark, tmp_path):
+        """Plain and gzip shards of the JVM sink hold, record for record,
+        the bytes ``encode_example`` makes of the same rows, and decode
+        through ``read_tfrecords`` + ``decode_example`` to those rows."""
+        register_tfrecord(spark)
+        df = spark.createDataFrame(self.ROWS, self.DDL)
+        expected = sorted(
+            encode_example({k: v for k, v in r.items() if v is not None})
+            for r in self.ROWS)
+        for comp, suffix in ((None, ".tfrecord"), ("gzip", ".tfrecord.gz")):
+            out = str(tmp_path / f"jvm_{comp}")
+            w = df.repartition(2).write.format("tfrecord_example")
+            if comp:
+                w = w.option("compression", comp)
+            w.mode("overwrite").save(out)
+            shards = sorted(glob.glob(out + "/part-*"))
+            assert shards and all(p.endswith(suffix) for p in shards)
+            payloads = [p for f in shards for p in read_tfrecords(f)]
+            assert sorted(payloads) == expected, comp
+            got = {ex["id"][0]: ex for ex in map(decode_example, payloads)}
+            first = got[1]
+            assert first["small"] == [7] and first["x"] == [0.5]
+            assert first["d"] == [self._f32(0.1)]
+            assert first["s"] == ["héllo".encode()]
+            assert first["b"] == [b"\x00\xff"]
+            assert first["ints"] == [3, -7, 1 << 40]
+            assert first["strs"] == [b"a", b""]
+            assert first["floats"] == [1.25, -2.0]
+            assert got[-1]["ints"] == [] and got[-1]["s"] == [b""]
+            assert set(got[-(1 << 63)]) == {"id"}
+            if comp:
+                with open(shards[0], "rb") as f:
+                    assert f.read(2) == b"\x1f\x8b"
+
+    def test_reference_shards_read_by_jvm(self, spark, tmp_path):
+        """Shards ``write_tfrecords`` wrote (plain and gzip, in one
+        directory) read back through the JVM source as the same rows;
+        missing features read as their defaults."""
+        d = str(tmp_path / "ref")
+        os.makedirs(d)
+        records = [encode_example({k: v for k, v in r.items()
+                                   if v is not None}) for r in self.ROWS]
+        write_tfrecords(os.path.join(d, "a.tfrecord"), iter(records[:2]),
+                        None)
+        write_tfrecords(os.path.join(d, "b.tfrecord.gz"), iter(records[2:]),
+                        "gzip")
+        register_tfrecord(spark)
+        back = (spark.read.format("tfrecord_example")
+                .schema(self.DDL + ", absent long, absent_s string")
+                .load(d))
+        assert back.rdd.getNumPartitions() == 2
+        got = {r["id"]: r.asDict() for r in back.collect()}
+        assert got[1] == {
+            "id": 1, "small": 7, "x": 0.5, "d": self._f32(0.1),
+            "s": "héllo", "b": bytearray(b"\x00\xff"),
+            "ints": [3, -7, 1 << 40], "strs": ["a", ""],
+            "floats": [1.25, -2.0], "absent": 0, "absent_s": ""}
+        assert got[-1]["d"] == 1e10 and got[-1]["floats"] == [
+            self._f32(0.1)]
+        assert got[-1]["ints"] == [] and got[-1]["small"] == -3
+        assert got[-(1 << 63)] == {
+            "id": -(1 << 63), "small": 0, "x": 0.0, "d": 0.0, "s": "",
+            "b": bytearray(), "ints": [], "strs": [], "floats": [],
+            "absent": 0, "absent_s": ""}
+
+    def test_corrupt_crc_raises_in_jvm(self, spark, tmp_path):
+        d = str(tmp_path / "bad")
+        os.makedirs(d)
+        p = os.path.join(d, "part-00000.tfrecord")
+        write_tfrecords(p, iter([encode_example({"a": 1})]), None)
+        raw = bytearray(open(p, "rb").read())
+        raw[14] ^= 0xFF  # flip a payload byte
+        open(p, "wb").write(bytes(raw))
+        register_tfrecord(spark)
+        df = spark.read.format("tfrecord_example").schema("a long").load(d)
+        with pytest.raises(Exception, match="bad payload crc"):
+            df.collect()
+
+
 class TestTFRecordStreamSource:
-    def test_count_offsets_rejected(self, tmp_path):
+    @staticmethod
+    def _shards(d: str, ids) -> list:
+        os.makedirs(d, exist_ok=True)
+        paths = []
+        for i in ids:
+            p = os.path.join(d, f"part-{i:05d}.tfrecord")
+            write_tfrecords(p, iter([encode_example({"a": i})]), None)
+            paths.append(p)
+        return paths
+
+    def test_count_offsets_rejected(self, spark, tmp_path):
         """Offsets are explicit seen-file lists, {"files": [...]}. An
         offset in the old {"files_seen": n} count form can only come from
-        a checkpoint on disk; the reader refuses it with a ValueError
-        that names the expected form instead of replaying a guess."""
-        import os
+        a checkpoint on disk; a restart refuses it, as the start of the
+        next batch (batch 0 committed) or as the end of the batch it
+        replays (batch 0 not committed), with an error that names the
+        expected form instead of replaying a guess."""
+        from columnar_estimator_sample_spark.streaming.windows import drain
 
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        from columnar_estimator_sample_spark.sources import tfrecord as tfr
-
+        register_tfrecord(spark)
         d = str(tmp_path / "shards")
-        os.makedirs(d)
-        write_tfrecords(os.path.join(d, "part-00000.tfrecord"),
-                        iter([encode_example({"a": 0})]), None)
-        schema = StructType([StructField("a", LongType())])
-        listed = {"files": [os.path.join(d, "part-00000.tfrecord")]}
-        count = {"files_seen": 1}
-        r = tfr.TFRecordPartitionedStreamReader(schema, {"path": d})
-        calls = [lambda: r.partitions(count, listed),
-                 lambda: r.partitions({"files": []}, count)]
-        for call in calls:
-            with pytest.raises(ValueError, match='"files"'):
-                call()
+        self._shards(d, [0])
+        for committed in (True, False):
+            ckpt = str(tmp_path / f"ckpt_{committed}")
 
-    def test_latest_offset_never_shrinks(self, tmp_path):
+            def run():
+                stream = (spark.readStream.format("tfrecord_example")
+                          .schema("a long").option("path", d).load())
+                drain(stream.writeStream.format("parquet")
+                      .option("path", str(tmp_path / f"out_{committed}")),
+                      ckpt)
+
+            run()
+            offsets = os.path.join(ckpt, "offsets", "0")
+            lines = open(offsets).read().splitlines()
+            assert json.loads(lines[-1]) == {
+                "files": [os.path.join(d, "part-00000.tfrecord")]}
+            open(offsets, "w").write(
+                "\n".join(lines[:-1] + ['{"files_seen":1}']))
+            if not committed:
+                os.remove(os.path.join(ckpt, "commits", "0"))
+            with pytest.raises(Exception, match=r'\{"files": \['):
+                run()
+
+    def test_latest_offset_never_shrinks(self, spark, tmp_path):
         """A shard deleted after it was offered stays in the offset:
         a shrunken offset would make a live query plan a batch (and
-        write its offset) for a source that is gone."""
-        import os
-
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        from columnar_estimator_sample_spark.sources import tfrecord as tfr
-
+        write its offset) for a source that is gone. Driven through a
+        live query: after the delete and one more shard, the last batch
+        ends at all three files and read only the new one."""
+        register_tfrecord(spark)
         d = str(tmp_path / "shards")
-        os.makedirs(d)
-        paths = [os.path.join(d, f"part-{i:05d}.tfrecord") for i in (0, 1)]
-        for i, p in enumerate(paths):
-            write_tfrecords(p, iter([encode_example({"a": i})]), None)
-        schema = StructType([StructField("a", LongType())])
-        r = tfr.TFRecordPartitionedStreamReader(schema, {"path": d})
-        assert r.latestOffset() == {"files": paths}
-        os.remove(paths[0])
-        assert r.latestOffset() == {"files": paths}
+        paths = self._shards(d, [0, 1])
+        stream = (spark.readStream.format("tfrecord_example")
+                  .schema("a long").option("path", d).load())
+        q = (stream.writeStream.format("memory")
+             .queryName("tfrecord_never_shrinks")
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .trigger(processingTime="20 milliseconds").start())
+        try:
+            q.processAllAvailable()
+            os.remove(paths[0])
+            q.processAllAvailable()
+            paths += self._shards(d, [2])
+            q.processAllAvailable()
+            q.processAllAvailable()
+            log = tmp_path / "ckpt" / "offsets"
+            last = max((f for f in os.listdir(log) if f.isdigit()), key=int)
+            end = (log / last).read_text().splitlines()[-1]
+            assert json.loads(end) == {"files": paths}
+            got = sorted(r.a for r in
+                         spark.table("tfrecord_never_shrinks").collect())
+            assert got == [0, 1, 2]
+        finally:
+            q.stop()
 
     def test_incremental_shards_across_restart(self, spark, sf_dir,
                                                tmp_path):
@@ -272,7 +414,6 @@ class TestTFRecordStreamSource:
         # already-committed part-* shards on purpose: the seen-file-list
         # offsets must pick up late arrivals regardless of sort order
         # (the old count-based offsets silently dropped these).
-        import os
         tmp2 = str(tmp_path / "extra")
         (second.repartition(2).write.format("tfrecord_example")
          .mode("overwrite").save(tmp2))
@@ -295,7 +436,6 @@ class TestLiveLanding:
 
     @staticmethod
     def _segment(spark, root):
-        import os
         os.makedirs(os.path.join(root, "in"))
         return (spark.readStream.format("tfrecord_example")
                 .schema("id long")
@@ -306,7 +446,6 @@ class TestLiveLanding:
     def _round(spark, root, stream, k):
         """Publish batch ``k`` (ids 100k .. 100k+99), land it and return
         the landed epochs with their ids."""
-        import os
 
         from columnar_estimator_sample_spark.streaming.windows import (
             foreach_batch_parquet_sink,
@@ -376,3 +515,96 @@ class TestLiveLanding:
         assert not first.isActive
         assert len(spark.streams.active) == 1
         reset_handles()
+
+
+_PROC = "/proc"
+
+
+def _descendant_cmdlines(pid: int) -> list:
+    """Command lines of every live descendant of ``pid``."""
+    children: dict = {}
+    for entry in os.listdir(_PROC):
+        if not entry.isdigit():
+            continue
+        try:
+            stat = open(f"{_PROC}/{entry}/stat").read()
+        except OSError:
+            continue
+        ppid = int(stat[stat.rindex(")") + 2:].split()[1])
+        children.setdefault(ppid, []).append(int(entry))
+    out, todo = [], list(children.get(pid, []))
+    while todo:
+        p = todo.pop()
+        todo += children.get(p, [])
+        try:
+            out.append(open(f"{_PROC}/{p}/cmdline", "rb").read()
+                       .replace(b"\0", b" ").decode(errors="replace"))
+        except OSError:
+            pass
+    return out
+
+
+class TestJvmOnly:
+    """The source runs in the JVM alone."""
+
+    @pytest.mark.skipif(not os.path.isdir(f"{_PROC}/self"),
+                        reason="needs /proc")
+    def test_live_landing_starts_no_python_source_runner(self, spark,
+                                                         tmp_path):
+        """While a live ``tfrecord_example`` landing runs, no process
+        under the JVM is a Python streaming-source runner (which a
+        Python DataSource stream starts for every query)."""
+        from columnar_estimator_sample_spark.sources.tables import (
+            reset_handles,
+        )
+        register_tfrecord(spark)
+        reset_handles()
+        root = str(tmp_path)
+        stream = TestLiveLanding._segment(spark, root)
+        assert TestLiveLanding._round(spark, root, stream, 0) == {
+            0: list(range(100))}
+        [live] = spark.streams.active
+        jvm = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+        try:
+            assert live.isActive
+            cmdlines = _descendant_cmdlines(int(jvm))
+            assert not [c for c in cmdlines
+                        if "python_streaming_source_runner" in c], cmdlines
+        finally:
+            reset_handles()
+
+    def test_plain_session_second_thread_reads(self, tmp_path):
+        """A plain ``SparkSession.builder.getOrCreate()`` session (no
+        ``get_spark``) resolves ``tfrecord_example`` on a second Python
+        thread once that thread calls ``register_tfrecord``."""
+        probe = r"""
+import sys, threading
+sys.path.insert(0, %(repo)r)
+from pyspark.sql import SparkSession
+from columnar_estimator_sample_spark.sources.tfrecord import (
+    register_tfrecord,
+)
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+register_tfrecord(spark)
+spark.range(50).write.format("tfrecord_example").mode("append").save(%(out)r)
+got = []
+
+def read():
+    register_tfrecord(spark)
+    got.append(spark.read.format("tfrecord_example").schema("id long")
+               .load(%(out)r).groupBy().sum("id").first()[0])
+
+t = threading.Thread(target=read)
+t.start()
+t.join()
+print("SUM", got)
+"""
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        r = subprocess.run(
+            [sys.executable, "-c",
+             probe % {"repo": repo, "out": str(tmp_path / "t")}],
+            capture_output=True, text=True, timeout=300)
+        assert r.returncode == 0, r.stderr[-2000:]
+        assert "SUM [1225]" in r.stdout, (r.stdout, r.stderr[-2000:])
